@@ -720,6 +720,7 @@ def recursive_enrich(
     cci_ns: Sequence[int] = (),
     engine: str = "sequential",
     cuts: "list[float] | None" = None,
+    closed_form: bool = False,
 ) -> DataFrame:
     """ALL recursive indicators in ONE applyInPandas pass — one shuffle on
     the symbol key instead of one per indicator family. This is the form
@@ -736,22 +737,33 @@ def recursive_enrich(
     sliding-window pass — measured 17s vs <1s at 671k rows. The standalone
     ``cci()`` expression form remains for à-la-carte use.
 
+    ``closed_form=True`` adds the closed-form block (``CLOSED_FORM_COLS``
+    via ``_closed_form_pandas``; needs high/low/volume) to the same pass,
+    so a caller wanting both families crosses into Python once instead of
+    shuffling, sorting and shipping the frame twice. The block then sees
+    the whole sorted series, so its rolling sums do not depend on where a
+    bucket starts or on the partition count.
+
     ``engine``: 'sequential' (default) = the bit-exact per-key pandas
     fold described above, parallelism |keys|; 'scan' = the block-parallel
-    affine-scan twin (``windows.recursive_scan_enrich`` + an
-    overlap-bucket CCI pass), parallelism rows/buckets, numerically
-    equivalent at rtol ~1e-12 but NOT bit-identical; 'auto' = one
-    keys-only aggregate probe, then 'scan' iff |keys| ≤ cores/4 AND the
-    deepest key exceeds the measured crossover (SCAN_MIN_ROWS_PER_KEY —
-    at the reference's 4x168k shape the sequential fold WINS 2.3 s vs
-    5.2 s, so few keys alone is not enough; at 1x3M the scan wins 4-5x).
-    Oracle-checked entries must pass 'sequential' explicitly.
+    affine-scan twin (``windows.recursive_scan_enrich``, with CCI and the
+    closed-form block in one overlap-bucket pass), parallelism
+    rows/buckets, numerically equivalent at rtol ~1e-12 but NOT
+    bit-identical; 'auto' = one keys-only aggregate probe, then 'scan' iff
+    |keys| ≤ cores/4 AND the deepest key exceeds the measured crossover
+    (SCAN_MIN_ROWS_PER_KEY — at the reference's 4x168k shape the
+    sequential fold WINS 2.3 s vs 5.2 s, so few keys alone is not enough;
+    at 1x3M the scan wins 4-5x). Oracle-checked entries must pass
+    'sequential' explicitly.
     ``cuts``: precomputed order cut points threaded to the scan passes
     (same contract as ``rolling_apply_parallel``; without them each
     linear_recurrence sketches its own, re-executing upstream lineage)."""
     import numpy as np
 
     new_cols: dict[str, T.DataType] = {}
+    if closed_form:
+        for c in CLOSED_FORM_COLS:
+            new_cols[c] = T.DoubleType()
     for n in ema_spans:
         new_cols[f"ema{n}"] = T.DoubleType()
     for a, b in macd_pairs:
@@ -791,15 +803,25 @@ def recursive_enrich(
         )
 
         d = df
-        if has_ohlc and cci_ns:
-            # CCI is bounded-lookback (not recursive): the overlap-bucket
-            # pandas pass keeps within-key parallelism. Runs FIRST, on the
-            # raw frame, so its cut-point sketch stays cheap.
+        cci = tuple(cci_ns) if has_ohlc else ()
+        bounded = [f"cci{n}" for n in cci]
+        lookbacks = [n - 1 for n in cci]
+        if closed_form:
+            bounded += CLOSED_FORM_COLS
+            lookbacks.append(CLOSED_FORM_LOOKBACK)
+        if bounded:
+            # CCI and the closed-form block are bounded-lookback (not
+            # recursive): one overlap-bucket pandas pass keeps within-key
+            # parallelism. Runs FIRST, on the raw frame, so its cut-point
+            # sketch stays cheap.
+            def bounded_block(pdf: pd.DataFrame) -> pd.DataFrame:
+                if closed_form:
+                    pdf = _closed_form_pandas(pdf)
+                return _cci_pandas_block(pdf, cci, col)
+
             d = rolling_apply_parallel(
-                d,
-                lambda pdf: _cci_pandas_block(pdf, cci_ns, col),
-                {f"cci{n}": T.DoubleType() for n in cci_ns},
-                lookback=max(cci_ns) - 1,
+                d, bounded_block, {c: T.DoubleType() for c in bounded},
+                lookback=max(lookbacks),
                 order_by=order_by, partition_by=keys, cuts=cuts,
             )
         d = recursive_scan_enrich(
@@ -815,6 +837,8 @@ def recursive_enrich(
         )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        if closed_form:
+            pdf = _closed_form_pandas(pdf)
         x = pdf[col]
         emas: dict[int, pd.Series] = {}
 
@@ -876,9 +900,9 @@ def recursive_enrich(
 
 
 # ---------------------------------------------------------------------------
-# Composite enrichment: the reference's full indicator surface in two passes
-# (one window projection + one applyInPandas), instead of its 11 sequential
-# compute-aside-join stages (G_2_rf_nordd_fe.py:47-313).
+# Composite enrichment: the reference's full indicator surface in one
+# applyInPandas pass (closed-form block + recursive family + CCI), instead of
+# its 11 sequential compute-aside-join stages (G_2_rf_nordd_fe.py:47-313).
 # ---------------------------------------------------------------------------
 
 #: columns produced by the closed-form block (both engines)
@@ -975,21 +999,25 @@ def enrich_ohlcv(
 ) -> DataFrame:
     """Compute the reference schema's indicator families natively from OHLCV.
 
+    engine='parallel' (default): the closed-form block runs as vectorized
+    pandas (``_closed_form_pandas``) inside the ``recursive_enrich`` pass
+    that also computes the recursive family (EMA/MACD/RSI/KAMA/ADX) and
+    CCI — one shuffle and one Python crossing for the whole surface. Under
+    the sequential recursive engine the block sees each key's whole sorted
+    series; under the scan engine it joins the CCI overlap-bucket pass
+    (exact: dependence bounded by CLOSED_FORM_LOOKBACK), parallel WITHIN a
+    key.
     engine='expr': closed-form indicators as JVM window expressions sharing
-    one shuffle per partition key — fully parallel across MANY keys, but a
-    single key's history runs in one task.
-    engine='parallel' (default): closed-form block as a vectorized pandas
-    pass over overlap-buckets (``windows.rolling_apply_parallel``) — exact
-    (dependence bounded by CLOSED_FORM_LOOKBACK) and parallel WITHIN a key,
-    the right shape for few-symbols-deep-history data (the reference's is
-    ONE symbol).
-    The recursive family (EMA/MACD/RSI/KAMA/ADX + vectorized CCI) runs
-    through ``recursive_enrich`` with ``recursive_engine`` ('auto' by
-    default: the block-parallel affine scan when |keys| ≪ cores — the
-    reference's 4-symbol shape, where the sequential pandas fold
-    serializes — else the bit-exact sequential pass)."""
+    one shuffle per partition key, then the ``recursive_enrich`` pass
+    without the block — the JVM reference twin the parity tests compare
+    against.
+    ``recursive_engine`` ('auto' by default) picks the recursive pass's
+    engine: the block-parallel scan only when there are few keys (≤ cores/4)
+    AND the deepest key passes SCAN_MIN_ROWS_PER_KEY; shallower series —
+    the reference's 4-symbol shape included — take the bit-exact sequential
+    fold. ``cuts`` are threaded to the scan engine's bucketed passes."""
+    d = df
     if engine == "expr":
-        d = df
         for n in (5, 10, 15, 20):
             d = sma(d, n, partition_by, order_by)
         for n in (5, 10, 20):
@@ -1005,22 +1033,12 @@ def enrich_ohlcv(
         d = atr_sma(d, 14, partition_by, order_by)
         d = mfi(d, 14, partition_by, order_by)
         d = ultosc(d, 7, 14, 28, partition_by, order_by)
-    elif engine == "parallel":
-        from big_data_analysis_for_stock_market_data_spark.operators.windows import (
-            rolling_apply_parallel,
-        )
-
-        d = rolling_apply_parallel(
-            df, _closed_form_pandas,
-            {c: T.DoubleType() for c in CLOSED_FORM_COLS},
-            lookback=CLOSED_FORM_LOOKBACK,
-            order_by=order_by, partition_by=partition_by, cuts=cuts,
-        )
-    else:
+    elif engine != "parallel":
         raise ValueError(f"engine must be 'expr' or 'parallel', got {engine!r}")
     # single applyInPandas pass for the recursive family + CCI (CCI is
     # closed-form but ~10x cheaper vectorized than as collect_list frames)
-    d = recursive_enrich(
+    # + the pandas closed-form block under engine='parallel'
+    return recursive_enrich(
         d, partition_by, order_by,
         ema_spans=(5, 10, 15, 20),
         macd_pairs=((5, 10), (5, 20), (10, 20), (15, 20), (12, 26)),
@@ -1032,8 +1050,8 @@ def enrich_ohlcv(
         cci_ns=(5, 10, 15),
         engine=recursive_engine,
         cuts=cuts,
+        closed_form=engine == "parallel",
     )
-    return d
 
 
 # ---------------------------------------------------------------------------

@@ -61,6 +61,23 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+#: ceiling of the local-mode driver heap, and its value when the host's
+#: physical memory cannot be read
+DRIVER_MEMORY_CAP_GB = 24
+
+
+def default_driver_memory() -> str:
+    """Local-mode driver heap: 60% of physical memory, capped at
+    DRIVER_MEMORY_CAP_GB. The rest is left to the JVM's off-heap and the
+    Python workers (one per core), so a heap sized for a larger host
+    cannot push this one into swap or the OOM killer."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return f"{DRIVER_MEMORY_CAP_GB}g"
+    return f"{max(1, min(DRIVER_MEMORY_CAP_GB, int(phys * 0.6) >> 30))}g"
+
+
 def get_session(
     app_name: str = "big_data_analysis_for_stock_market_data_spark",
     master: str | None = None,
@@ -94,7 +111,7 @@ def get_session(
         # default heap is 1g — 32 concurrent tasks starve execution memory
         # (observed UNABLE_TO_ACQUIRE_MEMORY). Only effective at JVM launch;
         # a cluster deploy sets executor memory through spark-submit.
-        conf.setdefault("spark.driver.memory", "24g")
+        conf.setdefault("spark.driver.memory", default_driver_memory())
     if legacy_time_parser:
         conf["spark.sql.legacy.timeParserPolicy"] = "LEGACY"
     if configs:

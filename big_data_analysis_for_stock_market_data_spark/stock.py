@@ -236,8 +236,8 @@ def feature_hints(
     order_by: str = "date",
 ) -> dict:
     """Precompute ``feature_frame``'s control-plane inputs — the quantile
-    cut sketch for the parallel rolling pass and the keyspace probe that
-    picks the recursive-indicator engine — as a reusable hint dict.
+    cut sketch for the scan engine's bucketed passes and the keyspace probe
+    that picks the recursive-indicator engine — as a reusable hint dict.
     Both are one small Spark job each; a session that runs the pipeline
     repeatedly over the same bar universe should compute them once and
     pass ``feature_frame(bars, **hints)`` (the r06 bench attribution:
@@ -261,31 +261,25 @@ def feature_frame(
     recursive_engine: str | None = None,
 ) -> DataFrame:
     """Full reference feature pipeline, engine-style: native indicators
-    (closed-form window pass + one applyInPandas recursive pass), row-wise
-    derived features, day-grain features, and the buy/sell label — the
-    surface ``G_2_rf_nordd_fe.py`` built in 11 join stages.
+    (one applyInPandas pass running the closed-form block, CCI and the
+    recursive family), row-wise derived features, day-grain features, and
+    the buy/sell label — the surface ``G_2_rf_nordd_fe.py`` built in 11
+    join stages.
 
     Stage order is a measured plan choice: the day-grain windows and the
     label depend only on RAW columns, so they run FIRST, on the narrow
     6-column bars — their sorts move ~7x less data than on the ~45-column
-    enriched frame, and the indicator passes' repartition then reuses the
+    enriched frame, and the indicator pass's repartition then reuses the
     window exchange's clustering instead of re-shuffling the full enriched
     frame (was: windows after enrichment = +25 s of the 43 s pipeline at
     the 671k-row reference scale)."""
-    # Bucket cut points for the parallel rolling pass, sketched on the RAW
-    # bars: `date` exists unchanged here, and the pruned raw-scan lineage
-    # is far cheaper than re-executing daily-window + label stages (the
-    # sketch inside rolling_apply_parallel would otherwise re-run them).
-    # Callers that invoke the pipeline repeatedly over the same universe
-    # should precompute both hints once via ``feature_hints`` and pass
-    # them in — each None below costs one control-plane job per call.
-    if cuts is None:
-        n = win_ops.shuffle_partitions(df)
-        cuts = win_ops.compute_order_cuts(df, "date", n)
+    # Both hints are probed on the RAW bars (pruned scan), not the
+    # enriched frame — probing after daily+label would re-execute those
+    # stages once. Callers that invoke the pipeline repeatedly over the
+    # same universe should precompute them once via ``feature_hints`` and
+    # pass them in — each None below costs one control-plane job per call.
     if recursive_engine is None:
-        # Engine probe on the RAW bars (pruned scan), not the enriched
-        # frame — probing after daily+label would re-execute those stages
-        # once. Policy: scan iff few symbols AND deep series (indicators.
+        # Policy: scan iff few symbols AND deep series (indicators.
         # SCAN_MIN_ROWS_PER_KEY crossover); the 4x168k reference shape
         # stays on the bit-exact sequential fold, which measured FASTER.
         recursive_engine = (
@@ -293,6 +287,10 @@ def feature_frame(
             if ind._keyspace_is_degenerate(df, ["symbol"])
             else "sequential"
         )
+    if cuts is None and recursive_engine != "sequential":
+        # bucket cut points, only the scan engine's bucketed passes use them
+        n = win_ops.shuffle_partitions(df)
+        cuts = win_ops.compute_order_cuts(df, "date", n)
     d = daily_features(df, fused=fused)
     d = win_ops.label_buy_sell(
         d, value_col="high", order_by="date", partition_by="symbol",

@@ -372,7 +372,9 @@ def test_resample_ohlc_weekly(spark):
 def test_recursive_enrich_scan_engine_parity(spark):
     # The block-parallel scan engine must match the bit-exact sequential
     # fold at rtol (re-associated float products) with IDENTICAL NaN
-    # masks — including ADX's NaN-carry rows and CCI's md=0 rows.
+    # masks — including ADX's NaN-carry rows and CCI's md=0 rows. The
+    # closed-form block rides along: whole series under 'sequential',
+    # overlap buckets (shared with CCI) under 'scan'.
     import numpy as np
 
     from big_data_analysis_for_stock_market_data_spark import stock
@@ -385,7 +387,7 @@ def test_recursive_enrich_scan_engine_parity(spark):
         partition_by="symbol", order_by="date",
         ema_spans=(5, 10), macd_pairs=((12, 26),), rsi_ns=(14,),
         kama_ns=(10,), adx_ns=(5, 14), apo_pairs=((12, 26),),
-        ppo_pairs=((12, 26),), cci_ns=(5, 15),
+        ppo_pairs=((12, 26),), cci_ns=(5, 15), closed_form=True,
     )
     seq = ind.recursive_enrich(bars, engine="sequential", **kw) \
         .orderBy("symbol", "date").toPandas()
@@ -393,7 +395,8 @@ def test_recursive_enrich_scan_engine_parity(spark):
         .orderBy("symbol", "date").toPandas()
     assert list(seq.columns) == list(scan.columns)
     for c in ["ema5", "ema10", "macd1226", "apo1226", "ppo1226", "rsi14",
-              "kama10", "adx5", "adx14", "cci5", "cci15"]:
+              "kama10", "adx5", "adx14", "cci5", "cci15",
+              *ind.CLOSED_FORM_COLS]:
         a = seq[c].to_numpy(dtype="float64")
         b = scan[c].to_numpy(dtype="float64")
         na, nb = np.isnan(a), np.isnan(b)

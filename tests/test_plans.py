@@ -181,15 +181,21 @@ def test_simhash_banded_join_not_cartesian(spark):
 
 
 def test_stock_feature_frame_shuffle_budget(spark):
-    # The full FE pipeline earns exactly 4 exchanges (fixture prefix sum,
-    # daily/label windows, bucketed closed-form pass, recursive per-key
-    # pass); a regression that re-shuffles the wide enriched frame shows
-    # up here before it shows up in BENCH
+    # The full FE pipeline earns exactly 2 exchanges (fixture prefix sum,
+    # daily/label windows) and ONE Python crossing: the per-key indicator
+    # pass runs the closed-form block, CCI and the recursive family and
+    # reuses the window exchange's clustering. A regression that
+    # re-shuffles the wide enriched frame, or splits the indicator pass
+    # into two crossings again, shows up here before it shows up in BENCH
+    import re
+
     from big_data_analysis_for_stock_market_data_spark import stock
 
     bars = stock.make_stock_fixture(spark, n_rows=4_000, n_symbols=2)
     full = stock.feature_frame(bars)
-    assert P.count_shuffles(full) <= 4
+    assert P.count_shuffles(full) <= 2
+    plan = P.explain_str(full, "simple")
+    assert len(re.findall(r"\bFlatMapGroupsInPandas\b", plan)) == 1
 
 
 def test_chunking_is_shuffle_free_flatmap(spark):

@@ -1,10 +1,14 @@
 """Reference-parity tests for the stock pipeline (SURVEY.md §5): fixture
 invariants, fused == join-back (Q4), label modes (Q1), end-to-end ML."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from big_data_analysis_for_stock_market_data_spark import stock
+from big_data_analysis_for_stock_market_data_spark.operators import (
+    indicators as ind,
+)
 
 
 @pytest.fixture(scope="module")
@@ -89,3 +93,32 @@ def test_stock_pipeline_end_to_end(bars):
         bars, model="svc", transform="pca", pca_k=4, max_iter=5
     )
     assert 0.0 <= fit_pca.metrics["areaUnderROC"] <= 1.0
+
+
+def test_closed_form_features_independent_of_partition_count(spark, bars):
+    # Results must not depend on the core count: the closed-form block
+    # (pandas rolling sums, whose last bits depend on where a series
+    # starts) sees each symbol's whole history whatever
+    # spark.sql.shuffle.partitions is, so its values are bit-identical.
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    frames = []
+    try:
+        for n in ("2", "4"):
+            spark.conf.set(key, n)
+            frames.append(
+                stock.feature_frame(bars)
+                .select("symbol", "date", *ind.CLOSED_FORM_COLS)
+                .orderBy("symbol", "date")
+                .toPandas()
+            )
+    finally:
+        spark.conf.set(key, before)
+    a, b = frames
+    assert len(a) == len(b) == bars.count()
+    differ = [
+        c for c in ind.CLOSED_FORM_COLS
+        if not np.array_equal(a[c].to_numpy(dtype="float64"),
+                              b[c].to_numpy(dtype="float64"), equal_nan=True)
+    ]
+    assert differ == []

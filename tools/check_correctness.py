@@ -135,14 +135,23 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    from big_data_analysis_for_stock_market_data_spark.session import (
+        default_driver_memory,
+        default_parallelism,
+    )
+
     # Vanilla session on purpose: the driver's harness does NOT use the
     # engine's session.py defaults, so queries must be self-sufficient
     # (see VERDICT r01: nanosAsLong dependency broke 17 oracle rows).
+    # one task slot and one shuffle partition per host core
+    # (SPARK_GRAFT_CPUS, else the core count) and a heap sized from the
+    # host's memory, so the sweep fits any host
+    cpus = default_parallelism()
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("check_correctness")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
 

@@ -7,9 +7,11 @@ Times, cumulatively and per-stage, at the reference's 671,024-row scale:
 
 1. fixture     — make_stock_fixture materialized
 2. daily+label — day-grain windows + buy/sell label on the raw bars
-3. closed-form — enrich_ohlcv's window/parallel-rolling indicator pass
-4. recursive   — the per-symbol applyInPandas recurrence pass
-5. rowwise     — derived row-wise features (full feature_frame)
+3. closed-form — the closed-form block as a standalone overlap-bucket pass
+4. full        — the full feature_frame: its one per-symbol applyInPandas
+                 pass runs the closed-form block again together with the
+                 recurrences, then the row-wise features (read stages
+                 3 + 4 together)
 
 Each stage is measured as (cumulative pipeline up to stage k) minus the
 previous cumulative — lazy evaluation makes isolated stage timing
@@ -57,8 +59,7 @@ def main() -> None:
         )
 
     def closed_form(d):
-        # the 'parallel'-engine closed-form block alone (enrich_ohlcv's
-        # first half), so the recursive pass lands in the next stage
+        # the closed-form block alone, as a standalone bucketed pass
         from pyspark.sql import types as T
 
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -153,10 +153,8 @@ def bench_stock_ml(spark, timings: dict[str, float],
     # transient host noise); each FE run materializes a fresh cache.
     fe_runs, rf_runs = [], []
     feats = None
-    # Hints are computed ONCE (inside run 1's timing) and reused in run 2,
-    # modeling a session that amortizes the control-plane jobs (cut sketch
-    # + keyspace probe) over repeated pipeline invocations — the r06 bench
-    # regression was exactly these two jobs re-running per invocation.
+    # Hints (one cut-sketch job) are computed ONCE, inside run 1's timing,
+    # and passed to both runs; feature_frame itself submits no job.
     hints = None
     for _ in range(2):
         if feats is not None:

@@ -385,7 +385,6 @@ def holt_linear(
     partition_by="symbol",
     order_by="date",
     col="close",
-    engine: str = "sequential",
 ) -> DataFrame:
     """Holt's linear-trend double exponential smoothing — the TWO-state
     recurrence (level, trend) the single-state EMA family can't express:
@@ -398,23 +397,10 @@ def holt_linear(
     evaluates ``a*y + oma*(l + b)`` and ``be*(l' - l) + omb*b`` with
     oma = 1-a, omb = 1-be computed once — mirror the same expression
     order in any recursive-CTE twin for bit-exact comparison (the
-    ind_parabolic_sar pattern). ``engine='sequential'`` (default) is the
-    bit-exact per-key applyInPandas fold; ``engine='scan'`` routes to
-    ``windows.holt_scan``, the 2x2 MATRIX-affine block scan whose
-    parallelism is rows/buckets instead of |keys| (numerically
-    equivalent, rel err ~1e-12 — test-pinned — not bit-identical), for
-    the few-keys/long-series shape."""
-    if engine not in ("sequential", "scan"):
-        raise ValueError("engine must be 'sequential' or 'scan'")
-    if engine == "scan":
-        from big_data_analysis_for_stock_market_data_spark.operators.windows import (
-            holt_scan,
-        )
-
-        return holt_scan(
-            df, alpha=alpha, beta=beta, partition_by=partition_by,
-            order_by=order_by, col=col,
-        )
+    ind_parabolic_sar pattern). This is the bit-exact per-key
+    applyInPandas fold; ``windows.holt_scan`` is the standalone 2x2
+    matrix-affine block scan of the same recurrence (numerically
+    equivalent, rel err ~1e-12, not bit-identical)."""
     oma = 1.0 - alpha
     omb = 1.0 - beta
 
@@ -622,8 +608,8 @@ def adx(df: DataFrame, n: int = 14, partition_by="symbol", order_by="date",
 
 
 def _cci_pandas_block(pdf: pd.DataFrame, ns: Sequence[int], col: str):
-    """Vectorized CCI over a timestamp-sorted pandas frame (shared by the
-    sequential engine and the scan engine's bounded-lookback pass)."""
+    """Vectorized CCI over a timestamp-sorted pandas frame (the CCI part
+    of ``recursive_enrich``'s per-key pass)."""
     import numpy as np
 
     for n in ns:
@@ -672,39 +658,6 @@ def _cci_pandas_block(pdf: pd.DataFrame, ns: Sequence[int], col: str):
     return pdf
 
 
-#: measured crossover (local[32], 27-recurrence composite): at 168k
-#: rows/key the sequential pandas fold wins (2.3 s vs 5.2 s warm); at 3M
-#: rows/key the scan wins 4-5x warm (8-12 s vs 30-43 s) and keeps
-#: widening with depth (the fold is a single task per key). The scan
-#: additionally pays a one-time JIT/codegen warm-up (~2 min cold for the
-#: full composite) that only amortizes over a session's repeated runs —
-#: hence the deliberately conservative threshold.
-SCAN_MIN_ROWS_PER_KEY = 2_000_000
-
-
-def _keyspace_is_degenerate(df: DataFrame, keys: Sequence[str]) -> bool:
-    """True when the block-parallel scan beats the sequential per-key
-    fold: few keys (≪ cores, so the fold can't use the cluster) AND deep
-    per-key series (past the measured crossover — shallow series never
-    repay the scan's stitch/JIT overhead; see SCAN_MIN_ROWS_PER_KEY).
-    One aggregate job over a keys-only projection probes both numbers."""
-    spark = df.sparkSession
-    cores = int(spark.sparkContext.defaultParallelism)
-    stats = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.max("__n").alias("max_rows"),
-        )
-        .first()
-    )
-    return (
-        stats.n_keys <= max(2, cores // 4)
-        and (stats.max_rows or 0) >= SCAN_MIN_ROWS_PER_KEY
-    )
-
-
 def recursive_enrich(
     df: DataFrame,
     partition_by="symbol",
@@ -718,8 +671,6 @@ def recursive_enrich(
     apo_pairs: Sequence[tuple[int, int]] = (),
     ppo_pairs: Sequence[tuple[int, int]] = (),
     cci_ns: Sequence[int] = (),
-    engine: str = "sequential",
-    cuts: "list[float] | None" = None,
     closed_form: bool = False,
 ) -> DataFrame:
     """ALL recursive indicators in ONE applyInPandas pass — one shuffle on
@@ -740,24 +691,15 @@ def recursive_enrich(
     ``closed_form=True`` adds the closed-form block (``CLOSED_FORM_COLS``
     via ``_closed_form_pandas``; needs high/low/volume) to the same pass,
     so a caller wanting both families crosses into Python once instead of
-    shuffling, sorting and shipping the frame twice. The block then sees
-    the whole sorted series, so its rolling sums do not depend on where a
-    bucket starts or on the partition count.
+    shuffling, sorting and shipping the frame twice. The block sees the
+    whole sorted series, so its rolling sums do not depend on the
+    partition count.
 
-    ``engine``: 'sequential' (default) = the bit-exact per-key pandas
-    fold described above, parallelism |keys|; 'scan' = the block-parallel
-    affine-scan twin (``windows.recursive_scan_enrich``, with CCI and the
-    closed-form block in one overlap-bucket pass), parallelism
-    rows/buckets, numerically equivalent at rtol ~1e-12 but NOT
-    bit-identical; 'auto' = one keys-only aggregate probe, then 'scan' iff
-    |keys| ≤ cores/4 AND the deepest key exceeds the measured crossover
-    (SCAN_MIN_ROWS_PER_KEY — at the reference's 4x168k shape the
-    sequential fold WINS 2.3 s vs 5.2 s, so few keys alone is not enough;
-    at 1x3M the scan wins 4-5x). Oracle-checked entries must pass
-    'sequential' explicitly.
-    ``cuts``: precomputed order cut points threaded to the scan passes
-    (same contract as ``rolling_apply_parallel``; without them each
-    linear_recurrence sketches its own, re-executing upstream lineage)."""
+    Each key's series is folded in one pandas call, in ``order_by``
+    order, so the results are bit-identical to the per-key recursive-CTE
+    oracles; parallelism is |keys|. ``windows.ema_scan``/``kama_scan``/
+    ``rsi_scan`` are the standalone block-parallel scans for a key too
+    deep for one task."""
     import numpy as np
 
     new_cols: dict[str, T.DataType] = {}
@@ -785,56 +727,6 @@ def recursive_enrich(
     if not has_ohlc:
         for n in adx_ns:
             new_cols.pop(f"adx{n}", None)
-
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    if engine == "auto":
-        # Scan only when BOTH hold: few keys (the fold can't use the
-        # cluster) and deep series (past the measured crossover). Few
-        # SHALLOW keys — the reference's 4x168k shape — stay sequential:
-        # measured 2.3 s sequential vs 5.2 s scan there, vs 30-43 s
-        # sequential / 8-12 s scan at 1 key x 3M rows.
-        engine = (
-            "scan" if _keyspace_is_degenerate(df, keys) else "sequential"
-        )
-    if engine == "scan":
-        from big_data_analysis_for_stock_market_data_spark.operators.windows import (
-            recursive_scan_enrich,
-            rolling_apply_parallel,
-        )
-
-        d = df
-        cci = tuple(cci_ns) if has_ohlc else ()
-        bounded = [f"cci{n}" for n in cci]
-        lookbacks = [n - 1 for n in cci]
-        if closed_form:
-            bounded += CLOSED_FORM_COLS
-            lookbacks.append(CLOSED_FORM_LOOKBACK)
-        if bounded:
-            # CCI and the closed-form block are bounded-lookback (not
-            # recursive): one overlap-bucket pandas pass keeps within-key
-            # parallelism. Runs FIRST, on the raw frame, so its cut-point
-            # sketch stays cheap.
-            def bounded_block(pdf: pd.DataFrame) -> pd.DataFrame:
-                if closed_form:
-                    pdf = _closed_form_pandas(pdf)
-                return _cci_pandas_block(pdf, cci, col)
-
-            d = rolling_apply_parallel(
-                d, bounded_block, {c: T.DoubleType() for c in bounded},
-                lookback=max(lookbacks),
-                order_by=order_by, partition_by=keys, cuts=cuts,
-            )
-        d = recursive_scan_enrich(
-            d, partition_by=keys, order_by=order_by, col=col,
-            ema_spans=ema_spans, macd_pairs=macd_pairs, rsi_ns=rsi_ns,
-            kama_ns=kama_ns, adx_ns=adx_ns if has_ohlc else (),
-            apo_pairs=apo_pairs, ppo_pairs=ppo_pairs, cuts=cuts,
-        )
-        return d.select(*df.columns, *new_cols)
-    if engine != "sequential":
-        raise ValueError(
-            f"engine must be 'sequential', 'scan' or 'auto', got {engine!r}"
-        )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if closed_form:
@@ -994,28 +886,18 @@ def enrich_ohlcv(
     partition_by="symbol",
     order_by="date",
     engine: str = "parallel",
-    cuts: "list[float] | None" = None,
-    recursive_engine: str = "auto",
 ) -> DataFrame:
     """Compute the reference schema's indicator families natively from OHLCV.
 
     engine='parallel' (default): the closed-form block runs as vectorized
     pandas (``_closed_form_pandas``) inside the ``recursive_enrich`` pass
     that also computes the recursive family (EMA/MACD/RSI/KAMA/ADX) and
-    CCI — one shuffle and one Python crossing for the whole surface. Under
-    the sequential recursive engine the block sees each key's whole sorted
-    series; under the scan engine it joins the CCI overlap-bucket pass
-    (exact: dependence bounded by CLOSED_FORM_LOOKBACK), parallel WITHIN a
-    key.
+    CCI — one shuffle and one Python crossing for the whole surface, with
+    the block seeing each key's whole sorted series.
     engine='expr': closed-form indicators as JVM window expressions sharing
     one shuffle per partition key, then the ``recursive_enrich`` pass
     without the block — the JVM reference twin the parity tests compare
-    against.
-    ``recursive_engine`` ('auto' by default) picks the recursive pass's
-    engine: the block-parallel scan only when there are few keys (≤ cores/4)
-    AND the deepest key passes SCAN_MIN_ROWS_PER_KEY; shallower series —
-    the reference's 4-symbol shape included — take the bit-exact sequential
-    fold. ``cuts`` are threaded to the scan engine's bucketed passes."""
+    against."""
     d = df
     if engine == "expr":
         for n in (5, 10, 15, 20):
@@ -1048,8 +930,6 @@ def enrich_ohlcv(
         apo_pairs=((12, 26),),
         ppo_pairs=((12, 26),),
         cci_ns=(5, 10, 15),
-        engine=recursive_engine,
-        cuts=cuts,
         closed_form=engine == "parallel",
     )
 

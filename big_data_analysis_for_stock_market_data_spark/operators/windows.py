@@ -464,17 +464,19 @@ def linear_recurrence(
     order_by: str,
     partition_by: str | Sequence[str],
     num_buckets: int | None = None,
-    cuts: "list[float] | None" = None,
 ) -> DataFrame:
     """Block-parallel affine scan: for each ``out -> (coef, input)`` entry,
     computes ``y_i = coef_i * y_{i-1} + input_i`` per key in ``order_by``
     order (seed ``y_{-1} = 0``; encode other seeds in the first row's
     coef/input — see ``ema_scan``).
 
-    This is the scalable execution of the recursive-indicator family
-    (EMA/KAMA/RSI are all affine in the carried state): the sequential
-    per-key pass has parallelism = |keys| — the documented worst case when
-    a few symbols hold millions of rows each. Affine maps compose
+    EMA/KAMA/RSI are all affine in the carried state, so this scan runs
+    them (``ema_scan``/``kama_scan``/``rsi_scan``) with parallelism
+    rows/buckets instead of the per-key fold's |keys|, for a key too deep
+    for one task. ``indicators.recursive_enrich`` keeps the fold: on a
+    4-core host (local[4]) at 1 key x 2M rows the scanned feature frame
+    was a near-tie warm (33.9 s vs 36.3 s) and 131 s slower cold.
+    Affine maps compose
     associatively (A2∘A1 = (c2·c1, c2·b1 + b2)), so the recurrence is a
     segment scan with NO per-key total order anywhere:
 
@@ -505,11 +507,7 @@ def linear_recurrence(
     names = list(recurrences)
     npart = shuffle_partitions(df)
     n_bkt = num_buckets or npart
-    # `cuts`: precomputed compute_order_cuts output — without it the
-    # bucket sketch re-executes df's full upstream lineage once (same
-    # contract as rolling_apply_parallel; at 100 TB that is a second
-    # full input pass)
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n_bkt, cuts=cuts))
+    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n_bkt))
     for i, out in enumerate(names):
         coef, inp = recurrences[out]
         d = d.withColumn(f"__c{i}", coef.cast("double"))
@@ -739,254 +737,6 @@ def rsi_scan(
         res.withColumn(out_col, rsi)
         .drop("__rn1", "__g", "__l", "__avg_gain", "__avg_loss")
     )
-
-
-def recursive_scan_enrich(
-    df: DataFrame,
-    partition_by: str | Sequence[str] = "symbol",
-    order_by: str = "date",
-    col: str = "close",
-    ema_spans: Sequence[int] = (5, 10, 15, 20),
-    macd_pairs: Sequence[tuple[int, int]] = ((12, 26),),
-    rsi_ns: Sequence[int] = (14,),
-    kama_ns: Sequence[int] = (10,),
-    adx_ns: Sequence[int] = (14,),
-    apo_pairs: Sequence[tuple[int, int]] = (),
-    ppo_pairs: Sequence[tuple[int, int]] = (),
-    num_buckets: int | None = None,
-    cuts: "list[float] | None" = None,
-) -> DataFrame:
-    """The recursive indicator family (EMA/MACD/APO/PPO/RSI/KAMA/ADX) as
-    block-parallel affine scans — the degenerate-keyspace twin of
-    ``indicators.recursive_enrich``'s sequential pandas pass. When a few
-    keys hold all the rows (the reference's 4-symbol shape), the
-    sequential engine's parallelism is |keys|; here every recurrence is an
-    affine map, so ALL of them fold in ONE ``linear_recurrence`` pass
-    whose parallelism is rows/num_buckets (plus a second pass for ADX,
-    whose outer Wilder smooth consumes the first pass's DX).
-
-    Numerics: numerically equivalent to the sequential engine (the scan
-    re-associates float products — rtol ~1e-12, pinned in
-    test_global_window / test_indicators), NOT bit-identical; the
-    sequential engine stays the exact default for oracle-checked entries.
-
-    pandas ``ewm`` NaN semantics are replicated exactly: a NaN input row
-    carries state unchanged (coef 1, input 0) and emits the carry; the
-    first VALID value seeds the mean; rows before any valid value emit
-    NaN (ADX's DX is NaN at the first row and wherever DI+ + DI- = 0).
-
-    Coefficient pre-columns (row number, RSI gains/losses, KAMA smoothing
-    constants, true range, directional movements) come from ONE per-key
-    JVM sort window — a single codegen'd pass; the serialization this
-    engine removes is the per-key PYTHON fold, as in ``kama_scan``.
-
-    The scan runs on a NARROW projection (keys, order, price, high/low)
-    and joins results back on (keys, order) — the scanned frame crosses
-    the Arrow boundary twice and is persisted, so every payload column
-    carried through it would be serialized 3x. Requires (keys, order) to
-    be unique (already required for the recurrence to be well-defined).
-    ``cuts``: precomputed order cut points (compute_order_cuts) — without
-    them each linear_recurrence pass sketches its own, re-executing the
-    upstream lineage."""
-    keys = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
-    need_ohlc = bool(adx_ns) and all(
-        c in df.columns for c in ("high", "low")
-    )
-    narrow = df.select(
-        *keys, order_by, col,
-        *(("high", "low") if need_ohlc else ()),
-    )
-    x = F.col(col)
-    w = _ordered_window(order_by, keys)
-    d = narrow.withColumn("__rn1", F.row_number().over(w))
-    rn = F.col("__rn1")
-    first = rn == 1
-    temps: list[str] = ["__rn1"]
-    recs: "dict[str, tuple[Column, Column]]" = {}
-
-    # EMAs: one recurrence per span needed by any consumer
-    all_spans = sorted(
-        set(ema_spans)
-        | {s for p in (*macd_pairs, *apo_pairs, *ppo_pairs) for s in p}
-    )
-    extra_emas = [n for n in all_spans if n not in set(ema_spans)]
-    for n in all_spans:
-        a = 2.0 / (n + 1)
-        recs[f"ema{n}"] = (
-            F.when(first, F.lit(0.0)).otherwise(F.lit(1.0 - a)),
-            F.when(first, x).otherwise(F.lit(a) * x),
-        )
-
-    # RSI: two Wilder means per n over shared gain/loss columns
-    if rsi_ns:
-        delta = x - F.lag(col, 1).over(w)
-        d = d.withColumn("__g", F.greatest(delta, F.lit(0.0)))
-        d = d.withColumn("__l", F.greatest(-delta, F.lit(0.0)))
-        temps += ["__g", "__l"]
-    for n in rsi_ns:
-        a = 1.0 / n
-        first2 = rn <= 2
-        for nm, src in ((f"__ag{n}", "__g"), (f"__al{n}", "__l")):
-            recs[nm] = (
-                F.when(first2, F.lit(0.0)).otherwise(F.lit(1.0 - a)),
-                F.when(rn == 1, F.lit(0.0))
-                .when(rn == 2, F.col(src))
-                .otherwise(F.lit(a) * F.col(src)),
-            )
-            temps.append(nm)
-
-    # KAMA: data-dependent smoothing constant per n (kama_scan's form)
-    for n in kama_ns:
-        fast_sc, slow_sc = 2.0 / (2 + 1), 2.0 / (30 + 1)
-        fr = w.rowsBetween(-(n - 1), 0)
-        adiff = F.abs(x - F.coalesce(F.lag(col, 1).over(w), x))
-        vol = F.sum(adiff).over(fr)
-        change = F.abs(x - F.lag(col, n).over(w))
-        er = (
-            F.when(rn <= n, F.lit(0.0))
-            .when(vol > 0, change / vol)
-            .otherwise(F.lit(0.0))
-        )
-        sc = F.pow(er * (fast_sc - slow_sc) + slow_sc, F.lit(2.0))
-        d = d.withColumn(f"__sc{n}", sc)
-        temps.append(f"__sc{n}")
-        recs[f"kama{n}"] = (
-            F.when(first, F.lit(0.0)).otherwise(1.0 - F.col(f"__sc{n}")),
-            F.when(first, x).otherwise(F.col(f"__sc{n}") * x),
-        )
-
-    # ADX pass-1: Wilder-smoothed TR / +DM / -DM (shared raw columns)
-    adx_ns = tuple(adx_ns) if need_ohlc else ()
-    if adx_ns:
-        h, lo = F.col("high"), F.col("low")
-        prev_c = F.lag(col, 1).over(w)
-        up = h - F.lag("high", 1).over(w)
-        down = F.lag("low", 1).over(w) - lo
-        # greatest() skips nulls, so the first row's TR = high-low —
-        # exactly pandas' skipna row-max over [h-l, NaN, NaN]
-        d = d.withColumn(
-            "__tr",
-            F.greatest(h - lo, F.abs(h - prev_c), F.abs(lo - prev_c)),
-        )
-        d = d.withColumn(
-            "__pdm", F.when((up > down) & (up > 0), up).otherwise(F.lit(0.0))
-        )
-        d = d.withColumn(
-            "__mdm",
-            F.when((down > up) & (down > 0), down).otherwise(F.lit(0.0)),
-        )
-        temps += ["__tr", "__pdm", "__mdm"]
-    for n in adx_ns:
-        a = 1.0 / n
-        recs[f"__atr{n}"] = (
-            F.when(first, F.lit(0.0)).otherwise(F.lit(1.0 - a)),
-            F.when(first, F.col("__tr")).otherwise(F.lit(a) * F.col("__tr")),
-        )
-        # +DM/-DM are NaN at row 1 in pandas (diff of nothing), so their
-        # Wilder means seed at row 2; row 1's smoothed value is masked by
-        # DX = 0/0 = NaN below, matching pandas exactly.
-        for nm, src in ((f"__spdm{n}", "__pdm"), (f"__smdm{n}", "__mdm")):
-            recs[nm] = (
-                F.when(rn <= 2, F.lit(0.0)).otherwise(F.lit(1.0 - a)),
-                F.when(rn == 1, F.lit(0.0))
-                .when(rn == 2, F.col(src))
-                .otherwise(F.lit(a) * F.col(src)),
-            )
-            temps.append(nm)
-        temps.append(f"__atr{n}")
-
-    out = linear_recurrence(
-        d, recs, order_by=order_by, partition_by=keys,
-        num_buckets=num_buckets, cuts=cuts,
-    )
-
-    # post-scan expressions (pure JVM projections)
-    for a_, b_ in macd_pairs:
-        out = out.withColumn(
-            f"macd{a_}{b_}", F.col(f"ema{a_}") - F.col(f"ema{b_}")
-        )
-    for a_, b_ in apo_pairs:
-        out = out.withColumn(
-            f"apo{a_}{b_}", F.col(f"ema{a_}") - F.col(f"ema{b_}")
-        )
-    for a_, b_ in ppo_pairs:
-        out = out.withColumn(
-            f"ppo{a_}{b_}",
-            100.0 * (F.col(f"ema{a_}") - F.col(f"ema{b_}")) / F.col(f"ema{b_}"),
-        )
-    for n in rsi_ns:
-        ag, al = F.col(f"__ag{n}"), F.col(f"__al{n}")
-        out = out.withColumn(
-            f"rsi{n}",
-            F.when(F.col("__rn1") == 1, F.lit(None).cast("double"))
-            .when((al == 0) & (ag > 0), F.lit(100.0))
-            .when((al == 0) & (ag == 0), F.lit(None).cast("double"))
-            .otherwise(100.0 - 100.0 / (1.0 + ag / al)),
-        )
-    nan = F.lit(float("nan"))
-    for n in adx_ns:
-        # explicit NaN guards: ANSI mode raises on x/0, while pandas'
-        # 0/0 yields NaN (row 1, flat markets) — the CASE keeps division
-        # lazy so the zero-denominator rows never divide
-        atr = F.col(f"__atr{n}")
-        pdi = F.when(atr == 0.0, nan).otherwise(
-            100.0 * F.col(f"__spdm{n}") / atr
-        )
-        mdi = F.when(atr == 0.0, nan).otherwise(
-            100.0 * F.col(f"__smdm{n}") / atr
-        )
-        denom = pdi + mdi
-        out = out.withColumn(
-            f"__dx{n}",
-            F.when(denom == 0.0, nan).otherwise(
-                100.0 * F.abs(pdi - mdi) / denom
-            ),
-        )
-        temps.append(f"__dx{n}")
-
-    # ADX pass-2: Wilder smooth of DX with NaN-carry/seed-at-first-valid
-    if adx_ns:
-        w2 = _ordered_window(order_by, keys)
-        run = w2.rowsBetween(Window.unboundedPreceding, 0)
-        recs2: "dict[str, tuple[Column, Column]]" = {}
-        for n in adx_ns:
-            a = 1.0 / n
-            dx = F.col(f"__dx{n}")
-            valid = ~F.isnan(dx) & dx.isNotNull()
-            out = out.withColumn(
-                f"__seen{n}",
-                F.sum(F.when(valid, 1).otherwise(0)).over(run),
-            )
-            temps.append(f"__seen{n}")
-            seen = F.col(f"__seen{n}")
-            recs2[f"__adx{n}"] = (
-                F.when(~valid, F.lit(1.0))
-                .when(seen == 1, F.lit(0.0))
-                .otherwise(F.lit(1.0 - a)),
-                F.when(~valid, F.lit(0.0))
-                .when(seen == 1, dx)
-                .otherwise(F.lit(a) * dx),
-            )
-            temps.append(f"__adx{n}")
-        out = linear_recurrence(
-            out, recs2, order_by=order_by, partition_by=keys,
-            num_buckets=num_buckets, cuts=cuts,
-        )
-        for n in adx_ns:
-            out = out.withColumn(
-                f"adx{n}",
-                F.when(
-                    F.col(f"__seen{n}") == 0, F.lit(float("nan"))
-                ).otherwise(F.col(f"__adx{n}")),
-            )
-
-    out = out.drop(
-        *temps, *[f"ema{n}" for n in extra_emas], col,
-        *(("high", "low") if need_ohlc else ()),
-    )
-    return df.join(out, on=[*keys, order_by], how="inner")
 
 
 def gap_fill_daily(

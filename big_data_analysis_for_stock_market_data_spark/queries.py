@@ -1902,12 +1902,11 @@ def ind_recursive_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_analysis_for_stock_market_data_spark.operators import indicators as ind
 
     events = load(spark, sf_dir, "events")
-    # engine pinned: the oracle replays the SEQUENTIAL fold bit-for-bit;
-    # the scan twin is rtol-equivalent only (see recursive_enrich).
+    # the oracle replays the per-key sequential fold bit-for-bit
     out = ind.recursive_enrich(
         events, partition_by="user_id", order_by="ts", col="value",
         ema_spans=(10, 20), macd_pairs=((12, 26),), rsi_ns=(14,),
-        kama_ns=(10,), adx_ns=(), engine="sequential",
+        kama_ns=(10,), adx_ns=(),
     )
     return out.select(
         "event_id", "user_id", "ts", "ema10", "ema20", "macd1226",
@@ -17506,63 +17505,11 @@ def scale10_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registry ordering. The driver's correctness gate checks the FIRST 50
-# entries of queries() each round, so ordering is scoreboard-visible.
-# History: r05 window = 38 never-verdicted + fixed reds (all green r05);
-# r06 window = 6 engine-fingerprint canaries + the 5 HUGEINT-cast reds +
-# the r05-late backlog (48/50 green, 2 no_oracle rows-only). The r06
-# registry ended at 309 entries / 300 oracles with an 83-entry
-# never-verdicted oracle-backed backlog; r07 rotates that backlog in.
+# Registry ordering: the entries named here come first in queries(), the
+# rest follow in registration order. Every named entry is oracle-backed.
 # ---------------------------------------------------------------------------
 
 _WINDOW_PRIORITY: tuple[str, ...] = (
-    # r11 window (VERDICT r10 tasks 2/3/5). The r10 round ended 50/50
-    # green with zero registry reds; this round's window is: the entries
-    # the r11 code changes re-queue, the r11 new entries, and the
-    # oldest-verdict rolling refresh.
-    # Slots 1-4: the staleness-forced set — the n_planes keyword default
-    # flipped from 8 to 'auto' in operators/simsearch (lsh_bucket_topk /
-    # ann_join / cosine_near_dup_pairs; VERDICT r10 "What's wrong #1"),
-    # and the auto-planes oracle's plane search was rebound to k 0..62
-    # with a loud out-of-range failure (r10 ADVICE) — so the four entries
-    # whose call closures include those sources need same-round
-    # re-verdicts (the gate enforces this).
-    # Slots 5-10: the r11 new verification-depth entries (driver verdict
-    # the round they land): the as-of join decade fold (the one
-    # heavily-used join family without one), the chained-streaming-rollup
-    # decade fold, the partition-layout invariance fold (4 physical
-    # layouts, bit-identical) promoted from a session-only check, the
-    # as-of TIE-BREAK layout-invariance fold (manufactured dense ties
-    # under 4 right-side layouts — certifies the r11 tie-determinism
-    # change at driver level, not just pytest), the triangle-count
-    # decade fold (the graph family's first), and the
-    # connected-components decade fold (the ITERATIVE family's first:
-    # 10 offset-id replicas through one convergence loop).
-    # Slots 11-13: the as-of join family — operators/joins.as_of_join
-    # gained a deterministic tie-break among equal right timestamps
-    # (greatest value tuple; previously partition-order-dependent), so
-    # the three pre-existing entries whose closures include it re-queue.
-    # Slots 14-18: the r11 OPTIMIZATION re-queues — closures changed by
-    # the optimization round's code edits, so their last verdicts are
-    # stale: the CCI block-chunked window pass (indicators._cci_pandas_
-    # block: ind_recursive_family, stock_feature_frame) and the
-    # payload-shuffle removal in container synthesis (multimodal.
-    # synthesize_*/_widen_unless_repartitioned/parse_container_headers:
-    # mm_container_headers, mm_gif_jpeg_headers, s_binaryfile_scan).
-    # Slots 19-24: the last 6 r03-latest oracle-backed verdicts (drains
-    # the r03 cohort; the 5 rows-only ml_* r03 entries are
-    # contract-excluded from slots).
-    # Slots 25-50: the oldest 26 of the 36 r04-latest oracle-backed
-    # entries (ml_rf_grouped_pca is rows-only and contract-excluded;
-    # w1_scalable_global_lag / w_prefix_sum / w_sessionize_batch /
-    # w_time_range_frame / w_value_suite, the r05-cohort head
-    # a10_groupwise_ols, and — displaced by the five optimization
-    # re-queues above — text_chunk_overlap / text_curate_gate /
-    # text_pack_sequences / text_redact_pii / text_rolling_fingerprint
-    # defer to r12).
-    # All 50 slots are oracle-backed. The staleness gate (STALENESS.json)
-    # must report every stale entry inside this window head.
-    #
     # -- staleness-forced: closures include the auto-default LSH family --
     "simsearch_lsh_topk",
     "simsearch_ann_join",

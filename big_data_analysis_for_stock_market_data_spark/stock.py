@@ -232,25 +232,15 @@ def daily_features(df: DataFrame, fused: bool = True) -> DataFrame:
 
 def feature_hints(
     df: DataFrame,
-    partition_by: str = "symbol",
     order_by: str = "date",
 ) -> dict:
-    """Precompute ``feature_frame``'s control-plane inputs — the quantile
-    cut sketch for the scan engine's bucketed passes and the keyspace probe
-    that picks the recursive-indicator engine — as a reusable hint dict.
-    Both are one small Spark job each; a session that runs the pipeline
-    repeatedly over the same bar universe should compute them once and
-    pass ``feature_frame(bars, **hints)`` (the r06 bench attribution:
-    re-running them per invocation cost ~3 s of a 16 s FE stage)."""
+    """Precompute the order cut points (``win_ops.compute_order_cuts``,
+    one approxQuantile job) that bucketed passes over these bars take as
+    ``cuts=``, e.g. ``rolling_apply_parallel``. ``feature_frame`` reads no
+    hint, so ``feature_frame(bars, **hints)`` builds the same plan as
+    ``feature_frame(bars)``."""
     n = win_ops.shuffle_partitions(df)
-    return {
-        "cuts": win_ops.compute_order_cuts(df, order_by, n),
-        "recursive_engine": (
-            "scan"
-            if ind._keyspace_is_degenerate(df, [partition_by])
-            else "sequential"
-        ),
-    }
+    return {"cuts": win_ops.compute_order_cuts(df, order_by, n)}
 
 
 def feature_frame(
@@ -258,13 +248,12 @@ def feature_frame(
     label_mode: str = "lead",
     fused: bool = True,
     cuts: "list[float] | None" = None,
-    recursive_engine: str | None = None,
 ) -> DataFrame:
     """Full reference feature pipeline, engine-style: native indicators
     (one applyInPandas pass running the closed-form block, CCI and the
     recursive family), row-wise derived features, day-grain features, and
     the buy/sell label — the surface ``G_2_rf_nordd_fe.py`` built in 11
-    join stages.
+    join stages. Building the frame submits no Spark job.
 
     Stage order is a measured plan choice: the day-grain windows and the
     label depend only on RAW columns, so they run FIRST, on the narrow
@@ -272,34 +261,16 @@ def feature_frame(
     enriched frame, and the indicator pass's repartition then reuses the
     window exchange's clustering instead of re-shuffling the full enriched
     frame (was: windows after enrichment = +25 s of the 43 s pipeline at
-    the 671k-row reference scale)."""
-    # Both hints are probed on the RAW bars (pruned scan), not the
-    # enriched frame — probing after daily+label would re-execute those
-    # stages once. Callers that invoke the pipeline repeatedly over the
-    # same universe should precompute them once via ``feature_hints`` and
-    # pass them in — each None below costs one control-plane job per call.
-    if recursive_engine is None:
-        # Policy: scan iff few symbols AND deep series (indicators.
-        # SCAN_MIN_ROWS_PER_KEY crossover); the 4x168k reference shape
-        # stays on the bit-exact sequential fold, which measured FASTER.
-        recursive_engine = (
-            "scan"
-            if ind._keyspace_is_degenerate(df, ["symbol"])
-            else "sequential"
-        )
-    if cuts is None and recursive_engine != "sequential":
-        # bucket cut points, only the scan engine's bucketed passes use them
-        n = win_ops.shuffle_partitions(df)
-        cuts = win_ops.compute_order_cuts(df, "date", n)
+    the 671k-row reference scale).
+
+    ``cuts`` is not read. It is kept for callers that pass
+    ``**feature_hints(bars)``, such as ``perfbench/stockload.py``."""
     d = daily_features(df, fused=fused)
     d = win_ops.label_buy_sell(
         d, value_col="high", order_by="date", partition_by="symbol",
         mode=label_mode,
     )
-    d = ind.enrich_ohlcv(
-        d, partition_by="symbol", order_by="date", cuts=cuts,
-        recursive_engine=recursive_engine,
-    )
+    d = ind.enrich_ohlcv(d, partition_by="symbol", order_by="date")
     return _rowwise_features(d)
 
 

@@ -610,6 +610,34 @@ def run_to_memory(
     return df.sparkSession, sink
 
 
+def _rename_or_raise(fs, src, dst) -> None:
+    # Hadoop's FileSystem.rename reports failure by returning false
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _recover_target(fs, target, aside) -> None:
+    """Finish a swap that stopped part-way: an aside copy with no target
+    is the last whole table, so it goes back in place; an aside copy next
+    to a target is the old table the swap already replaced."""
+    if fs.exists(aside):
+        if fs.exists(target):
+            fs.delete(aside, True)
+        else:
+            _rename_or_raise(fs, aside, target)
+
+
+def _swap_into_place(fs, stage, target, aside) -> None:
+    """Replace ``target`` with ``stage`` on a Hadoop-style filesystem
+    (``exists``/``rename``/``delete``): old table aside, stage in, aside
+    deleted. Raises if a rename fails, leaving the old table aside for
+    ``_recover_target``."""
+    if fs.exists(target):
+        _rename_or_raise(fs, target, aside)
+    _rename_or_raise(fs, stage, target)
+    fs.delete(aside, True)
+
+
 def run_upsert_to_parquet(
     df: DataFrame,
     path: str,
@@ -621,8 +649,11 @@ def run_upsert_to_parquet(
     """Streaming SCD-1 upsert sink (``foreachBatch`` merge): each
     micro-batch is resolved to one candidate per key (max ``order`` tuple —
     same contract as ``aggregates.latest_by_key``), merged with the current
-    parquet target, and the target is atomically replaced via a staging
-    directory + filesystem rename.
+    parquet target, and the target is replaced via a staging directory:
+    the old table is renamed aside, the stage renamed in, then the aside
+    copy deleted (``_swap_into_place``). A crash at any step leaves one
+    whole table on disk; the next batch first restores the aside copy if
+    the target is missing (``_recover_target``).
 
     Exactly-once STATE: foreachBatch is at-least-once, but the merge is
     idempotent (max_by over a total order), so a replayed batch converges to
@@ -641,7 +672,9 @@ def run_upsert_to_parquet(
         jvm = spark._jvm
         hconf = spark._jsc.hadoopConfiguration()
         hpath = jvm.org.apache.hadoop.fs.Path(path)
+        aside = jvm.org.apache.hadoop.fs.Path(f"{path}__aside")
         fs = hpath.getFileSystem(hconf)
+        _recover_target(fs, hpath, aside)
         if fs.exists(hpath):
             current = spark.read.parquet(path).select(*keys, *payload)
             resolved = latest_by_key(
@@ -650,9 +683,7 @@ def run_upsert_to_parquet(
             )
         stage = f"{path}__stage_{batch_id}"
         resolved.write.mode("overwrite").parquet(stage)
-        spage = jvm.org.apache.hadoop.fs.Path(stage)
-        fs.delete(hpath, True)
-        fs.rename(spage, hpath)
+        _swap_into_place(fs, jvm.org.apache.hadoop.fs.Path(stage), hpath, aside)
 
     with _scoped_state_partitions(df.sparkSession, 2):
         q = (

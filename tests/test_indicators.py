@@ -369,66 +369,6 @@ def test_resample_ohlc_weekly(spark):
     assert (w2.open, w2.close, w2.volume, w2.n_rows) == (99.0, 99.0, 4, 1)
 
 
-def test_recursive_enrich_scan_engine_parity(spark):
-    # The block-parallel scan engine must match the bit-exact sequential
-    # fold at rtol (re-associated float products) with IDENTICAL NaN
-    # masks — including ADX's NaN-carry rows and CCI's md=0 rows. The
-    # closed-form block rides along: whole series under 'sequential',
-    # overlap buckets (shared with CCI) under 'scan'.
-    import numpy as np
-
-    from big_data_analysis_for_stock_market_data_spark import stock
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        indicators as ind,
-    )
-
-    bars = stock.make_stock_fixture(spark, n_rows=3000, n_symbols=2)
-    kw = dict(
-        partition_by="symbol", order_by="date",
-        ema_spans=(5, 10), macd_pairs=((12, 26),), rsi_ns=(14,),
-        kama_ns=(10,), adx_ns=(5, 14), apo_pairs=((12, 26),),
-        ppo_pairs=((12, 26),), cci_ns=(5, 15), closed_form=True,
-    )
-    seq = ind.recursive_enrich(bars, engine="sequential", **kw) \
-        .orderBy("symbol", "date").toPandas()
-    scan = ind.recursive_enrich(bars, engine="scan", **kw) \
-        .orderBy("symbol", "date").toPandas()
-    assert list(seq.columns) == list(scan.columns)
-    for c in ["ema5", "ema10", "macd1226", "apo1226", "ppo1226", "rsi14",
-              "kama10", "adx5", "adx14", "cci5", "cci15",
-              *ind.CLOSED_FORM_COLS]:
-        a = seq[c].to_numpy(dtype="float64")
-        b = scan[c].to_numpy(dtype="float64")
-        na, nb = np.isnan(a), np.isnan(b)
-        assert (na == nb).all(), f"{c}: NaN mask diverges"
-        assert np.allclose(a[~na], b[~nb], rtol=1e-8, atol=1e-8), c
-
-
-def test_recursive_enrich_auto_engine_policy(spark, monkeypatch):
-    # auto = scan iff few keys AND deep series (measured crossover:
-    # 4x168k sequential wins, 1x3M scan wins 4-5x). A shallow 2-symbol
-    # frame must NOT be degenerate; lowering the crossover makes it so.
-    from big_data_analysis_for_stock_market_data_spark import stock
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        indicators as ind,
-    )
-
-    bars = stock.make_stock_fixture(spark, n_rows=500, n_symbols=2)
-    assert not ind._keyspace_is_degenerate(bars, ["symbol"])
-    monkeypatch.setattr(ind, "SCAN_MIN_ROWS_PER_KEY", 100)
-    assert ind._keyspace_is_degenerate(bars, ["symbol"])
-    # and a many-key frame stays sequential regardless of depth
-    ev = spark.range(2000).selectExpr("id % 400 AS k", "id AS v")
-    assert not ind._keyspace_is_degenerate(ev, ["k"])
-    # auto smoke through the routed path
-    out = ind.recursive_enrich(
-        bars, engine="auto", ema_spans=(5,), macd_pairs=(), rsi_ns=(),
-        kama_ns=(), adx_ns=(), cci_ns=(),
-    )
-    rows = out.select("ema5").collect()
-    assert len(rows) == 500 and all(r.ema5 is not None for r in rows)
-
-
 def test_cci_block_chunking_bit_identical():
     # r11: _cci_pandas_block processes the sliding-window view in 64k-row
     # contiguous blocks (allocation-stall fix). Per-row reductions are

@@ -122,3 +122,18 @@ def test_closed_form_features_independent_of_partition_count(spark, bars):
                               b[c].to_numpy(dtype="float64"), equal_nan=True)
     ]
     assert differ == []
+
+
+def test_feature_frame_build_submits_no_job(spark):
+    # Building the feature frame must be pure planning: no probe or
+    # sketch job may run before the caller's first action.
+    sc = spark.sparkContext
+    bars = stock.make_stock_fixture(spark, n_rows=2_000, n_symbols=2)
+    assert bars.count() == 2_000
+    g = "test_feature_frame_build_submits_no_job"
+    sc.setJobGroup(g, g)
+    try:
+        stock.feature_frame(bars)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(g)) == []

@@ -398,6 +398,54 @@ def test_upsert_sink_converges_and_is_idempotent(spark, tmp_path):
     }
 
 
+class _FlakyRenameFS:
+    """In-memory stand-in for Hadoop's FileSystem: paths map to table
+    contents, and the ``fail_on``-th rename returns false, as Hadoop's
+    ``rename`` does when it fails."""
+
+    def __init__(self, tables: dict, fail_on: int):
+        self.tables = dict(tables)
+        self.renames = 0
+        self.fail_on = fail_on
+
+    def exists(self, p):
+        return p in self.tables
+
+    def rename(self, src, dst):
+        self.renames += 1
+        if self.renames == self.fail_on or src not in self.tables:
+            return False
+        self.tables[dst] = self.tables.pop(src)
+        return True
+
+    def delete(self, p, recursive):
+        return self.tables.pop(p, None) is not None
+
+
+def test_upsert_swap_keeps_old_table_when_rename_fails():
+    """The upsert sink's swap renames the old table aside before renaming
+    the stage in. If the second rename fails, the swap raises, the old
+    table survives aside, and the next batch restores it before merging."""
+    from big_data_analysis_for_stock_market_data_spark.streaming import ops
+
+    fs = _FlakyRenameFS({"t": "old", "t__stage_1": "new"}, fail_on=2)
+    with pytest.raises(OSError, match="rename"):
+        ops._swap_into_place(fs, "t__stage_1", "t", "t__aside")
+    assert fs.tables == {"t__aside": "old", "t__stage_1": "new"}
+
+    # next batch: recovery first, then a swap that succeeds
+    ops._recover_target(fs, "t", "t__aside")
+    assert fs.tables == {"t": "old", "t__stage_1": "new"}
+    fs.tables["t__stage_2"] = "newer"
+    ops._swap_into_place(fs, "t__stage_2", "t", "t__aside")
+    assert fs.tables == {"t": "newer", "t__stage_1": "new"}
+
+    # a crash after the stage went in leaves a stale aside copy: dropped
+    fs.tables["t__aside"] = "newer-but-replaced"
+    ops._recover_target(fs, "t", "t__aside")
+    assert fs.tables == {"t": "newer", "t__stage_1": "new"}
+
+
 def test_running_totals_state_resumes_across_batches(spark, stream_dir):
     """Running totals must carry (n, sum, max) state across micro-batches:
     the two-file source replays as two batches, and the final per-key

@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
+A verifier runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash; ``tools/check_correctness.py`` does the same locally).
 
 Implementation lives in ``big_data_analysis_for_stock_market_data_spark.queries``;
 this module only adapts it to the driver's interface.

@@ -354,19 +354,15 @@ def _parse_one_container(payload: bytes) -> dict:
 #: The floors translate that sweep into scan bytes per Python task: the
 #: widening target is ceil(input scan bytes / floor), capped at the
 #: session target, so tiny corpora stay narrow, and a 100 TB corpus still
-#: fans out to full width. Overridable per session for different
-#: hardware (spark.graft.pythonFanout.lightBytesPerTask / .midBytesPerTask).
+#: fans out to full width.
 _LIGHT_BYTES_PER_TASK = 4 << 20
 _MID_BYTES_PER_TASK = 256 << 10
 
-_LIGHT_BYTES_CONF = "spark.graft.pythonFanout.lightBytesPerTask"
-_MID_BYTES_CONF = "spark.graft.pythonFanout.midBytesPerTask"
 
-
-def _sized_width(df: DataFrame, bytes_per_task: int, conf_key: str) -> int:
+def _sized_width(df: DataFrame, bytes_per_task: int) -> int:
     """Python-fan-out width for ``df``: the session's shuffle-partition
     target, capped by the input's driver-side scan-byte estimate divided
-    by ``bytes_per_task`` (overridable via ``conf_key``). Pure metadata —
+    by ``bytes_per_task``. Pure metadata —
     ``inputFiles()`` + filesystem stats, no job. Derived frames report
     their underlying scan's files, which is exactly the right size proxy
     here (the id universe a synthesis pass fans out over is a projection
@@ -374,20 +370,18 @@ def _sized_width(df: DataFrame, bytes_per_task: int, conf_key: str) -> int:
     estimate is unavailable (in-memory frames, exotic FS)."""
     from big_data_analysis_for_stock_market_data_spark.operators import (
         _file_length,
-        _parse_bytes,
     )
 
     sess = df.sparkSession
     target = int(sess.conf.get("spark.sql.shuffle.partitions"))
     try:
-        floor = _parse_bytes(sess.conf.get(conf_key, str(bytes_per_task)))
         files = df.inputFiles()
         if not files:
             return target
         total = sum(_file_length(sess, f) for f in files)
     except Exception:
         return target
-    return max(1, min(target, math.ceil(total / max(1, floor))))
+    return max(1, min(target, math.ceil(total / bytes_per_task)))
 
 
 def _widen_light(df: DataFrame) -> DataFrame:
@@ -397,8 +391,7 @@ def _widen_light(df: DataFrame) -> DataFrame:
     )
 
     return ensure_parallelism(
-        df, min_partitions=_sized_width(
-            df, _LIGHT_BYTES_PER_TASK, _LIGHT_BYTES_CONF)
+        df, min_partitions=_sized_width(df, _LIGHT_BYTES_PER_TASK)
     )
 
 
@@ -409,8 +402,7 @@ def _widen_mid(df: DataFrame) -> DataFrame:
     )
 
     return ensure_parallelism(
-        df, min_partitions=_sized_width(
-            df, _MID_BYTES_PER_TASK, _MID_BYTES_CONF)
+        df, min_partitions=_sized_width(df, _MID_BYTES_PER_TASK)
     )
 
 
@@ -1502,7 +1494,7 @@ def gif_roundtrip_stats(
 # ZRL / EOB handling, zig-zag order, and dequantization. The pixel path
 # (IDCT + level shift + clamp) is verified on flat DC-only blocks,
 # where the reconstruction is exactly the planted gray value.
-# With this, no media codec in the module is stubbed; see SURVEY §8.
+# With this, no media codec in the module is stubbed.
 # (Reference anchor: the reference has no media path at all — this is
 # north-star training-pipeline surface, SURVEY §2.9.)
 # ---------------------------------------------------------------------------

@@ -10163,7 +10163,7 @@ def ps_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     # results via pandas.sort_values over raw columns, which cannot
     # factorize list cells (r07 driver-red: "unhashable type: 'list'"),
     # so top-level output columns must be scalars (enforced repo-wide by
-    # tools/oracle_type_lint.py).
+    # tests/test_oracle_types.py).
     oracle="""
     SELECT vec_id, scale_abs,
            array_to_string(
@@ -17079,7 +17079,7 @@ def scale10_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "inv_partition_layout",
     # partition-layout invariance, promoted from a session-only check
-    # (SURVEY §8 item f) to an oracle-backed entry: the oracle computes
+    # to an oracle-backed entry: the oracle computes
     # the same metrics independently per layout_id over replicated rows
     # and folds; every metric is integer (per-row micros) so the four
     # physically different Spark layouts must land bit-identical
@@ -17113,7 +17113,7 @@ def scale10_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def inv_partition_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-layout invariance as an oracle-backed entry (VERDICT r10
-    task 5; previously a session-only 3-config check, SURVEY §8 item f):
+    task 5; previously a session-only 3-config check):
     the SAME lineitem aggregate computed under four physically different
     layouts — natural parquet splits, hash-keyed repartition(7,
     l_orderkey), keyless round-robin repartition(13), and
@@ -17504,80 +17504,8 @@ def scale10_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Registry ordering: the entries named here come first in queries(), the
-# rest follow in registration order. Every named entry is oracle-backed.
-# ---------------------------------------------------------------------------
-
-_WINDOW_PRIORITY: tuple[str, ...] = (
-    # -- staleness-forced: closures include the auto-default LSH family --
-    "simsearch_lsh_topk",
-    "simsearch_ann_join",
-    "dedup_cosine_near",
-    "simsearch_ann_auto_planes",
-    # -- r11 new entries (same-round verdicts) --
-    "scale10_asof_join",
-    "scale10_stream_rollup",
-    "inv_partition_layout",
-    "inv_asof_tie_layouts",
-    "scale10_triangles",
-    "scale10_components",
-    # -- staleness-forced: closures include the tie-deterministic as-of --
-    "asof_join_events",
-    "asof_join_tolerance",
-    "j9_asof_nearest",
-    # -- r11 optimization re-queues (closures changed this round) --
-    "ind_recursive_family",
-    "stock_feature_frame",
-    "mm_container_headers",
-    "mm_gif_jpeg_headers",
-    "s_binaryfile_scan",
-    # -- rolling refresh: the last 6 r03-latest oracle-backed --
-    "q2_min_balance_supplier",
-    "q11_important_parts",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q22_sales_opportunity",
-    # -- rolling refresh: the 36 r04-latest oracle-backed --
-    "a7_grouping_sets",
-    "a8_summary_describe",
-    "a9_corr_pairs",
-    "curate_docs_with_embeddings",
-    "dedup_simhash_near",
-    "fn_array_suite",
-    "ind_cci20",
-    "merge_latest_events",
-    "merge_scd2_history",
-    "mv_incremental_pricing",
-    "s_json_roundtrip",
-    "s_orc_roundtrip",
-    "samp_stratified_docs",
-    "scd2_snapshot_asof",
-    "simsearch_pq_topk",
-    "stock_closed_form_indicators",
-    "stock_fixture_daily_label",
-    "stream_ema_user",
-    "stream_interval_join",
-    "stream_session_30m",
-    "stream_sliding_2d",
-    "stream_static_enrich",
-    "stream_topk_users_daily",
-    "stream_tumbling_daily",
-    "stream_upsert_latest",
-    "w1_lag_label_parity",
-)
-
-
 def queries() -> dict[str, QueryFn]:
-    ordered: dict[str, QueryFn] = {}
-    for name in _WINDOW_PRIORITY:
-        if name in _QUERIES:
-            ordered[name] = _QUERIES[name]
-    for name, fn in _QUERIES.items():
-        if name not in ordered:
-            ordered[name] = fn
-    return ordered
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -82,7 +82,6 @@ def get_session(
     app_name: str = "big_data_analysis_for_stock_market_data_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    legacy_time_parser: bool = False,
     configs: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
@@ -93,9 +92,6 @@ def get_session(
         (cluster deploys must not hardcode a master — reference hardcoded
         ``yarn`` at ``G_2_rf_nordd.py:17``).
     shuffle_partitions : post-shuffle partition count before AQE coalescing.
-    legacy_time_parser : compat flag replicating the reference's pinned
-        ``spark.sql.legacy.timeParserPolicy=LEGACY`` (``G_2_rf_nordd.py:21``);
-        the engine default is the modern parser.
     configs : extra/overriding Spark confs, applied last.
     """
     cpus = default_parallelism()
@@ -112,8 +108,6 @@ def get_session(
         # (observed UNABLE_TO_ACQUIRE_MEMORY). Only effective at JVM launch;
         # a cluster deploy sets executor memory through spark-submit.
         conf.setdefault("spark.driver.memory", default_driver_memory())
-    if legacy_time_parser:
-        conf["spark.sql.legacy.timeParserPolicy"] = "LEGACY"
     if configs:
         conf.update(configs)
     for k, v in conf.items():

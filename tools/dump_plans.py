@@ -1,7 +1,5 @@
 """Dump ``.explain("formatted")`` for headline (or named) queries into
-``plans/$SPARK_GRAFT_PLAN_DIR/<query>_<tag>.txt`` (default ``plans/r12``) —
-the before/after evidence files the optimization round commits alongside
-code changes.
+``plans/<query>_<tag>.txt`` — before/after evidence for a plan change.
 
 Usage: python tools/dump_plans.py <tag> [query ...]
        (no query names = every bench HEADLINE entry)
@@ -35,14 +33,13 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_DIR", "r12"))
+        os.path.abspath(__file__))), "plans")
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_session(app_name="dump_plans")
     qs = registry.queries()
     if not names:
-        names = [n for n in bench.HEADLINE if n in qs]
+        names = bench.HEADLINE
     for name in names:
         df = qs[name](spark, sf_dir)
         text = P.explain_str(df, "formatted")

@@ -25,9 +25,11 @@ distributed histogram aggregation. Nothing here collects rows to the driver.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from collections.abc import Sequence
 
+from pyspark import StorageLevel
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LinearSVC, RandomForestClassifier
 from pyspark.ml.feature import PCA, StandardScaler, VectorAssembler
@@ -117,6 +119,23 @@ def strip_training_summaries(model):
     return model.copy() if getattr(model, "hasSummary", False) else model
 
 
+@contextmanager
+def _cached_projection(df: DataFrame, cols: Sequence[str]):
+    """``df.select(*cols)``, cached for the duration of the block. When
+    that projection is already cached (the caller cached a frame of exactly
+    these columns), it is used as is and left cached: Spark matches caches
+    by plan, so unpersisting it would drop the caller's cache."""
+    projected = df.select(*cols)
+    owned = projected.storageLevel == StorageLevel.NONE
+    if owned:
+        projected = projected.cache()
+    try:
+        yield projected
+    finally:
+        if owned:
+            projected.unpersist()
+
+
 def _fit(
     df: DataFrame,
     estimator,
@@ -131,8 +150,7 @@ def _fit(
     from big_data_analysis_for_stock_market_data_spark.ml.metrics import binary_metrics
 
     pipeline = make_pipeline(estimator, feature_cols, transform, pca_k)
-    projected = df.select(*feature_cols, label_col).cache()
-    try:
+    with _cached_projection(df, [*feature_cols, label_col]) as projected:
         train, test = projected.randomSplit(
             [train_fraction, 1.0 - train_fraction], seed=seed
         )
@@ -143,8 +161,6 @@ def _fit(
             binary_metrics(predictions, label_col=label_col) if evaluate else {}
         )
         return FitResult(model=model, predictions=predictions, metrics=metrics)
-    finally:
-        projected.unpersist()
 
 
 def train_random_forest(
@@ -295,11 +311,8 @@ def cross_validate_rf(
         estimator=pipeline, estimatorParamMaps=grid, evaluator=evaluator,
         numFolds=num_folds, parallelism=parallelism, seed=seed,
     )
-    projected = df.select(*feature_cols, label_col).cache()
-    try:
+    with _cached_projection(df, [*feature_cols, label_col]) as projected:
         model = cv.fit(projected)
-    finally:
-        projected.unpersist()
     best_rf = model.bestModel.stages[-1]
     best = {
         "num_trees": float(best_rf.getNumTrees),
@@ -401,8 +414,7 @@ def train_rf_grouped(
         numTrees=num_trees, maxDepth=max_depth, seed=seed,
     )
     pipeline = Pipeline(stages=grouped_feature_stages(groups) + [rf])
-    projected = df.select(*all_cols, label_col).cache()
-    try:
+    with _cached_projection(df, [*all_cols, label_col]) as projected:
         train, test = projected.randomSplit(
             [train_fraction, 1.0 - train_fraction], seed=seed
         )
@@ -413,8 +425,6 @@ def train_rf_grouped(
             binary_metrics(predictions, label_col=label_col) if evaluate else {}
         )
         return FitResult(model=model, predictions=predictions, metrics=metrics)
-    finally:
-        projected.unpersist()
 
 
 def pca_explained_variance(

@@ -334,11 +334,15 @@ def _recursive_apply(
     """Shared applyInPandas scaffold: one group per partition key, sorted by
     ``order_by`` inside the pandas function, schema = input + new columns.
 
-    The pre-shuffle is pinned with an explicit partition count
-    (REPARTITION_BY_NUM): AQE's byte-based coalescing would otherwise shrink
-    a small-but-CPU-heavy Python stage to a couple of tasks (observed 3
-    tasks on 32 cores — the bytes are tiny, the compute is not). The groupBy
-    reuses this hash partitioning, so no second exchange appears."""
+    The pre-shuffle asks for an explicit partition count
+    (REPARTITION_BY_NUM), which AQE does not coalesce, and the groupBy
+    reuses its hash partitioning, so no second exchange appears. The count
+    holds only when this exchange is planned: when the input already comes
+    hash-partitioned by the same keys, ``EnsureRequirements`` removes it,
+    and the upstream exchange is coalesced by bytes as usual. Under
+    ``stock.feature_frame`` the day-grain windows' exchange already gives
+    ``hashpartitioning(symbol, n)``; AQE coalesces it, so at 10,000 bars
+    every key runs in one Python task."""
     if isinstance(partition_by, str):
         partition_by = [partition_by]
     from big_data_analysis_for_stock_market_data_spark.operators.windows import (

@@ -5045,7 +5045,7 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["user_id", "event_type"], order=["ts", "event_id"],
         payload=["ts", "value", "event_id"],
     )
-    return spark.read.parquet(target).select(
+    return read_parquet(spark, target).select(
         "user_id", "event_type",
         F.col("ts").alias("last_ts"),
         F.col("value").alias("last_value"),
@@ -8137,7 +8137,7 @@ def s_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_type", "ts", "value")
     out_dir = tempfile.mkdtemp(prefix="engine_part_rt_")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out_dir)
-    back = spark.read.parquet(out_dir).filter(F.col("event_type") == "click")
+    back = read_parquet(spark, out_dir).filter(F.col("event_type") == "click")
     return (
         back.groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -8212,7 +8212,7 @@ def s_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = tempfile.mkdtemp(prefix="engine_zorder_rt_")
     zorder_write(li, out_dir, cols=["l_partkey", "l_suppkey"], n_files=8,
                  bits_per_col=8)
-    back = spark.read.parquet(out_dir)
+    back = read_parquet(spark, out_dir)
     return (
         back.groupBy("l_suppkey")
         .agg(
@@ -12791,7 +12791,7 @@ def s_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         f for f in os.listdir(out_dir)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     ])
-    back = spark.read.parquet(out_dir)
+    back = read_parquet(spark, out_dir)
     contract = (
         back.agg(F.count(F.lit(1)).alias("__n"))
         .select(
@@ -15426,7 +15426,7 @@ def s_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
         .partitionBy("event_type")
         .parquet(out_dir)
     )
-    back = spark.read.parquet(out_dir)
+    back = read_parquet(spark, out_dir)
     return (
         back.groupBy("event_type")
         .agg(

@@ -258,10 +258,13 @@ def feature_frame(
     Stage order is a measured plan choice: the day-grain windows and the
     label depend only on RAW columns, so they run FIRST, on the narrow
     6-column bars — their sorts move ~7x less data than on the ~45-column
-    enriched frame, and the indicator pass's repartition then reuses the
-    window exchange's clustering instead of re-shuffling the full enriched
-    frame (was: windows after enrichment = +25 s of the 43 s pipeline at
-    the 671k-row reference scale).
+    enriched frame, and the indicator pass reuses the window exchange's
+    ``hashpartitioning(symbol, n)`` instead of re-shuffling the full
+    enriched frame (was: windows after enrichment = +25 s of the 43 s
+    pipeline at the 671k-row reference scale). The indicator pass's own
+    partition-count pin is therefore removed from the plan, and AQE
+    coalesces the window exchange by bytes: on small inputs (10,000 bars)
+    the whole Python pass runs in one task.
 
     ``cuts`` is not read. It is kept for callers that pass
     ``**feature_hints(bars)``, such as ``perfbench/stockload.py``."""

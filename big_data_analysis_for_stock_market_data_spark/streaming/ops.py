@@ -51,7 +51,8 @@ def read_stream_parquet(
     Applies the same TIMESTAMP(NANOS)->micros normalization as the batch
     reader (sources/io.py) so batch and stream agree on types."""
     from big_data_analysis_for_stock_market_data_spark.sources.io import (
-        _footer_nano_columns,
+        _footer,
+        _nano_columns,
         _nanos_to_timestamp,
     )
 
@@ -60,7 +61,12 @@ def read_stream_parquet(
     # TimestampType) and converted back; micros/millis-backed timestamp
     # columns stream straight through as TimestampType. Treating every
     # timestamp as nanos would shrink micros epochs ~1000x (into Jan 1970).
-    footer_nanos = _footer_nano_columns(path)
+    # A source directory with no file yet has no footer and no nanos.
+    found = _footer(spark, path)
+    ts_cols = [
+        f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)
+    ]
+    footer_nanos = _nano_columns(found[0], ts_cols) if found is not None else set()
     if footer_nanos and (
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true"
     ):
@@ -665,6 +671,9 @@ def run_upsert_to_parquet(
     from big_data_analysis_for_stock_market_data_spark.operators.aggregates import (
         latest_by_key,
     )
+    from big_data_analysis_for_stock_market_data_spark.sources.io import (
+        read_parquet,
+    )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -676,7 +685,7 @@ def run_upsert_to_parquet(
         fs = hpath.getFileSystem(hconf)
         _recover_target(fs, hpath, aside)
         if fs.exists(hpath):
-            current = spark.read.parquet(path).select(*keys, *payload)
+            current = read_parquet(spark, path).select(*keys, *payload)
             resolved = latest_by_key(
                 current.unionByName(resolved.select(*keys, *payload)),
                 keys, order, payload,

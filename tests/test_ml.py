@@ -63,6 +63,30 @@ def test_confusion_matrix_totals(labeled_df):
     assert {(r.label, r.prediction) for r in rows} <= {(0, 0), (0, 1), (1, 0), (1, 1)}
 
 
+def test_fit_keeps_callers_cache(labeled_df):
+    # a caller that cached exactly the training columns keeps its cache:
+    # the fit's own cache-then-unpersist must not drop it
+    from pyspark import StorageLevel
+
+    surf = labeled_df.select(*FEATURES, "buy_or_sell").cache()
+    try:
+        assert surf.count() == 600
+        level = surf.storageLevel
+        assert level != StorageLevel.NONE
+        ml.train_random_forest(surf, FEATURES, num_trees=2, max_depth=2)
+        assert surf.storageLevel == level
+        groups = {"a": (["x1", "x2"], "scale", 0), "b": (["x3"], "scale", 0)}
+        ml.train_rf_grouped(surf, groups, num_trees=2, max_depth=2)
+        assert surf.storageLevel == level
+    finally:
+        surf.unpersist()
+    # a frame the fit cached itself is released again
+    ml.train_random_forest(labeled_df, FEATURES, num_trees=2, max_depth=2)
+    assert labeled_df.select(*FEATURES, "buy_or_sell").storageLevel == (
+        StorageLevel.NONE
+    )
+
+
 def test_pca_variance_ratios(labeled_df):
     ratios = pca_explained_variance(labeled_df, FEATURES, k=3)
     assert len(ratios) == 3

@@ -86,13 +86,17 @@ COPY_AS_IS = (
 def build_scaled(spark, out_dir: str) -> None:
     from pyspark.sql import functions as F
 
+    from big_data_analysis_for_stock_market_data_spark.sources.io import (
+        read_parquet,
+    )
+
     for t in COPY_AS_IS:
         shutil.copy(
             os.path.join(SF_DIR, f"{t}.parquet"),
             os.path.join(out_dir, f"{t}.parquet"),
         )
     for t, (shifts, rename_text) in SHIFTS.items():
-        base = spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet"))
+        base = read_parquet(spark, os.path.join(SF_DIR, f"{t}.parquet"))
         parts = []
         for i in range(SCALE):
             rep = base

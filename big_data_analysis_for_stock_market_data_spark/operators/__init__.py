@@ -35,8 +35,13 @@ def _file_length(sess, uri: str) -> int:
 
     A metadata call against the filesystem (no Spark job, no RDD); works for
     any scheme the session can read (file://, hdfs://, s3a://, gs://)."""
-    jvm = sess._jvm
-    path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri))
+    from big_data_analysis_for_stock_market_data_spark.sources.io import (
+        _jvm_class,
+    )
+
+    path = _jvm_class(sess, "org.apache.hadoop.fs.Path")(
+        _jvm_class(sess, "java.net.URI")(uri)
+    )
     fs = path.getFileSystem(sess._jsc.hadoopConfiguration())
     return int(fs.getFileStatus(path).getLen())
 

@@ -9,8 +9,9 @@ The container ships no media libraries (no PIL/librosa/ffmpeg). The
   only: PCM WAV samples (struct/numpy), 24-bit BMP pixels (raw rows,
   bottom-up flip, stride), 8-bit truecolor PNG pixels (stdlib zlib +
   all five scanline unfilter algorithms), GIF frames (pure-Python
-  variable-width LZW + palette resolution), and baseline JPEG —
-  grayscale AND interleaved 4:2:0/4:4:4 YCbCr color (canonical Huffman
+  variable-width LZW + palette resolution), and JPEG through one
+  decoder, ``decode_jpeg`` — baseline grayscale AND interleaved
+  4:2:0/4:4:4 YCbCr color, and progressive grayscale (canonical Huffman
   entropy decode, per-component table routing and DC prediction with
   restart markers, zig-zag, dequantize, float IDCT, chroma upsampling,
   JFIF YCbCr->RGB). No codec is stubbed.
@@ -673,7 +674,7 @@ def resize_images(
     binary`` (exactly width*height*3 bytes) + ``resized_width``/
     ``resized_height``.
 
-    ``decode_backend='native'`` REALLY decodes BMP/PNG/GIF/baseline-JPEG
+    ``decode_backend='native'`` REALLY decodes BMP/PNG/GIF/WebP/JPEG
     payloads and nearest-neighbor resamples them (resize_pixels_nearest),
     emitting raw top-down RGB bytes; undecodable payloads resize to null.
     ``decode_backend='stub'`` marks the remaining integration point
@@ -801,17 +802,18 @@ def frame_sample(
 # only. The "decode is blocked on PIL/librosa" boundary was narrower than
 # documented: PCM WAV needs struct/numpy, BMP is raw pixels, PNG needs
 # zlib (stdlib) plus the five scanline unfilter algorithms, GIF is a
-# pure-Python variable-width LZW, and baseline JPEG is a canonical-
-# Huffman entropy decode + float IDCT (end of this module). No codec is
-# stubbed; 'stub' now marks only formats beyond the native set.
+# pure-Python variable-width LZW, and JPEG is one canonical-Huffman
+# entropy decoder for baseline and progressive scans plus a float IDCT
+# (``decode_jpeg``, below). No codec is stubbed; 'stub' now marks only
+# formats beyond the native set.
 # ---------------------------------------------------------------------------
 
 
 def _decode_any_pixels(p: bytes) -> "np.ndarray | None":
     """Route a payload through ALL the native pixel decoders (BMP, PNG,
-    GIF, WebP lossless, baseline gray/color + progressive JPEG —
-    grayscale expanded to RGB, RGBA dropped to RGB); None if
-    undecodable."""
+    GIF, WebP lossless, then ``decode_jpeg`` for baseline gray/color and
+    progressive JPEG — grayscale expanded to RGB, RGBA dropped to RGB);
+    None if undecodable."""
     px = decode_bmp_pixels(p)
     if px is None:
         px = decode_png_pixels(p)
@@ -826,7 +828,7 @@ def _decode_any_pixels(p: bytes) -> "np.ndarray | None":
         if w is not None:
             px = w[:, :, :3]
     if px is None:
-        c = decode_jpeg_color(p) or decode_jpeg_progressive(p)
+        c = decode_jpeg(p)
         if c is not None:
             # 1-component JPEGs decode to (h, w): expand gray to RGB
             px = (
@@ -1493,8 +1495,11 @@ def gif_roundtrip_stats(
 # DC prediction (and its reset at restart markers), AC run-length /
 # ZRL / EOB handling, zig-zag order, and dequantization. The pixel path
 # (IDCT + level shift + clamp) is verified on flat DC-only blocks,
-# where the reconstruction is exactly the planted gray value.
-# With this, no media codec in the module is stubbed.
+# where the reconstruction is exactly the planted gray value. The gray,
+# color and progressive encoders share one header writer
+# (``_jpeg_header``) and one block coder (``_jpeg_code_block``);
+# ``decode_jpeg`` decodes all three. With this, no media codec in the
+# module is stubbed.
 # (Reference anchor: the reference has no media path at all — this is
 # north-star training-pipeline surface, SURVEY §2.9.)
 # ---------------------------------------------------------------------------
@@ -1549,6 +1554,11 @@ def _jpeg_canonical_codes(bits, vals) -> dict:
     return codes
 
 
+#: symbol -> (length, code) for the Annex-K tables every encoder writes.
+_JPEG_DC_CODES = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+_JPEG_AC_CODES = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+
+
 class _JpegBitWriter:
     """MSB-first bit accumulator with the mandatory 0x00 byte stuffed
     after every emitted 0xFF (T.81 B.1.1.5)."""
@@ -1576,6 +1586,110 @@ class _JpegBitWriter:
             self.write((1 << pad) - 1, pad)
 
 
+def _jpeg_code_block(bw: _JpegBitWriter, diff: "int | None", band) -> None:
+    """Huffman-code one block with the Annex-K tables (T.81 F.1.2): the
+    DC difference ``diff`` (None in a progressive AC scan), then the
+    integer AC values of ``band`` as run/size symbols — ZRL per 16
+    zeros, EOB for a zero tail. An empty ``band`` codes the DC alone."""
+    if diff is not None:
+        s = abs(diff).bit_length()
+        ln, code = _JPEG_DC_CODES[s]
+        bw.write(code, ln)
+        if s:
+            bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
+    run = 0
+    for v in band:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            ln, code = _JPEG_AC_CODES[0xF0]  # ZRL: run of 16 zeros
+            bw.write(code, ln)
+            run -= 16
+        s = abs(v).bit_length()
+        ln, code = _JPEG_AC_CODES[(run << 4) | s]
+        bw.write(code, ln)
+        bw.write(v if v > 0 else v + (1 << s) - 1, s)
+        run = 0
+    if run:
+        ln, code = _JPEG_AC_CODES[0x00]  # EOB
+        bw.write(code, ln)
+
+
+def _jpeg_header(
+    sof: int, w_px: int, h_px: int, comps, quants, restart_interval: int = 0
+) -> bytearray:
+    """SOI, JFIF APP0, one DQT per table of ``quants`` (None = all
+    ones), the SOFn frame header over ``comps`` — (id, HV sampling byte,
+    quant table id) per component — the Annex-K DC and AC Huffman specs
+    under every table id of ``quants``, and a DRI when
+    ``restart_interval`` is set."""
+    import struct
+
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
+    out += struct.pack(">HHBB", 1, 1, 0, 0)  # density 1x1, no thumbnail
+    for tq, q in enumerate(quants):
+        q = np.ones(64, dtype=np.uint8) if q is None else np.asarray(
+            q, dtype=np.uint8
+        )
+        out += b"\xff\xdb" + struct.pack(">HB", 67, tq) + bytes(q)
+    out += bytes((0xFF, sof)) + struct.pack(
+        ">HBHHB", 8 + 3 * len(comps), 8, h_px, w_px, len(comps)
+    )
+    for comp in comps:
+        out += bytes(comp)
+    for th in range(len(quants)):
+        for tc, bits, vals in (
+            (0, _JPEG_DC_BITS, _JPEG_DC_VALS),
+            (1, _JPEG_AC_BITS, _JPEG_AC_VALS),
+        ):
+            out += b"\xff\xc4" + struct.pack(
+                ">HB", 2 + 1 + 16 + len(vals), (tc << 4) | th
+            ) + bytes(bits) + bytes(vals)
+    if restart_interval:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+    return out
+
+
+def _jpeg_sos(comps, ss: int = 0, se: int = 63, ah_al: int = 0) -> bytes:
+    """SOS header over ``comps`` (as in ``_jpeg_header``): each
+    component codes with the DC and AC tables of its quant table id."""
+    import struct
+
+    return (
+        b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comps), len(comps))
+        + bytes(b for cid, _, tq in comps for b in (cid, 0x11 * tq))
+        + bytes((ss, se, ah_al))
+    )
+
+
+def _jpeg_mcu_scan(comp_blocks, units, restart_interval: int) -> bytes:
+    """Entropy-coded data of one sequential scan: per MCU, ``units[c]``
+    consecutive blocks of component c's (n_mcus * units[c], 64)
+    zig-zag array, DC predicted per component and reset at the RSTn
+    marker written every ``restart_interval`` MCUs."""
+    rows = [np.asarray(b, dtype=np.int64).tolist() for b in comp_blocks]
+    out = bytearray()
+    bw = _JpegBitWriter()
+    preds = [0] * len(rows)
+    rst = 0
+    for m in range(len(rows[0]) // units[0]):
+        if restart_interval and m and m % restart_interval == 0:
+            bw.flush_align()
+            out += bw.buf
+            bw = _JpegBitWriter()
+            out += bytes((0xFF, 0xD0 + rst))
+            rst = (rst + 1) % 8
+            preds = [0] * len(rows)
+        for c, (blocks, u) in enumerate(zip(rows, units)):
+            for zz in blocks[m * u: (m + 1) * u]:
+                _jpeg_code_block(bw, zz[0] - preds[c], zz[1:])
+                preds[c] = zz[0]
+    bw.flush_align()
+    return bytes(out + bw.buf)
+
+
 def build_jpeg_from_coeffs(
     zz_blocks: "np.ndarray",
     blocks_w: int,
@@ -1589,82 +1703,17 @@ def build_jpeg_from_coeffs(
     ``zz_blocks`` — shape (n_blocks, 64), zig-zag order, DC at [*, 0] —
     with DC differential prediction, ZRL/EOB run-length AC coding,
     0xFF00 byte stuffing, and RST0-7 markers every ``restart_interval``
-    MCUs. Roundtrip partner of ``decode_jpeg_baseline``."""
-    import struct
-
+    MCUs (one block each). Roundtrip partner of ``decode_jpeg``."""
     zz_blocks = np.asarray(zz_blocks, dtype=np.int64)
-    n_blocks = blocks_w * blocks_h
-    if zz_blocks.shape != (n_blocks, 64):
+    if zz_blocks.shape != (blocks_w * blocks_h, 64):
         raise ValueError("zz_blocks must be (blocks_w*blocks_h, 64)")
-    q = np.ones(64, dtype=np.uint8) if quant is None else np.asarray(
-        quant, dtype=np.uint8
+    comps = ((1, 0x11, 0),)  # component 1, 1x1 sampling, quant 0
+    out = _jpeg_header(
+        0xC0, 8 * blocks_w, 8 * blocks_h, comps, [quant], restart_interval
     )
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
-    out += struct.pack(">HHBB", 1, 1, 0, 0)  # density 1x1, no thumbnail
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(q)
-    h_px, w_px = 8 * blocks_h, 8 * blocks_w
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h_px, w_px, 1)
-    out += bytes((1, 0x11, 0))  # component 1, 1x1 sampling, quant 0
-    out += (
-        b"\xff\xc4"
-        + struct.pack(">H", 2 + 1 + 16 + len(_JPEG_DC_VALS))
-        + b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-    )
-    out += (
-        b"\xff\xc4"
-        + struct.pack(">H", 2 + 1 + 16 + len(_JPEG_AC_VALS))
-        + b"\x10" + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes((1, 0x00))
-    out += bytes((0, 63, 0))  # Ss, Se, Ah/Al
-
-    bw = _JpegBitWriter()
-    pred = 0
-    rst = 0
-    for b in range(n_blocks):
-        if restart_interval and b and b % restart_interval == 0:
-            bw.flush_align()
-            out += bw.buf
-            bw = _JpegBitWriter()
-            out += bytes((0xFF, 0xD0 + rst))
-            rst = (rst + 1) % 8
-            pred = 0
-        zz = zz_blocks[b]
-        diff = int(zz[0]) - pred
-        pred = int(zz[0])
-        s = abs(diff).bit_length()
-        ln, code = dc_codes[s]
-        bw.write(code, ln)
-        if s:
-            bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-        run = 0
-        for k in range(1, 64):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                ln, code = ac_codes[0xF0]  # ZRL: run of 16 zeros
-                bw.write(code, ln)
-                run -= 16
-            s = abs(v).bit_length()
-            ln, code = ac_codes[(run << 4) | s]
-            bw.write(code, ln)
-            bw.write(v if v > 0 else v + (1 << s) - 1, s)
-            run = 0
-        if run:
-            ln, code = ac_codes[0x00]  # EOB
-            bw.write(code, ln)
-    bw.flush_align()
-    out += bw.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    out += _jpeg_sos(comps)
+    out += _jpeg_mcu_scan([zz_blocks], [1], restart_interval)
+    return bytes(out + b"\xff\xd9")  # EOI
 
 
 class _JpegBitReader:
@@ -1694,7 +1743,8 @@ class _JpegBitReader:
                 return False
         else:
             self.pos += 1
-        self.acc = (self.acc << 8) | b
+        # keep only the n unread bits: bits above them are stale
+        self.acc = ((self.acc & ((1 << self.n) - 1)) << 8) | b
         self.n += 8
         return True
 
@@ -1702,18 +1752,14 @@ class _JpegBitReader:
         if self.n == 0 and not self._fill():
             return None
         self.n -= 1
-        bit = (self.acc >> self.n) & 1
-        self.acc &= (1 << self.n) - 1
-        return bit
+        return (self.acc >> self.n) & 1
 
     def receive(self, s: int) -> "int | None":
-        v = 0
-        for _ in range(s):
-            bit = self.read_bit()
-            if bit is None:
+        while self.n < s:
+            if not self._fill():
                 return None
-            v = (v << 1) | bit
-        return v
+        self.n -= s
+        return (self.acc >> self.n) & ((1 << s) - 1)
 
     def sync_restart(self) -> bool:
         self.acc = 0
@@ -1730,13 +1776,12 @@ class _JpegBitReader:
 
 
 def _jpeg_huff_decode(reader, table) -> "int | None":
-    length, code = 0, 0
-    while length < 16:
+    code = 0
+    for length in range(1, 17):
         bit = reader.read_bit()
         if bit is None:
             return None
         code = (code << 1) | bit
-        length += 1
         sym = table.get((length, code))
         if sym is not None:
             return sym
@@ -1754,15 +1799,73 @@ def _idct_matrix() -> "np.ndarray":
     return c
 
 
-def decode_jpeg_baseline(payload: bytes) -> "dict | None":
-    """REAL baseline-JPEG decode, library-free: marker walk (DQT, SOF0,
-    DHT, DRI, SOS), canonical Huffman table construction, entropy decode
-    with 0xFF00 de-stuffing, DC prediction with restart-marker reset,
-    AC run-length / ZRL / EOB, zig-zag placement, dequantization, and
-    float IDCT to clamped uint8 pixels. Grayscale baseline only
-    (progressive / multi-component return None — out of native scope).
-    Returns {'zigzag': (n_blocks, 64) int64 dequantized coefficients in
-    MCU order, 'pixels': (h, w) uint8, 'width', 'height'}."""
+def _jpeg_dc_diff(reader, table) -> "int | None":
+    """One DC difference: its size category, then that many bits."""
+    s = _jpeg_huff_decode(reader, table)
+    if not s:
+        return s
+    v = reader.receive(s)
+    return None if v is None else _jpeg_extend(v, s)
+
+
+def _jpeg_decode_seq_scan(reader, plan, restart_interval) -> bool:
+    """Decode one sequential scan (T.81 F.2) in place. ``plan`` holds,
+    per component, its (n_mcus * units, 64) coefficient accumulator,
+    its blocks per MCU and its DC and AC tables; DC prediction is per
+    component and resets at the RSTn expected every
+    ``restart_interval`` MCUs. Returns False on a bitstream error."""
+    preds = [0] * len(plan)
+    for m in range(len(plan[0][0]) // plan[0][1]):
+        if restart_interval and m and m % restart_interval == 0:
+            if not reader.sync_restart():
+                return False
+            preds = [0] * len(plan)
+        for ci, (coef, units, dc_tab, ac_tab) in enumerate(plan):
+            for zz in coef[m * units: (m + 1) * units]:
+                diff = _jpeg_dc_diff(reader, dc_tab)
+                if diff is None:
+                    return False
+                preds[ci] += diff
+                zz[0] = preds[ci]
+                k = 1
+                while k < 64:
+                    rs = _jpeg_huff_decode(reader, ac_tab)
+                    if rs is None:
+                        return False
+                    if rs == 0x00:  # EOB
+                        break
+                    if rs == 0xF0:  # ZRL
+                        k += 16
+                        continue
+                    k += rs >> 4
+                    if k > 63:
+                        return False
+                    s = rs & 0x0F
+                    v = reader.receive(s)
+                    if v is None:
+                        return False
+                    zz[k] = _jpeg_extend(v, s)
+                    k += 1
+    return True
+
+
+def decode_jpeg(payload: bytes) -> "dict | None":
+    """REAL JPEG decode, library-free — the module's one JPEG decoder.
+    One marker walk (DQT, SOFn, DHT, DRI, SOS) picks the scan decoder
+    from the frame header: SOF0 (baseline, 1 or 3 components) decodes
+    its one interleaved scan — canonical Huffman tables, 0xFF00
+    de-stuffing, per-component table routing and DC prediction reset
+    at restart markers, AC run-length / ZRL / EOB; SOF2 (progressive,
+    1 component) accumulates coefficients over every scan
+    (``_jpeg_decode_prog_scan``). Both end in the same reconstruction:
+    dequantize, float IDCT, block placement, nearest-neighbor chroma
+    upsampling and the JFIF YCbCr->RGB conversion. A 1-component frame
+    is non-interleaved, so its MCU is one block whatever sampling it
+    declares (T.81 A.2.2). Other SOFs, 16-bit quant tables, progressive
+    restart intervals and malformed streams return None. Returns
+    {'zigzag_comps': [(n_blocks, 64) int64 dequantized, MCU order] per
+    component, 'pixels': (h, w) or (h, w, 3) uint8, 'width', 'height',
+    'n_components', 'sampling'}."""
     import struct
 
     if payload is None or payload[:2] != b"\xff\xd8":
@@ -1771,16 +1874,16 @@ def decode_jpeg_baseline(payload: bytes) -> "dict | None":
         pos = 2
         quant = {}
         huff = {}  # (class, id) -> {(length, code): symbol}
-        width = height = None
-        comp_q = 0
-        restart_interval = 0
-        scan_pos = None
+        sof = None
+        comps = []  # (comp_id, h, v, tq)
+        coefs = []  # per component: (n_mcus * h * v, 64) accumulator
+        restart_interval = n_scans = 0
         while pos + 4 <= len(payload):
             if payload[pos] != 0xFF:
                 return None
             marker = payload[pos + 1]
             if marker == 0xD9:
-                return None  # EOI before SOS
+                break
             seg_len = struct.unpack_from(">H", payload, pos + 2)[0]
             seg = payload[pos + 4: pos + 2 + seg_len]
             if marker == 0xDB:
@@ -1793,12 +1896,26 @@ def decode_jpeg_baseline(payload: bytes) -> "dict | None":
                         seg, dtype=np.uint8, count=64, offset=off + 1
                     ).astype(np.int64)
                     off += 65
-            elif marker == 0xC0:
+            elif marker in (0xC0, 0xC2):
                 _, height, width, n_comp = struct.unpack_from(">BHHB", seg)
-                if n_comp != 1:
+                if sof or n_comp not in ((1, 3) if marker == 0xC0 else (1,)):
                     return None
-                comp_q = seg[8]
-            elif marker in (0xC1, 0xC2, 0xC3):  # non-baseline SOF
+                sof = marker
+                for ci in range(n_comp):
+                    hv = seg[7 + 3 * ci]
+                    h_f, v_f = (hv >> 4, hv & 0x0F) if n_comp > 1 else (1, 1)
+                    if h_f not in (1, 2) or v_f not in (1, 2):
+                        return None
+                    comps.append((seg[6 + 3 * ci], h_f, v_f, seg[8 + 3 * ci]))
+                hmax = max(c[1] for c in comps)
+                vmax = max(c[2] for c in comps)
+                mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
+                mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
+                coefs = [
+                    np.zeros((mcus_x * mcus_y * h * v, 64), dtype=np.int64)
+                    for _, h, v, _ in comps
+                ]
+            elif marker in (0xC1, 0xC3):  # extended / lossless SOF
                 return None
             elif marker == 0xC4:
                 off = 0
@@ -1815,78 +1932,78 @@ def decode_jpeg_baseline(payload: bytes) -> "dict | None":
             elif marker == 0xDD:
                 restart_interval = struct.unpack_from(">H", seg)[0]
             elif marker == 0xDA:
-                dc_id = seg[2] >> 4
-                ac_id = seg[2] & 0x0F
-                scan_pos = pos + 2 + seg_len
-                break
-            pos += 2 + seg_len
-        if scan_pos is None or width is None:
-            return None
-        dc_tab = huff.get((0, dc_id))
-        ac_tab = huff.get((1, ac_id))
-        q = quant.get(comp_q)
-        if dc_tab is None or ac_tab is None or q is None:
-            return None
-        blocks_w = (width + 7) // 8
-        blocks_h = (height + 7) // 8
-        n_blocks = blocks_w * blocks_h
-        reader = _JpegBitReader(payload, scan_pos)
-        zz_out = np.zeros((n_blocks, 64), dtype=np.int64)
-        pred = 0
-        for b in range(n_blocks):
-            if restart_interval and b and b % restart_interval == 0:
-                if not reader.sync_restart():
+                n_scan = seg[0]
+                tabs = {seg[1 + 2 * i]: seg[2 + 2 * i] for i in range(n_scan)}
+                if not sof or n_scan != len(comps) or any(
+                    c[0] not in tabs for c in comps
+                ):
                     return None
-                pred = 0
-            s = _jpeg_huff_decode(reader, dc_tab)
-            if s is None:
-                return None
-            diff = 0
-            if s:
-                v = reader.receive(s)
-                if v is None:
-                    return None
-                diff = _jpeg_extend(v, s)
-            pred += diff
-            zz = zz_out[b]
-            zz[0] = pred
-            k = 1
-            while k < 64:
-                rs = _jpeg_huff_decode(reader, ac_tab)
-                if rs is None:
-                    return None
-                if rs == 0x00:  # EOB
+                # per component: accumulator, blocks per MCU, DC, AC table
+                plan = [
+                    (coef, h * v, huff.get((0, tabs[cid] >> 4)),
+                     huff.get((1, tabs[cid] & 0x0F)))
+                    for coef, (cid, h, v, _) in zip(coefs, comps)
+                ]
+                reader = _JpegBitReader(payload, pos + 2 + seg_len)
+                n_scans += 1
+                if sof == 0xC0:
+                    if any(None in p[2:] for p in plan) or not (
+                        _jpeg_decode_seq_scan(reader, plan, restart_interval)
+                    ):
+                        return None
                     break
-                if rs == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                k += rs >> 4
-                if k > 63:
+                ss, se, ah_al = seg[1 + 2 * n_scan: 4 + 2 * n_scan]
+                if restart_interval or not _jpeg_decode_prog_scan(
+                    reader, coefs[0], ss, se, ah_al >> 4, ah_al & 0x0F,
+                    *plan[0][2:],
+                ):
                     return None
-                s = rs & 0x0F
-                v = reader.receive(s)
-                if v is None:
-                    return None
-                zz[k] = _jpeg_extend(v, s)
-                k += 1
-        deq = zz_out * q[None, :]
-        raster = np.zeros((n_blocks, 64), dtype=np.float64)
-        raster[:, list(_JPEG_ZIGZAG)] = deq
-        blocks = raster.reshape(n_blocks, 8, 8)
+                # the next marker follows the entropy-coded run
+                pos = reader.pos
+                continue
+            pos += 2 + seg_len
+        if not n_scans or any(tq not in quant for *_, tq in comps):
+            return None
         c = _idct_matrix()
-        pix = np.einsum("kn,bkl,lm->bnm", c, blocks, c) + 128.0
-        pix = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-        img = np.zeros((blocks_h * 8, blocks_w * 8), dtype=np.uint8)
-        for b in range(n_blocks):
-            r, col = divmod(b, blocks_w)
-            img[r * 8: r * 8 + 8, col * 8: col * 8 + 8] = pix[b]
+        planes = []
+        zz_comps = []
+        for coef, (_, h_f, v_f, tq) in zip(coefs, comps):
+            deq = coef * quant[tq][None, :]
+            zz_comps.append(deq)
+            raster = np.zeros_like(deq, dtype=np.float64)
+            raster[:, list(_JPEG_ZIGZAG)] = deq
+            pix = np.einsum(
+                "kn,bkl,lm->bnm", c, raster.reshape(-1, 8, 8), c
+            ) + 128.0
+            pix = np.clip(np.round(pix), 0, 255)
+            # MCU-ordered blocks -> (MCU row, block row, pixel row) x
+            # (MCU col, block col, pixel col)
+            plane = pix.reshape(mcus_y, mcus_x, v_f, h_f, 8, 8).transpose(
+                0, 2, 4, 1, 3, 5
+            ).reshape(mcus_y * v_f * 8, mcus_x * h_f * 8)
+            plane = np.repeat(
+                np.repeat(plane, vmax // v_f, axis=0), hmax // h_f, axis=1
+            )
+            planes.append(plane[:height, :width])
+        if len(planes) == 1:
+            img = planes[0].astype(np.uint8)
+        else:
+            y, cb, cr = planes
+            r = y + 1.402 * (cr - 128.0)
+            g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+            b = y + 1.772 * (cb - 128.0)
+            img = np.clip(
+                np.round(np.stack([r, g, b], axis=2)), 0, 255
+            ).astype(np.uint8)
         return {
-            "zigzag": deq,
-            "pixels": img[:height, :width],
+            "zigzag_comps": zz_comps,
+            "pixels": img,
             "width": int(width),
             "height": int(height),
+            "n_components": len(comps),
+            "sampling": [(h_f, v_f) for _, h_f, v_f, _ in comps],
         }
-    except (struct.error, IndexError):
+    except (struct.error, IndexError, ValueError):
         return None
 
 
@@ -1935,14 +2052,12 @@ def jpeg_roundtrip_stats(
                 payload = build_jpeg_from_coeffs(
                     zz, bw_, bh_, restart_interval=2 if uid % 2 else 0
                 )
-                dec = decode_jpeg_baseline(payload)
+                dec = decode_jpeg(payload)
                 g = uid % 256
                 flat = np.zeros((2, 64), dtype=np.int64)
                 flat[:, 0] = 8 * (g - 128)
-                fdec = decode_jpeg_baseline(
-                    build_jpeg_from_coeffs(flat, 2, 1)
-                )
-                got = dec["zigzag"]
+                fdec = decode_jpeg(build_jpeg_from_coeffs(flat, 2, 1))
+                got = dec["zigzag_comps"][0]
                 rows.append({
                     id_col: uid,
                     "width": dec["width"],
@@ -2040,299 +2155,28 @@ def build_jpeg_color_from_coeffs(
     per-component DC prediction, and RST markers every
     ``restart_interval`` MCUs. Block arrays are in MCU-interleaved
     order: per MCU the h*v Y blocks raster-order, then one Cb, one Cr.
-    Roundtrip partner of ``decode_jpeg_color``."""
-    import struct
-
+    Roundtrip partner of ``decode_jpeg``."""
     hy, vy = y_sampling
     if hy not in (1, 2) or vy not in (1, 2):
         raise ValueError("y_sampling factors must be 1 or 2")
     n_mcus = mcus_x * mcus_y
-    y_per_mcu = hy * vy
     y_zz = np.asarray(y_zz, dtype=np.int64)
     cb_zz = np.asarray(cb_zz, dtype=np.int64)
     cr_zz = np.asarray(cr_zz, dtype=np.int64)
-    if y_zz.shape != (n_mcus * y_per_mcu, 64):
+    if y_zz.shape != (n_mcus * hy * vy, 64):
         raise ValueError("y_zz must be (mcus * h * v, 64)")
     if cb_zz.shape != (n_mcus, 64) or cr_zz.shape != (n_mcus, 64):
         raise ValueError("chroma blocks must be (mcus, 64)")
-    ql = (
-        np.ones(64, dtype=np.uint8) if quant_luma is None
-        else np.asarray(quant_luma, dtype=np.uint8)
+    comps = ((1, (hy << 4) | vy, 0), (2, 0x11, 1), (3, 0x11, 1))  # Y Cb Cr
+    out = _jpeg_header(
+        0xC0, 8 * hy * mcus_x, 8 * vy * mcus_y, comps,
+        [quant_luma, quant_chroma], restart_interval,
     )
-    qc = (
-        np.ones(64, dtype=np.uint8) if quant_chroma is None
-        else np.asarray(quant_chroma, dtype=np.uint8)
+    out += _jpeg_sos(comps)
+    out += _jpeg_mcu_scan(
+        [y_zz, cb_zz, cr_zz], [hy * vy, 1, 1], restart_interval
     )
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
-    out += struct.pack(">HHBB", 1, 1, 0, 0)
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(ql)
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x01" + bytes(qc)
-    h_px, w_px = 8 * vy * mcus_y, 8 * hy * mcus_x
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 17, 8, h_px, w_px, 3)
-    out += bytes((1, (hy << 4) | vy, 0))   # Y
-    out += bytes((2, 0x11, 1))             # Cb
-    out += bytes((3, 0x11, 1))             # Cr
-    for tc_th in (0x00, 0x10, 0x01, 0x11):
-        bits, vals = (
-            (_JPEG_DC_BITS, _JPEG_DC_VALS) if tc_th >> 4 == 0
-            else (_JPEG_AC_BITS, _JPEG_AC_VALS)
-        )
-        out += (
-            b"\xff\xc4" + struct.pack(">H", 2 + 1 + 16 + len(vals))
-            + bytes((tc_th,)) + bytes(bits) + bytes(vals)
-        )
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    out += bytes((1, 0x00, 2, 0x11, 3, 0x11))
-    out += bytes((0, 63, 0))
-
-    def emit_block(bw, zz, pred, dc_c, ac_c):
-        diff = int(zz[0]) - pred
-        s = abs(diff).bit_length()
-        ln, code = dc_c[s]
-        bw.write(code, ln)
-        if s:
-            bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-        run = 0
-        for k in range(1, 64):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                ln, code = ac_c[0xF0]
-                bw.write(code, ln)
-                run -= 16
-            s = abs(v).bit_length()
-            ln, code = ac_c[(run << 4) | s]
-            bw.write(code, ln)
-            bw.write(v if v > 0 else v + (1 << s) - 1, s)
-            run = 0
-        if run:
-            ln, code = ac_c[0x00]
-            bw.write(code, ln)
-        return int(zz[0])
-
-    bw = _JpegBitWriter()
-    preds = [0, 0, 0]
-    rst = 0
-    for m in range(n_mcus):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.flush_align()
-            out += bw.buf
-            bw = _JpegBitWriter()
-            out += bytes((0xFF, 0xD0 + rst))
-            rst = (rst + 1) % 8
-            preds = [0, 0, 0]
-        for j in range(y_per_mcu):
-            preds[0] = emit_block(
-                bw, y_zz[m * y_per_mcu + j], preds[0], dc_codes, ac_codes
-            )
-        preds[1] = emit_block(bw, cb_zz[m], preds[1], dc_codes, ac_codes)
-        preds[2] = emit_block(bw, cr_zz[m], preds[2], dc_codes, ac_codes)
-    bw.flush_align()
-    out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def decode_jpeg_color(payload: bytes) -> "dict | None":
-    """REAL baseline JPEG decode for 1- OR 3-component (YCbCr) images,
-    library-free: everything ``decode_jpeg_baseline`` does plus
-    interleaved-MCU scans with per-component sampling factors in
-    {1, 2}, per-component quant/Huffman table routing, per-component DC
-    prediction with restart reset, nearest-neighbor chroma upsampling,
-    and the JFIF YCbCr->RGB conversion. Progressive SOFs return None
-    (documented out of native scope). Returns {'zigzag_comps':
-    [(n_blocks, 64) int64 dequantized, MCU order] per component,
-    'pixels': (h, w) uint8 or (h, w, 3) uint8, 'width', 'height',
-    'n_components', 'sampling'}."""
-    import struct
-
-    if payload is None or payload[:2] != b"\xff\xd8":
-        return None
-    try:
-        pos = 2
-        quant = {}
-        huff = {}
-        width = height = None
-        comps = []   # (comp_id, h, v, tq)
-        scan_tabs = {}  # comp_id -> (dc_id, ac_id)
-        restart_interval = 0
-        scan_pos = None
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                return None
-            marker = payload[pos + 1]
-            if marker == 0xD9:
-                return None
-            seg_len = struct.unpack_from(">H", payload, pos + 2)[0]
-            seg = payload[pos + 4: pos + 2 + seg_len]
-            if marker == 0xDB:
-                off = 0
-                while off < len(seg):
-                    pq_tq = seg[off]
-                    if pq_tq >> 4:
-                        return None
-                    quant[pq_tq & 0x0F] = np.frombuffer(
-                        seg, dtype=np.uint8, count=64, offset=off + 1
-                    ).astype(np.int64)
-                    off += 65
-            elif marker == 0xC0:
-                _, height, width, n_comp = struct.unpack_from(">BHHB", seg)
-                if n_comp not in (1, 3):
-                    return None
-                for ci in range(n_comp):
-                    cid = seg[6 + 3 * ci]
-                    hv = seg[7 + 3 * ci]
-                    h_f, v_f = hv >> 4, hv & 0x0F
-                    if h_f not in (1, 2) or v_f not in (1, 2):
-                        return None
-                    comps.append((cid, h_f, v_f, seg[8 + 3 * ci]))
-            elif marker in (0xC1, 0xC2, 0xC3):
-                return None
-            elif marker == 0xC4:
-                off = 0
-                while off < len(seg):
-                    tc_th = seg[off]
-                    bits = seg[off + 1: off + 17]
-                    n_vals = sum(bits)
-                    vals = seg[off + 17: off + 17 + n_vals]
-                    spec = _jpeg_canonical_codes(bits, vals)
-                    huff[(tc_th >> 4, tc_th & 0x0F)] = {
-                        (ln, code): sym for sym, (ln, code) in spec.items()
-                    }
-                    off += 17 + n_vals
-            elif marker == 0xDD:
-                restart_interval = struct.unpack_from(">H", seg)[0]
-            elif marker == 0xDA:
-                n_scan = seg[0]
-                if n_scan != len(comps):
-                    return None
-                for ci in range(n_scan):
-                    cs = seg[1 + 2 * ci]
-                    td_ta = seg[2 + 2 * ci]
-                    scan_tabs[cs] = (td_ta >> 4, td_ta & 0x0F)
-                scan_pos = pos + 2 + seg_len
-                break
-            pos += 2 + seg_len
-        if scan_pos is None or width is None or not comps:
-            return None
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-        mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-        n_mcus = mcus_x * mcus_y
-        per_comp = []
-        for cid, h_f, v_f, tq in comps:
-            if cid not in scan_tabs or tq not in quant:
-                return None
-            dc_id, ac_id = scan_tabs[cid]
-            dc_tab = huff.get((0, dc_id))
-            ac_tab = huff.get((1, ac_id))
-            if dc_tab is None or ac_tab is None:
-                return None
-            per_comp.append({
-                "h": h_f, "v": v_f, "q": quant[tq],
-                "dc": dc_tab, "ac": ac_tab,
-                "zz": np.zeros((n_mcus * h_f * v_f, 64), dtype=np.int64),
-            })
-        reader = _JpegBitReader(payload, scan_pos)
-        preds = [0] * len(comps)
-        for m in range(n_mcus):
-            if restart_interval and m and m % restart_interval == 0:
-                if not reader.sync_restart():
-                    return None
-                preds = [0] * len(comps)
-            for ci, pc in enumerate(per_comp):
-                for j in range(pc["h"] * pc["v"]):
-                    zz = pc["zz"][m * pc["h"] * pc["v"] + j]
-                    s = _jpeg_huff_decode(reader, pc["dc"])
-                    if s is None:
-                        return None
-                    diff = 0
-                    if s:
-                        v = reader.receive(s)
-                        if v is None:
-                            return None
-                        diff = _jpeg_extend(v, s)
-                    preds[ci] += diff
-                    zz[0] = preds[ci]
-                    k = 1
-                    while k < 64:
-                        rs = _jpeg_huff_decode(reader, pc["ac"])
-                        if rs is None:
-                            return None
-                        if rs == 0x00:
-                            break
-                        if rs == 0xF0:
-                            k += 16
-                            continue
-                        k += rs >> 4
-                        if k > 63:
-                            return None
-                        s = rs & 0x0F
-                        v = reader.receive(s)
-                        if v is None:
-                            return None
-                        zz[k] = _jpeg_extend(v, s)
-                        k += 1
-        c = _idct_matrix()
-        planes = []
-        zz_comps = []
-        for pc in per_comp:
-            h_f, v_f = pc["h"], pc["v"]
-            deq = pc["zz"] * pc["q"][None, :]
-            zz_comps.append(deq)
-            raster = np.zeros_like(deq, dtype=np.float64)
-            raster[:, list(_JPEG_ZIGZAG)] = deq
-            blocks = raster.reshape(-1, 8, 8)
-            pix = np.einsum("kn,bkl,lm->bnm", c, blocks, c) + 128.0
-            pix = np.clip(np.round(pix), 0, 255)
-            plane = np.zeros(
-                (mcus_y * v_f * 8, mcus_x * h_f * 8), dtype=np.float64
-            )
-            for m in range(n_mcus):
-                my, mx = divmod(m, mcus_x)
-                for j in range(h_f * v_f):
-                    by, bx = divmod(j, h_f)
-                    r0 = (my * v_f + by) * 8
-                    c0 = (mx * h_f + bx) * 8
-                    plane[r0: r0 + 8, c0: c0 + 8] = pix[
-                        m * h_f * v_f + j
-                    ]
-            plane = np.repeat(
-                np.repeat(plane, vmax // v_f, axis=0),
-                hmax // h_f, axis=1,
-            )
-            planes.append(plane[:height, :width])
-        if len(planes) == 1:
-            img = planes[0].astype(np.uint8)
-        else:
-            y, cb, cr = planes
-            r = y + 1.402 * (cr - 128.0)
-            g = (
-                y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-            )
-            b = y + 1.772 * (cb - 128.0)
-            img = np.clip(
-                np.round(np.stack([r, g, b], axis=2)), 0, 255
-            ).astype(np.uint8)
-        return {
-            "zigzag_comps": zz_comps,
-            "pixels": img,
-            "width": int(width),
-            "height": int(height),
-            "n_components": len(comps),
-            "sampling": [(c_[1], c_[2]) for c_ in comps],
-        }
-    except (struct.error, IndexError):
-        return None
+    return bytes(out + b"\xff\xd9")
 
 
 #: Zig-zag AC positions planted per component in the color fixture.
@@ -2396,12 +2240,12 @@ def jpeg_color_roundtrip_stats(
                     restart_interval=2 if uid % 2 else 0,
                     quant_chroma=np.full(64, 2, dtype=np.uint8),
                 )
-                dec = decode_jpeg_color(payload)
+                dec = decode_jpeg(payload)
                 gy, gcb, gcr = dec["zigzag_comps"]
                 g = uid % 256
                 fy = np.zeros((4, 64), dtype=np.int64)
                 fy[:, 0] = 8 * (g - 128)
-                fdec = decode_jpeg_color(
+                fdec = decode_jpeg(
                     build_jpeg_color_from_coeffs(
                         fy,
                         np.zeros((1, 64), dtype=np.int64),
@@ -2445,9 +2289,11 @@ def jpeg_color_roundtrip_stats(
 # refinement scan carries buffered correction bits for history
 # coefficients interleaved with newly-nonzero run-length symbols and
 # EOB-run tails — the genuinely hard half of progressive decoding.
-# Closes the 'progressive JPEG' entry of the r06 stub list; the decoder
-# is cross-checked against the driver-verified baseline decoder on the
-# same planted coefficients (identical final zig-zag surface).
+# Closes the 'progressive JPEG' entry of the r06 stub list. ``decode_jpeg``
+# runs ``_jpeg_decode_prog_scan`` once per SOS of an SOF2 frame; its
+# result is cross-checked against the same decoder's sequential (SOF0)
+# path on the same planted coefficients — two independent entropy paths,
+# identical final zig-zag surface.
 # ---------------------------------------------------------------------------
 
 #: Scan script shared by the progressive encoder and its fixture oracle:
@@ -2482,84 +2328,32 @@ def build_jpeg_progressive_from_coeffs(
     history coefficient plus (r<<4|1)+sign symbols for newly-nonzero
     +-1 coefficients with the buffered-correction-bit discipline of
     T.81 G.1.2.3. Coefficient magnitudes must fit the Annex-K AC
-    table (|v| < 1024). Roundtrip partner of
-    ``decode_jpeg_progressive``."""
-    import struct
-
+    table (|v| < 1024). Roundtrip partner of ``decode_jpeg``."""
     zz_blocks = np.asarray(zz_blocks, dtype=np.int64)
-    n_blocks = blocks_w * blocks_h
-    if zz_blocks.shape != (n_blocks, 64):
+    if zz_blocks.shape != (blocks_w * blocks_h, 64):
         raise ValueError("zz_blocks must be (blocks_w*blocks_h, 64)")
-    q = np.ones(64, dtype=np.uint8) if quant is None else np.asarray(
-        quant, dtype=np.uint8
-    )
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
-    out += struct.pack(">HHBB", 1, 1, 0, 0)
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(q)
-    h_px, w_px = 8 * blocks_h, 8 * blocks_w
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 11, 8, h_px, w_px, 1)
-    out += bytes((1, 0x11, 0))
-    out += (
-        b"\xff\xc4"
-        + struct.pack(">H", 2 + 1 + 16 + len(_JPEG_DC_VALS))
-        + b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-    )
-    out += (
-        b"\xff\xc4"
-        + struct.pack(">H", 2 + 1 + 16 + len(_JPEG_AC_VALS))
-        + b"\x10" + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
-
+    comps = ((1, 0x11, 0),)
+    out = _jpeg_header(0xC2, 8 * blocks_w, 8 * blocks_h, comps, [quant])
+    rows = zz_blocks.tolist()
     for ss, se, ah, al in _JPEG_PROG_SCANS:
-        out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes((1, 0x00))
-        out += bytes((ss, se, (ah << 4) | al))
+        out += _jpeg_sos(comps, ss, se, (ah << 4) | al)
         bw = _JpegBitWriter()
         if ss == 0 and ah == 0:  # DC first
             pred = 0
-            for b in range(n_blocks):
-                v = int(zz_blocks[b, 0]) >> al
-                diff = v - pred
-                pred = v
-                s = abs(diff).bit_length()
-                ln, code = dc_codes[s]
-                bw.write(code, ln)
-                if s:
-                    bw.write(
-                        diff if diff > 0 else diff + (1 << s) - 1, s
-                    )
+            for zz in rows:
+                _jpeg_code_block(bw, (zz[0] >> al) - pred, ())
+                pred = zz[0] >> al
         elif ss == 0:  # DC refinement: one raw bit per block
-            for b in range(n_blocks):
-                bw.write((int(zz_blocks[b, 0]) >> al) & 1, 1)
-        elif ah == 0:  # AC first scan over [ss, se]
-            for b in range(n_blocks):
-                run = 0
-                for k in range(ss, se + 1):
-                    v = _trunc_shift(int(zz_blocks[b, k]), al)
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        ln, code = ac_codes[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                    s = abs(v).bit_length()
-                    ln, code = ac_codes[(run << 4) | s]
-                    bw.write(code, ln)
-                    bw.write(v if v > 0 else v + (1 << s) - 1, s)
-                    run = 0
-                if run:
-                    ln, code = ac_codes[0x00]  # EOB0: EOBRUN = 1
-                    bw.write(code, ln)
+            for zz in rows:
+                bw.write((zz[0] >> al) & 1, 1)
+        elif ah == 0:  # AC first scan over [ss, se]; EOB0: EOBRUN = 1
+            for zz in rows:
+                _jpeg_code_block(
+                    bw, None, [_trunc_shift(v, al) for v in zz[ss: se + 1]]
+                )
         else:  # AC refinement over [ss, se] (T.81 G.1.2.3)
-            for b in range(n_blocks):
-                zz = zz_blocks[b]
-                tvals = [
-                    abs(int(zz[k])) >> al for k in range(ss, se + 1)
-                ]
+            for zz in rows:
+                tvals = [abs(v) >> al for v in zz[ss: se + 1]]
                 # last newly-nonzero position: ZRL is only emitted while
                 # one lies ahead; the trailing run is covered by EOB,
                 # whose correction bits the decoder reads to band end
@@ -2577,7 +2371,7 @@ def build_jpeg_progressive_from_coeffs(
                     # or new) so buffered bits stay inside the decoder's
                     # advance range of the symbol they follow
                     while run > 15 and i <= last_new:
-                        ln, code = ac_codes[0xF0]
+                        ln, code = _JPEG_AC_CODES[0xF0]
                         bw.write(code, ln)
                         run -= 16
                         for bit in br:
@@ -2587,128 +2381,21 @@ def build_jpeg_progressive_from_coeffs(
                         br.append(t & 1)
                         continue
                     # newly nonzero at this precision (+-1)
-                    ln, code = ac_codes[(run << 4) | 1]
+                    ln, code = _JPEG_AC_CODES[(run << 4) | 1]
                     bw.write(code, ln)
-                    bw.write(1 if int(zz[ss + i]) > 0 else 0, 1)
+                    bw.write(1 if zz[ss + i] > 0 else 0, 1)
                     for bit in br:
                         bw.write(bit, 1)
                     br.clear()
                     run = 0
                 if run or br:
-                    ln, code = ac_codes[0x00]  # EOB0 tail
+                    ln, code = _JPEG_AC_CODES[0x00]  # EOB0 tail
                     bw.write(code, ln)
                     for bit in br:
                         bw.write(bit, 1)
         bw.flush_align()
         out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def decode_jpeg_progressive(payload: bytes) -> "dict | None":
-    """REAL progressive-JPEG decode, library-free: SOF2 grayscale with
-    any scan script — DC first/refinement, AC spectral-selection
-    first scans with EOB-run accounting, and AC successive-
-    approximation refinement (newly-nonzero insertion + history-
-    coefficient correction bits, T.81 G.2). Accumulates coefficients
-    across scans, then dequantizes and IDCTs exactly like the
-    baseline decoder. Returns {'zigzag', 'pixels', 'width',
-    'height'}."""
-    import struct
-
-    if payload is None or payload[:2] != b"\xff\xd8":
-        return None
-    try:
-        pos = 2
-        quant = {}
-        huff = {}
-        width = height = None
-        comp_q = 0
-        coef = None
-        n_blocks = 0
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                return None
-            marker = payload[pos + 1]
-            if marker == 0xD9:
-                break
-            seg_len = struct.unpack_from(">H", payload, pos + 2)[0]
-            seg = payload[pos + 4: pos + 2 + seg_len]
-            if marker == 0xDB:
-                off = 0
-                while off < len(seg):
-                    pq_tq = seg[off]
-                    if pq_tq >> 4:
-                        return None
-                    quant[pq_tq & 0x0F] = np.frombuffer(
-                        seg, dtype=np.uint8, count=64, offset=off + 1
-                    ).astype(np.int64)
-                    off += 65
-            elif marker == 0xC2:
-                _, height, width, n_comp = struct.unpack_from(">BHHB", seg)
-                if n_comp != 1:
-                    return None
-                comp_q = seg[8]
-                n_blocks = ((width + 7) // 8) * ((height + 7) // 8)
-                coef = np.zeros((n_blocks, 64), dtype=np.int64)
-            elif marker in (0xC0, 0xC1, 0xC3):
-                return None  # not progressive
-            elif marker == 0xC4:
-                off = 0
-                while off < len(seg):
-                    tc_th = seg[off]
-                    bits = seg[off + 1: off + 17]
-                    n_vals = sum(bits)
-                    vals = seg[off + 17: off + 17 + n_vals]
-                    spec = _jpeg_canonical_codes(bits, vals)
-                    huff[(tc_th >> 4, tc_th & 0x0F)] = {
-                        (ln, code): sym for sym, (ln, code) in spec.items()
-                    }
-                    off += 17 + n_vals
-            elif marker == 0xDA:
-                if coef is None:
-                    return None
-                dc_id = seg[2] >> 4
-                ac_id = seg[2] & 0x0F
-                ss, se = seg[3], seg[4]
-                ah, al = seg[5] >> 4, seg[5] & 0x0F
-                reader = _JpegBitReader(payload, pos + 2 + seg_len)
-                if not _jpeg_decode_prog_scan(
-                    reader, coef, ss, se, ah, al,
-                    huff.get((0, dc_id)), huff.get((1, ac_id)),
-                ):
-                    return None
-                # next marker follows the entropy-coded run
-                pos = reader.pos
-                continue
-            pos += 2 + seg_len
-        if coef is None or width is None:
-            return None
-        q = quant.get(comp_q)
-        if q is None:
-            return None
-        deq = coef * q[None, :]
-        raster = np.zeros((n_blocks, 64), dtype=np.float64)
-        raster[:, list(_JPEG_ZIGZAG)] = deq
-        blocks_w = (width + 7) // 8
-        blocks_h = (height + 7) // 8
-        c = _idct_matrix()
-        pix = np.einsum(
-            "kn,bkl,lm->bnm", c, raster.reshape(n_blocks, 8, 8), c
-        ) + 128.0
-        pix = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-        img = np.zeros((blocks_h * 8, blocks_w * 8), dtype=np.uint8)
-        for b in range(n_blocks):
-            r, col = divmod(b, blocks_w)
-            img[r * 8: r * 8 + 8, col * 8: col * 8 + 8] = pix[b]
-        return {
-            "zigzag": deq,
-            "pixels": img[:height, :width],
-            "width": int(width),
-            "height": int(height),
-        }
-    except (struct.error, IndexError):
-        return None
+    return bytes(out + b"\xff\xd9")
 
 
 def _jpeg_decode_prog_scan(
@@ -2722,15 +2409,9 @@ def _jpeg_decode_prog_scan(
             return False
         pred = 0
         for b in range(n_blocks):
-            s = _jpeg_huff_decode(reader, dc_tab)
-            if s is None:
+            diff = _jpeg_dc_diff(reader, dc_tab)
+            if diff is None:
                 return False
-            diff = 0
-            if s:
-                v = reader.receive(s)
-                if v is None:
-                    return False
-                diff = _jpeg_extend(v, s)
             pred += diff
             coef[b, 0] = pred << al
         return True
@@ -2851,9 +2532,10 @@ def jpeg_progressive_roundtrip_stats(
     path (counted in ``n_newly_nonzero``), odd magnitudes the
     correction bits, and the 17->33->62 zig-zag gaps the ZRL runs in
     both first and refinement scans. ``matches_baseline`` pins the
-    progressive decoder against the baseline decoder on the identical
-    coefficients — the two independent entropy paths must agree
-    bit-exactly on every coefficient and pixel."""
+    progressive (SOF2) payload against the baseline (SOF0) payload of
+    the identical coefficients, both through ``decode_jpeg`` — the two
+    independent entropy paths must agree bit-exactly on every
+    coefficient and pixel."""
     schema = T.StructType([
         T.StructField(id_col, T.LongType(), False),
         T.StructField("width", T.LongType(), True),
@@ -2879,13 +2561,11 @@ def jpeg_progressive_roundtrip_stats(
                     for k in _JPEG_FIXTURE_AC_POS:
                         zz[b, k] = ((uid * 3 + b * 5 + k * 11) % 31) - 15
                 payload = build_jpeg_progressive_from_coeffs(zz, bw_, bh_)
-                dec = decode_jpeg_progressive(payload)
-                base = decode_jpeg_baseline(
-                    build_jpeg_from_coeffs(zz, bw_, bh_)
-                )
-                got = dec["zigzag"]
+                dec = decode_jpeg(payload)
+                base = decode_jpeg(build_jpeg_from_coeffs(zz, bw_, bh_))
+                got = dec["zigzag_comps"][0]
                 same = (
-                    np.array_equal(got, base["zigzag"])
+                    np.array_equal(got, base["zigzag_comps"][0])
                     and np.array_equal(dec["pixels"], base["pixels"])
                 )
                 rows.append({
@@ -2914,8 +2594,8 @@ def jpeg_progressive_roundtrip_stats(
 # VIDEO (r07): MJPEG-in-AVI — a real RIFF/AVI container (hdrl with
 # avih/strh/strf, movi LIST of 00dc chunks, idx1 index) whose frames
 # are genuine baseline JPEGs from this module's own encoder, parsed and
-# frame-sampled natively and decoded by the driver-verified baseline
-# JPEG decoder. This makes ``frame_sample`` real for the one video
+# frame-sampled natively and decoded by the module's one JPEG decoder,
+# ``decode_jpeg``. This makes ``frame_sample`` real for the one video
 # codec expressible without external libraries; inter-frame codecs
 # (H.264/VP9/AV1) remain documented stubs behind decode_backend='stub'.
 # ---------------------------------------------------------------------------
@@ -3017,7 +2697,7 @@ def avi_frame_sample_stats(
     per id, an MJPEG AVI of (3 + id%5) frames — frame f a DC-only
     16x8 baseline JPEG of gray ((id*29 + f*37) % 256) — is
     container-parsed, evenly frame-sampled (src = floor(i*n/k)), and
-    each sampled frame decoded by the baseline JPEG decoder. One row
+    each sampled frame decoded by ``decode_jpeg``. One row
     per sampled frame with the exact reconstructed gray; any defect
     in RIFF chunk walking, idx/padding, the sampling map, or frame
     payload extraction shifts the closed-form replay."""
@@ -3047,7 +2727,7 @@ def avi_frame_sample_stats(
                 parsed = parse_avi_frames(payload)
                 for i in range(k):
                     src = (i * parsed["n_frames"]) // k
-                    dec = decode_jpeg_baseline(parsed["frames"][src])
+                    dec = decode_jpeg(parsed["frames"][src])
                     # DC-only block: every pixel reconstructs the gray
                     gray = int(dec["pixels"][0, 0])
                     rows.append({

@@ -10536,9 +10536,9 @@ def mm_gif_native_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closed-form replay of the planted quantized coefficients: the
     # Spark side entropy-codes a REAL baseline JPEG (Annex-K Huffman
     # tables, DC prediction, ZRL/EOB, 0xFF00 stuffing, RST markers on
-    # odd ids) and natively decodes it back; the flat-gray pixel sum
-    # additionally pins the IDCT + level-shift path (DC-only blocks
-    # reconstruct the planted gray exactly)
+    # odd ids) and natively decodes it back through decode_jpeg; the
+    # flat-gray pixel sum additionally pins the IDCT + level-shift path
+    # (DC-only blocks reconstruct the planted gray exactly)
     oracle="""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     blk AS (
@@ -10577,7 +10577,7 @@ def mm_gif_native_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_jpeg_native_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-JPEG decode, library-free (operators/multimodal.
-    decode_jpeg_baseline — canonical Huffman construction, entropy
+    decode_jpeg, SOF0 path — canonical Huffman construction, entropy
     decode with 0xFF00 de-stuffing, DC prediction with restart reset,
     ZRL/EOB run-length, zig-zag, dequantize, float IDCT): planted
     quantized coefficients are entropy-coded into genuine baseline
@@ -10600,9 +10600,10 @@ def mm_jpeg_native_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coefficients: the Spark side entropy-codes a REAL interleaved
     # 4:2:0 color JPEG (two quant tables — chroma q=2 doubles decoded
     # chroma coefficients — four Huffman table slots, per-component DC
-    # prediction, RST markers on odd ids) and natively decodes it; the
-    # flat-color pixel sum additionally pins chroma upsampling + the
-    # YCbCr->RGB matrix (zero chroma -> RGB = (g, g, g) exactly)
+    # prediction, RST markers on odd ids) and natively decodes it
+    # through decode_jpeg; the flat-color pixel sum additionally pins
+    # chroma upsampling + the YCbCr->RGB matrix (zero chroma ->
+    # RGB = (g, g, g) exactly)
     oracle="""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     yblk AS (
@@ -10669,7 +10670,7 @@ def mm_jpeg_native_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline COLOR JPEG decode, library-free (operators/
-    multimodal.decode_jpeg_color): interleaved 4:2:0 YCbCr MCU scan
+    multimodal.decode_jpeg, SOF0 path): interleaved 4:2:0 YCbCr MCU scan
     with per-component quant/Huffman table routing and DC prediction,
     restart resets, nearest-neighbor chroma upsampling, and the JFIF
     YCbCr->RGB matrix. Planted per-component coefficients are
@@ -10692,9 +10693,9 @@ def mm_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closed-form replay of the planted coefficients (same surface as
     # mm_jpeg_native_decode) routed through the PROGRESSIVE six-scan
     # successive-approximation codec; n_newly_nonzero pins the +-1
-    # refinement-insertion path and matches_baseline pins the
-    # progressive decoder against the driver-verified baseline decoder
-    # on identical coefficients (two independent entropy paths)
+    # refinement-insertion path and matches_baseline pins decode_jpeg's
+    # progressive (SOF2) path against its sequential (SOF0) path on
+    # identical coefficients (two independent entropy paths)
     oracle="""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     blk AS (
@@ -10736,18 +10737,18 @@ def mm_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL progressive-JPEG decode, library-free (operators/multimodal.
-    decode_jpeg_progressive): SOF2 successive approximation + spectral
+    decode_jpeg, SOF2 path): successive approximation + spectral
     selection over a six-scan script — DC first/refine, two AC bands
     first (point transform truncating toward zero) and their
     refinement scans with newly-nonzero insertion, history-coefficient
     correction bits and EOB-run tails (T.81 Annex G). Planted
     coefficients are entropy-coded into genuine progressive JPEGs,
-    decoded back, and additionally cross-decoded through the baseline
-    codec (matches_baseline = 1 requires bit-identical coefficients
-    AND pixels from both entropy paths). Closes the 'progressive JPEG'
-    entry of the stub list — only WebP and true video codecs remain
-    documented stubs (reference north star: multimodal columns,
-    SURVEY §2.8)."""
+    decoded back, and additionally cross-decoded from a baseline (SOF0)
+    payload of the same coefficients (matches_baseline = 1 requires
+    bit-identical coefficients AND pixels from both entropy paths).
+    Closes the 'progressive JPEG' entry of the stub list — only WebP
+    and true video codecs remain documented stubs (reference north
+    star: multimodal columns, SURVEY §2.8)."""
     from big_data_analysis_for_stock_market_data_spark.operators.multimodal import (
         jpeg_progressive_roundtrip_stats,
     )
@@ -10821,7 +10822,7 @@ def mm_webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REAL MJPEG AVI: n = 3 + id%5 frames, sample i of 3 maps to
     # source frame floor(i*n/3), whose DC-only JPEG reconstructs gray
     # (id*29 + src*37) % 256 exactly after container parse + native
-    # baseline decode
+    # decode_jpeg decode
     oracle="""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     s AS (
@@ -10846,7 +10847,7 @@ def mm_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuine RIFF/AVI container (hdrl avih+strh+strf, movi LIST of
     '00dc' chunks with even padding, idx1 index) is walked
     recursively, frames are sampled evenly, and each sampled frame is
-    decoded by the driver-verified baseline JPEG decoder — the
+    decoded by operators/multimodal.decode_jpeg — the
     container/sampling plumbing ``frame_sample`` stubs is real here
     end-to-end for the one video codec expressible without external
     libraries. Inter-frame codecs (H.264/VP9/AV1) remain the

@@ -672,16 +672,17 @@ def run_upsert_to_parquet(
         latest_by_key,
     )
     from big_data_analysis_for_stock_market_data_spark.sources.io import (
+        _jvm_class,
         read_parquet,
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         resolved = latest_by_key(batch_df, keys, order, payload)
-        jvm = spark._jvm
+        Path = _jvm_class(spark, "org.apache.hadoop.fs.Path")
         hconf = spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        aside = jvm.org.apache.hadoop.fs.Path(f"{path}__aside")
+        hpath = Path(path)
+        aside = Path(f"{path}__aside")
         fs = hpath.getFileSystem(hconf)
         _recover_target(fs, hpath, aside)
         if fs.exists(hpath):
@@ -692,7 +693,7 @@ def run_upsert_to_parquet(
             )
         stage = f"{path}__stage_{batch_id}"
         resolved.write.mode("overwrite").parquet(stage)
-        _swap_into_place(fs, jvm.org.apache.hadoop.fs.Path(stage), hpath, aside)
+        _swap_into_place(fs, Path(stage), hpath, aside)
 
     with _scoped_state_partitions(df.sparkSession, 2):
         q = (

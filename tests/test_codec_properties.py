@@ -128,10 +128,10 @@ def _rng_zz(seed: int, n_blocks: int, density: int) -> np.ndarray:
 @SETTINGS
 def test_jpeg_baseline_coeff_replay_random(bw, bh, seed, density, ri):
     zz = _rng_zz(seed, bw * bh, density)
-    d = M.decode_jpeg_baseline(
+    d = M.decode_jpeg(
         M.build_jpeg_from_coeffs(zz, bw, bh, restart_interval=ri)
     )
-    assert d is not None and np.array_equal(d["zigzag"], zz)
+    assert d is not None and np.array_equal(d["zigzag_comps"][0], zz)
 
 
 @given(bw=st.integers(1, 3), bh=st.integers(1, 2),
@@ -141,12 +141,10 @@ def test_jpeg_progressive_matches_baseline_random(bw, bh, seed, density):
     """Annex-G progressive and Annex-F baseline entropy paths must agree
     on arbitrary coefficients — same zigzag, same pixels."""
     zz = _rng_zz(seed, bw * bh, density)
-    prog = M.decode_jpeg_progressive(
-        M.build_jpeg_progressive_from_coeffs(zz, bw, bh)
-    )
-    base = M.decode_jpeg_baseline(M.build_jpeg_from_coeffs(zz, bw, bh))
-    assert prog is not None and np.array_equal(prog["zigzag"], zz)
-    assert np.array_equal(base["zigzag"], prog["zigzag"])
+    prog = M.decode_jpeg(M.build_jpeg_progressive_from_coeffs(zz, bw, bh))
+    base = M.decode_jpeg(M.build_jpeg_from_coeffs(zz, bw, bh))
+    assert prog is not None and np.array_equal(prog["zigzag_comps"][0], zz)
+    assert np.array_equal(base["zigzag_comps"][0], prog["zigzag_comps"][0])
     assert np.array_equal(base["pixels"], prog["pixels"])
 
 
@@ -161,7 +159,7 @@ def test_jpeg_color_coeff_replay_random(mx, my, sampling, seed, density, ri):
     y = _rng_zz(seed, n_mcus * hy * vy, density)
     cb = _rng_zz(seed ^ 0xCB, n_mcus, density)
     cr = _rng_zz(seed ^ 0xC4, n_mcus, density)
-    d = M.decode_jpeg_color(M.build_jpeg_color_from_coeffs(
+    d = M.decode_jpeg(M.build_jpeg_color_from_coeffs(
         y, cb, cr, mx, my, sampling, restart_interval=ri,
     ))
     assert d is not None

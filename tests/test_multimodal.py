@@ -334,22 +334,22 @@ def test_native_jpeg_entropy_roundtrip():
                 zz[:, k] = rng.randint(-15, 16, size=n)
         ri = 2 if trial % 2 else 0
         p = M.build_jpeg_from_coeffs(zz, bw, bh, restart_interval=ri)
-        d = M.decode_jpeg_baseline(p)
+        d = M.decode_jpeg(p)
         assert d is not None
-        assert np.array_equal(d["zigzag"], zz)
+        assert np.array_equal(d["zigzag_comps"][0], zz)
         assert d["width"] == 8 * bw and d["height"] == 8 * bh
     # flat DC-only blocks reconstruct the planted gray exactly
     for g in (0, 1, 127, 128, 200, 255):
         flat = np.zeros((2, 64), dtype=np.int64)
         flat[:, 0] = 8 * (g - 128)
-        fd = M.decode_jpeg_baseline(M.build_jpeg_from_coeffs(flat, 2, 1))
+        fd = M.decode_jpeg(M.build_jpeg_from_coeffs(flat, 2, 1))
         assert (fd["pixels"] == g).all()
     # corrupt / non-baseline payloads never raise
-    assert M.decode_jpeg_baseline(b"\xff\xd8\xff\xd9") is None
-    assert M.decode_jpeg_baseline(None) is None
-    assert M.decode_jpeg_baseline(b"not a jpeg") is None
+    assert M.decode_jpeg(b"\xff\xd8\xff\xd9") is None
+    assert M.decode_jpeg(None) is None
+    assert M.decode_jpeg(b"not a jpeg") is None
     # the header-only synthetic JPEG (no scan data) degrades to None
-    assert M.decode_jpeg_baseline(M.build_jpeg(16, 8)) is None
+    assert M.decode_jpeg(M.build_jpeg(16, 8)) is None
 
 
 def test_native_backends_route_jpeg(spark):
@@ -399,7 +399,7 @@ def test_native_color_jpeg_roundtrip():
             y, cb, cr, mcus_x, 1, (2, 2), restart_interval=ri,
             quant_chroma=np.full(64, 2, dtype=np.uint8),
         )
-        d = M.decode_jpeg_color(p)
+        d = M.decode_jpeg(p)
         gy, gcb, gcr = d["zigzag_comps"]
         assert (gy == y).all() and (gcb == 2 * cb).all()
         assert (gcr == 2 * cr).all()
@@ -410,7 +410,7 @@ def test_native_color_jpeg_roundtrip():
     fy = np.zeros((4, 64), dtype=np.int64)
     fy[:, 0] = 8 * (g - 128)
     zc = np.zeros((1, 64), dtype=np.int64)
-    fd = M.decode_jpeg_color(
+    fd = M.decode_jpeg(
         M.build_jpeg_color_from_coeffs(fy, zc, zc, 1, 1, (2, 2))
     )
     assert (fd["pixels"] == g).all()
@@ -418,19 +418,19 @@ def test_native_color_jpeg_roundtrip():
     y1 = np.zeros((1, 64), dtype=np.int64)
     y1[0, 0] = 8 * (64 - 128)
     z1 = np.zeros((1, 64), dtype=np.int64)
-    d444 = M.decode_jpeg_color(
+    d444 = M.decode_jpeg(
         M.build_jpeg_color_from_coeffs(y1, z1, z1, 1, 1, (1, 1))
     )
     assert d444["pixels"].shape == (8, 8, 3)
     assert (d444["pixels"] == 64).all()
-    # grayscale payloads route through the color decoder too
+    # grayscale payloads decode to one component
     zz = np.zeros((2, 64), dtype=np.int64)
     zz[:, 0] = 8 * (90 - 128)
-    dg = M.decode_jpeg_color(M.build_jpeg_from_coeffs(zz, 2, 1))
+    dg = M.decode_jpeg(M.build_jpeg_from_coeffs(zz, 2, 1))
     assert dg["n_components"] == 1 and (dg["pixels"] == 90).all()
     # degradation
-    assert M.decode_jpeg_color(b"not a jpeg") is None
-    assert M.decode_jpeg_color(None) is None
+    assert M.decode_jpeg(b"not a jpeg") is None
+    assert M.decode_jpeg(None) is None
 
 
 def test_progressive_jpeg_roundtrip_and_baseline_crosscheck():
@@ -456,12 +456,10 @@ def test_progressive_jpeg_roundtrip_and_baseline_crosscheck():
                 while v == 0:
                     v = int(rng.integers(-600, 601))
                 zz[b, k] = v
-        d = M.decode_jpeg_progressive(
-            M.build_jpeg_progressive_from_coeffs(zz, bw, bh)
-        )
-        assert d is not None and np.array_equal(d["zigzag"], zz)
-        base = M.decode_jpeg_baseline(M.build_jpeg_from_coeffs(zz, bw, bh))
-        assert np.array_equal(base["zigzag"], d["zigzag"])
+        d = M.decode_jpeg(M.build_jpeg_progressive_from_coeffs(zz, bw, bh))
+        assert d is not None and np.array_equal(d["zigzag_comps"][0], zz)
+        base = M.decode_jpeg(M.build_jpeg_from_coeffs(zz, bw, bh))
+        assert np.array_equal(base["zigzag_comps"][0], d["zigzag_comps"][0])
         assert np.array_equal(base["pixels"], d["pixels"])
 
     # adversarial shapes: newly-nonzero everywhere, ZRL-spanning runs
@@ -477,20 +475,44 @@ def test_progressive_jpeg_roundtrip_and_baseline_crosscheck():
         np.array([[0] * 10 + [4] + [0] * 20 + [-1] + [0] * 32],
                  dtype=np.int64),
     ]:
-        d = M.decode_jpeg_progressive(
+        d = M.decode_jpeg(
             M.build_jpeg_progressive_from_coeffs(zz, zz.shape[0], 1)
         )
-        assert d is not None and np.array_equal(d["zigzag"], zz)
+        assert d is not None and np.array_equal(d["zigzag_comps"][0], zz)
 
-    # a baseline payload must be rejected by the progressive decoder
-    # and vice versa (SOF marker routing)
+    # SOF marker routing: an extended-sequential (SOF1) or lossless
+    # (SOF3) frame header is rejected
     flat = np.zeros((1, 64), dtype=np.int64)
-    assert M.decode_jpeg_progressive(
-        M.build_jpeg_from_coeffs(flat, 1, 1)
-    ) is None
-    assert M.decode_jpeg_baseline(
-        M.build_jpeg_progressive_from_coeffs(flat, 1, 1)
-    ) is None
+    for p, sof in (
+        (M.build_jpeg_from_coeffs(flat, 1, 1), b"\xff\xc0"),
+        (M.build_jpeg_progressive_from_coeffs(flat, 1, 1), b"\xff\xc2"),
+    ):
+        assert M.decode_jpeg(p) is not None
+        for marker in (b"\xff\xc1", b"\xff\xc3"):
+            assert M.decode_jpeg(p.replace(sof, marker, 1)) is None
+
+
+def test_gray_jpeg_declared_sampling_is_one_block_per_mcu():
+    """A 1-component scan is non-interleaved, so its MCU is one block
+    whatever H/V sampling the frame header declares (T.81 A.2.2): a
+    gray frame patched to declare 2x2 decodes exactly like the 1x1
+    original, also through the native pixel router."""
+    import numpy as np
+
+    zz = np.random.default_rng(5).integers(-40, 41, size=(6, 64))
+    for ri in (0, 2):
+        p = M.build_jpeg_from_coeffs(zz, 3, 2, restart_interval=ri)
+        # SOF0: marker, Lf, P, Y, X, Nf, then the component's id, HV
+        hv = p.index(b"\xff\xc0") + 11
+        assert p[hv] == 0x11
+        patched = p[:hv] + b"\x22" + p[hv + 1:]
+        d, dp = M.decode_jpeg(p), M.decode_jpeg(patched)
+        assert dp is not None
+        assert np.array_equal(dp["zigzag_comps"][0], d["zigzag_comps"][0])
+        assert np.array_equal(dp["pixels"], d["pixels"])
+        px = M._decode_any_pixels(patched)
+        assert px is not None
+        assert np.array_equal(px, M._decode_any_pixels(p))
 
 
 def test_webp_vp8l_roundtrip_all_code_forms():
@@ -547,7 +569,7 @@ def test_avi_mjpeg_container_roundtrip():
         assert p is not None and p["n_frames"] == n
         assert (p["width"], p["height"]) == (16, 8)
         for f in range(n):
-            d = M.decode_jpeg_baseline(p["frames"][f])
+            d = M.decode_jpeg(p["frames"][f])
             assert int(d["pixels"][0, 0]) == grays[f]
     # WAV is also RIFF but must not parse as AVI (and vice versa)
     wav = M.build_wav(b"\x00\x01" * 50, 8000)
@@ -589,7 +611,7 @@ def test_flac_roundtrip_with_md5_and_crc():
 
 def test_frame_sample_native_avi(spark):
     """frame_sample(decode_backend='native') must extract REAL JPEG
-    frames from an MJPEG AVI (decodable by the baseline decoder), null
+    frames from an MJPEG AVI (decodable by decode_jpeg), null
     frames for non-AVI payloads, and keep the explode shape."""
     import numpy as np
     from pyspark.sql import Row
@@ -611,7 +633,7 @@ def test_frame_sample_native_avi(spark):
     assert sorted(by[1]) == [0, 1]
     # src = floor(i*5/2) -> frames 0 and 2 -> grays 10 and 110
     for i, gray in ((0, 10), (1, 110)):
-        d = M.decode_jpeg_baseline(bytes(by[1][i]))
+        d = M.decode_jpeg(bytes(by[1][i]))
         assert int(d["pixels"][0, 0]) == gray
     assert all(v is None for v in by[2].values())
 

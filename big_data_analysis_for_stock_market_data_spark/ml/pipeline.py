@@ -138,25 +138,28 @@ def _cached_projection(df: DataFrame, cols: Sequence[str]):
 
 def _fit(
     df: DataFrame,
-    estimator,
-    feature_cols: Sequence[str],
+    pipeline: Pipeline,
+    input_cols: Sequence[str],
     label_col: str,
-    transform: str,
-    pca_k: int,
     seed: int,
     train_fraction: float,
     evaluate: bool,
 ) -> FitResult:
+    """Cache ``input_cols`` + label, split with ``seed``, fit ``pipeline``
+    on the train part and predict the held-out part."""
     from big_data_analysis_for_stock_market_data_spark.ml.metrics import binary_metrics
 
-    pipeline = make_pipeline(estimator, feature_cols, transform, pca_k)
-    with _cached_projection(df, [*feature_cols, label_col]) as projected:
+    with _cached_projection(df, [*input_cols, label_col]) as projected:
         train, test = projected.randomSplit(
             [train_fraction, 1.0 - train_fraction], seed=seed
         )
         model = strip_training_summaries(pipeline.fit(train))
-        # drop featurization intermediates (Spark's lenient multi-drop, P3)
-        predictions = model.transform(test).drop("__assembled", "__scaled")
+        predictions = model.transform(test)
+        # drop the featurization intermediates the pipeline added
+        predictions = predictions.drop(*[
+            c for c in predictions.columns
+            if c.startswith("__") and c not in projected.columns
+        ])
         metrics = (
             binary_metrics(predictions, label_col=label_col) if evaluate else {}
         )
@@ -183,8 +186,8 @@ def train_random_forest(
         labelCol=label_col, featuresCol="features",
         numTrees=num_trees, maxDepth=max_depth, maxBins=max_bins, seed=seed,
     )
-    return _fit(df, rf, feature_cols, label_col, transform, pca_k, seed,
-                train_fraction, evaluate)
+    return _fit(df, make_pipeline(rf, feature_cols, transform, pca_k),
+                feature_cols, label_col, seed, train_fraction, evaluate)
 
 
 def train_linear_svc(
@@ -205,8 +208,8 @@ def train_linear_svc(
         labelCol=label_col, featuresCol="features",
         maxIter=max_iter, regParam=reg_param,
     )
-    return _fit(df, svc, feature_cols, label_col, transform, pca_k, seed,
-                train_fraction, evaluate)
+    return _fit(df, make_pipeline(svc, feature_cols, transform, pca_k),
+                feature_cols, label_col, seed, train_fraction, evaluate)
 
 
 def split_bucket(key_col, seed: int = DEFAULT_SEED, buckets: int = 10_000):
@@ -268,8 +271,8 @@ def train_gbt(
         labelCol=label_col, featuresCol="features",
         maxIter=max_iter, maxDepth=max_depth, stepSize=step_size, seed=seed,
     )
-    return _fit(df, gbt, feature_cols, label_col, transform, pca_k, seed,
-                train_fraction, evaluate)
+    return _fit(df, make_pipeline(gbt, feature_cols, transform, pca_k),
+                feature_cols, label_col, seed, train_fraction, evaluate)
 
 
 def cross_validate_rf(
@@ -406,25 +409,14 @@ def train_rf_grouped(
 ) -> FitResult:
     """RF on per-group featurized columns — the reference's rf_pca variant
     with its two-group scale+PCA preprocessing (``G_2_rf_pca.py:132-142``)."""
-    from big_data_analysis_for_stock_market_data_spark.ml.metrics import binary_metrics
-
     all_cols = [c for cols, _, _ in groups.values() for c in cols]
     rf = RandomForestClassifier(
         labelCol=label_col, featuresCol="features",
         numTrees=num_trees, maxDepth=max_depth, seed=seed,
     )
     pipeline = Pipeline(stages=grouped_feature_stages(groups) + [rf])
-    with _cached_projection(df, [*all_cols, label_col]) as projected:
-        train, test = projected.randomSplit(
-            [train_fraction, 1.0 - train_fraction], seed=seed
-        )
-        model = strip_training_summaries(pipeline.fit(train))
-        drop = [c for c in model.transform(test).columns if c.startswith("__")]
-        predictions = model.transform(test).drop(*drop)
-        metrics = (
-            binary_metrics(predictions, label_col=label_col) if evaluate else {}
-        )
-        return FitResult(model=model, predictions=predictions, metrics=metrics)
+    return _fit(df, pipeline, all_cols, label_col, seed, train_fraction,
+                evaluate)
 
 
 def pca_explained_variance(

@@ -401,10 +401,8 @@ def holt_linear(
     evaluates ``a*y + oma*(l + b)`` and ``be*(l' - l) + omb*b`` with
     oma = 1-a, omb = 1-be computed once — mirror the same expression
     order in any recursive-CTE twin for bit-exact comparison (the
-    ind_parabolic_sar pattern). This is the bit-exact per-key
-    applyInPandas fold; ``windows.holt_scan`` is the standalone 2x2
-    matrix-affine block scan of the same recurrence (numerically
-    equivalent, rel err ~1e-12, not bit-identical)."""
+    ind_parabolic_sar pattern). Runs on the per-key applyInPandas fold
+    (``_recursive_apply``), the one engine for recursive indicators."""
     oma = 1.0 - alpha
     omb = 1.0 - beta
 
@@ -701,9 +699,8 @@ def recursive_enrich(
 
     Each key's series is folded in one pandas call, in ``order_by``
     order, so the results are bit-identical to the per-key recursive-CTE
-    oracles; parallelism is |keys|. ``windows.ema_scan``/``kama_scan``/
-    ``rsi_scan`` are the standalone block-parallel scans for a key too
-    deep for one task."""
+    oracles; parallelism is |keys|, so one key's series runs in one
+    Python task however deep it is."""
     import numpy as np
 
     new_cols: dict[str, T.DataType] = {}

@@ -92,16 +92,10 @@ def with_lead(
     )
 
 
-def shuffle_partitions(df: DataFrame, default: int = 32) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating clusters
-    where the conf is non-numeric (e.g. ``"auto"`` under some AQE
-    setups): falls back to the DataFrame's current partition count."""
-    try:
-        return int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except (TypeError, ValueError):
-        return df.rdd.getNumPartitions() or default
+def shuffle_partitions(df: DataFrame) -> int:
+    """``spark.sql.shuffle.partitions`` as an int (Spark rejects a
+    non-integer value when the conf is set)."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def compute_order_cuts(df: DataFrame, order_by: str, n: int) -> list[float]:
@@ -458,287 +452,6 @@ def rolling(
     return out
 
 
-def linear_recurrence(
-    df: DataFrame,
-    recurrences: "dict[str, tuple[Column, Column]]",
-    order_by: str,
-    partition_by: str | Sequence[str],
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """Block-parallel affine scan: for each ``out -> (coef, input)`` entry,
-    computes ``y_i = coef_i * y_{i-1} + input_i`` per key in ``order_by``
-    order (seed ``y_{-1} = 0``; encode other seeds in the first row's
-    coef/input — see ``ema_scan``).
-
-    EMA/KAMA/RSI are all affine in the carried state, so this scan runs
-    them (``ema_scan``/``kama_scan``/``rsi_scan``) with parallelism
-    rows/buckets instead of the per-key fold's |keys|, for a key too deep
-    for one task. ``indicators.recursive_enrich`` keeps the fold: on a
-    4-core host (local[4]) at 1 key x 2M rows the scanned feature frame
-    was a near-tie warm (33.9 s vs 36.3 s) and 131 s slower cold.
-    Affine maps compose
-    associatively (A2∘A1 = (c2·c1, c2·b1 + b2)), so the recurrence is a
-    segment scan with NO per-key total order anywhere:
-
-    1. deterministic order-range buckets from quantile cut points (the
-       ``prefix_sum``/``global_lag_lead`` trick — no row_number, so a
-       single giant key never serializes through one sort task);
-    2. each (key, bucket) folds locally IN PARALLEL, emitting per-row
-       partials (prefix coef-product ``P_i``, zero-seed partial ``B_i``);
-    3. one summary row per bucket combines per key in bucket order — tiny;
-    4. ``y_i = P_i * y_start(bucket) + B_i`` finalizes rowwise.
-
-    The scanned frame is persisted (it feeds both the summary branch and
-    the final join; without it Spark re-runs the Python stage twice).
-
-    Float caveat: the re-association is NOT bit-identical to the
-    sequential fold (decimal exactness is impossible for products); it is
-    numerically equivalent (|rel err| ~ 1e-12, tests pin it). Underflow of
-    ``P_i`` for long blocks is benign — a dead coefficient product means
-    the block start genuinely cannot influence those rows.
-    """
-    import numpy as np
-    import pandas as pd  # noqa: F401  (applyInPandas contract)
-
-    from pyspark import StorageLevel
-    from pyspark.sql import types as T
-
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    names = list(recurrences)
-    npart = shuffle_partitions(df)
-    n_bkt = num_buckets or npart
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n_bkt))
-    for i, out in enumerate(names):
-        coef, inp = recurrences[out]
-        d = d.withColumn(f"__c{i}", coef.cast("double"))
-        d = d.withColumn(f"__b{i}", inp.cast("double"))
-
-    block_schema = T.StructType(
-        d.schema.fields
-        + [
-            T.StructField(f"__{p}{i}", T.DoubleType(), True)
-            for i in range(len(names))
-            for p in ("pp", "qq")
-        ]
-    )
-
-    def blockfn(pdf):
-        pdf = pdf.sort_values(order_by, kind="mergesort")
-        for i in range(len(names)):
-            c = pdf[f"__c{i}"].to_numpy(dtype="float64")
-            b = pdf[f"__b{i}"].to_numpy(dtype="float64")
-            with np.errstate(under="ignore"):
-                pdf[f"__pp{i}"] = np.cumprod(c)
-            acc = 0.0
-            out = np.empty(len(b))
-            for j in range(len(b)):
-                acc = c[j] * acc + b[j]
-                out[j] = acc
-            pdf[f"__qq{i}"] = out
-        return pdf
-
-    # pin the block stage's partition count (same rationale as
-    # indicators._recursive_apply): AQE's byte-based coalescing would
-    # collapse this small-bytes / heavy-CPU Python stage to a few tasks,
-    # which is exactly the serialization this operator exists to remove
-    d = d.repartition(npart, *[F.col(c) for c in keys], F.col("__bkt"))
-    scanned = d.groupBy(*keys, "__bkt").applyInPandas(
-        blockfn, schema=block_schema
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # one summary row per bucket: the bucket's LAST (P, B) pair per entry
-    # (max_by on the order column — no rank needed)
-    ordk = F.col(order_by)
-    summaries = scanned.groupBy(*keys, "__bkt").agg(
-        *[
-            F.max_by(F.col(f"__{p}{i}"), ordk).alias(f"__{p}{i}")
-            for i in range(len(names))
-            for p in ("pp", "qq")
-        ]
-    )
-
-    start_schema = T.StructType(
-        summaries.schema.fields
-        + [T.StructField(f"__ss{i}", T.DoubleType(), True)
-           for i in range(len(names))]
-    )
-
-    def combine(pdf):
-        pdf = pdf.sort_values("__bkt", kind="mergesort")
-        for i in range(len(names)):
-            s = 0.0
-            starts = np.empty(len(pdf))
-            A = pdf[f"__pp{i}"].to_numpy(dtype="float64")
-            B = pdf[f"__qq{i}"].to_numpy(dtype="float64")
-            for j in range(len(pdf)):
-                starts[j] = s
-                s = A[j] * s + B[j]
-            pdf[f"__ss{i}"] = starts
-        return pdf
-
-    offsets = summaries.groupBy(*keys).applyInPandas(combine, schema=start_schema)
-    offsets = offsets.select(
-        *keys, "__bkt", *[f"__ss{i}" for i in range(len(names))]
-    )
-
-    joined = scanned.join(offsets, on=[*keys, "__bkt"], how="left")
-    for i, out in enumerate(names):
-        joined = joined.withColumn(
-            out,
-            F.col(f"__pp{i}") * F.coalesce(F.col(f"__ss{i}"), F.lit(0.0))
-            + F.col(f"__qq{i}"),
-        )
-    drop = ["__bkt"] + [
-        f"__{p}{i}" for i in range(len(names))
-        for p in ("c", "b", "pp", "qq", "ss")
-    ]
-    return joined.drop(*drop)
-
-
-def ema_scan(
-    df: DataFrame,
-    spans: Sequence[int],
-    partition_by: str | Sequence[str] = "symbol",
-    order_by: str = "date",
-    col: str = "close",
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """EMA via the block-parallel affine scan (``linear_recurrence``) —
-    numerically equivalent to ``indicators.ema`` (pandas
-    ``ewm(adjust=False)`` seeded from the first value), but with
-    parallelism rows/num_buckets instead of |symbols|. Use when few keys
-    hold long series; the sequential engine stays the bit-exact default.
-
-    The seed (y_0 = x_0) needs a first-row flag; it comes from a
-    groupBy-min + join on the key — an aggregate with map-side combine,
-    NOT a per-key ordered window (which would re-introduce the one-task
-    sort this engine exists to remove)."""
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    mins = df.groupBy(*keys).agg(F.min(order_by).alias("__min_ord"))
-    df = df.join(mins, on=keys, how="left")
-    first = F.col(order_by) == F.col("__min_ord")
-    recs: dict[str, tuple[Column, Column]] = {}
-    for n in spans:
-        a = 2.0 / (n + 1)
-        recs[f"ema{n}"] = (
-            F.when(first, F.lit(0.0)).otherwise(F.lit(1.0 - a)),
-            F.when(first, F.col(col)).otherwise(F.lit(a) * F.col(col)),
-        )
-    out = linear_recurrence(
-        df, recs, order_by=order_by, partition_by=keys,
-        num_buckets=num_buckets,
-    )
-    return out.drop("__min_ord")
-
-
-def kama_scan(
-    df: DataFrame,
-    n: int = 10,
-    fast: int = 2,
-    slow: int = 30,
-    partition_by: str | Sequence[str] = "symbol",
-    order_by: str = "date",
-    col: str = "close",
-    num_buckets: int | None = None,
-    out: str | None = None,
-) -> DataFrame:
-    """KAMA via the affine scan: the smoothing coefficient sc_i depends on
-    the DATA (efficiency ratio), not on the carried state, so the
-    recurrence ``y = (1−sc)·y_prev + sc·x`` is still affine and
-    block-parallelizes. Coefficients (rolling volatility, n-lag change)
-    come from one per-key JVM sort-window — a single codegen'd pass; the
-    serial part the scan removes is the per-key PYTHON fold. Numerically
-    equivalent to ``indicators.kama`` (rtol-level; the sequential engine
-    stays the bit-exact default)."""
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    out_col = out or f"kama{n}"
-    fast_sc = 2.0 / (fast + 1)
-    slow_sc = 2.0 / (slow + 1)
-    w = _ordered_window(order_by, keys)
-    fr = w.rowsBetween(-(n - 1), 0)
-    x = F.col(col)
-    rn = F.row_number().over(w)
-    adiff = F.abs(x - F.coalesce(F.lag(col, 1).over(w), x))
-    vol = F.sum(adiff).over(fr)
-    change = F.abs(x - F.lag(col, n).over(w))
-    er = (
-        F.when(rn <= n, F.lit(0.0))
-        .when(vol > 0, change / vol)
-        .otherwise(F.lit(0.0))
-    )
-    sc = F.pow(er * (fast_sc - slow_sc) + slow_sc, F.lit(2.0))
-    d = df.withColumn("__rn1", rn).withColumn("__sc", sc)
-    first = F.col("__rn1") == 1
-    res = linear_recurrence(
-        d,
-        {out_col: (
-            F.when(first, F.lit(0.0)).otherwise(1.0 - F.col("__sc")),
-            F.when(first, F.col(col)).otherwise(F.col("__sc") * F.col(col)),
-        )},
-        order_by=order_by, partition_by=keys, num_buckets=num_buckets,
-    )
-    return res.drop("__rn1", "__sc")
-
-
-def rsi_scan(
-    df: DataFrame,
-    n: int = 14,
-    partition_by: str | Sequence[str] = "symbol",
-    order_by: str = "date",
-    col: str = "close",
-    num_buckets: int | None = None,
-    out: str | None = None,
-) -> DataFrame:
-    """Wilder RSI via TWO affine scans in one pass (avg gain / avg loss,
-    alpha = 1/n, pandas ewm seeding: the first non-null delta seeds the
-    average). Division edge cases mirror the sequential engine: all-loss
-    frames → RSI 0 via the recurrence, zero-loss with gain → 100, flat
-    (0/0) → null, first row → null."""
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    out_col = out or f"rsi{n}"
-    alpha = 1.0 / n
-    w = _ordered_window(order_by, keys)
-    rn = F.row_number().over(w)
-    delta = F.col(col) - F.lag(col, 1).over(w)
-    gain = F.greatest(delta, F.lit(0.0))
-    loss = F.greatest(-delta, F.lit(0.0))
-    d = (
-        df.withColumn("__rn1", rn)
-        .withColumn("__g", gain)
-        .withColumn("__l", loss)
-    )
-    first2 = F.col("__rn1") <= 2
-    res = linear_recurrence(
-        d,
-        {
-            "__avg_gain": (
-                F.when(first2, F.lit(0.0)).otherwise(F.lit(1.0 - alpha)),
-                F.when(F.col("__rn1") == 1, F.lit(0.0))
-                .when(F.col("__rn1") == 2, F.col("__g"))
-                .otherwise(F.lit(alpha) * F.col("__g")),
-            ),
-            "__avg_loss": (
-                F.when(first2, F.lit(0.0)).otherwise(F.lit(1.0 - alpha)),
-                F.when(F.col("__rn1") == 1, F.lit(0.0))
-                .when(F.col("__rn1") == 2, F.col("__l"))
-                .otherwise(F.lit(alpha) * F.col("__l")),
-            ),
-        },
-        order_by=order_by, partition_by=keys, num_buckets=num_buckets,
-    )
-    ag, al = F.col("__avg_gain"), F.col("__avg_loss")
-    rsi = (
-        F.when(F.col("__rn1") == 1, F.lit(None).cast("double"))
-        .when((al == 0) & (ag > 0), F.lit(100.0))
-        .when((al == 0) & (ag == 0), F.lit(None).cast("double"))
-        .otherwise(100.0 - 100.0 / (1.0 + ag / al))
-    )
-    return (
-        res.withColumn(out_col, rsi)
-        .drop("__rn1", "__g", "__l", "__avg_gain", "__avg_loss")
-    )
-
-
 def gap_fill_daily(
     df: DataFrame,
     keys: Sequence[str],
@@ -877,157 +590,4 @@ def sequence_pattern_match(
             n_matches.alias("n_matches"),
             (n_matches > 0).alias("matched"),
         )
-    )
-
-
-def holt_scan(
-    df: DataFrame,
-    alpha: float = 0.3,
-    beta: float = 0.2,
-    partition_by: str | Sequence[str] = "symbol",
-    order_by: str = "date",
-    col: str = "close",
-    num_buckets: int | None = None,
-    cuts: "list[float] | None" = None,
-) -> DataFrame:
-    """Holt's linear-trend smoothing via a 2x2 MATRIX-affine block scan —
-    the two-state generalization of ``linear_recurrence`` (which carries a
-    scalar). The (level, trend) state evolves as s_t = M s_{t-1} + u_t
-    with constant
-
-        M = [[1-a,        1-a      ],
-             [be*(1-a)-be, be*(1-a)+(1-be)]]
-        u_t = (a*y_t, be*a*y_t)
-
-    and the per-key seed row encoded as an absorbing step (M_1 = 0,
-    u_1 = (y_1, 0)), so no block needs to know whether it holds the key's
-    first row — the zero matrix annihilates any carried state. Matrix
-    products compose associatively, so the same three-stage plan as
-    ``linear_recurrence`` applies: per-(key, bucket) local fold emitting
-    per-row prefix products P (4 doubles) and zero-seed partials B (2
-    doubles); one summary row per bucket; tiny per-key sequential combine
-    over bucket summaries; rowwise finalize s = P @ s_start + B.
-    Parallelism = rows/num_buckets, independent of |keys|.
-
-    Float caveat (same as linear_recurrence): re-association is
-    numerically equivalent (rel err ~1e-12, test-pinned), not
-    bit-identical to ``indicators.holt_linear`` — the sequential engine
-    remains the bit-exact default and the oracle-checked one."""
-    import numpy as np
-    import pandas as pd  # noqa: F401
-
-    from pyspark import StorageLevel
-    from pyspark.sql import types as T
-
-    keys = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
-    oma, omb = 1.0 - alpha, 1.0 - beta
-    m11, m12 = oma, oma
-    m21, m22 = beta * oma - beta, beta * oma + omb
-
-    npart = shuffle_partitions(df)
-    n_bkt = num_buckets or npart
-    mins = df.groupBy(*keys).agg(F.min(order_by).alias("__min_ord"))
-    d = df.join(mins, on=keys, how="left")
-    first = F.col(order_by) == F.col("__min_ord")
-    d = d.withColumn("__first", first.cast("int"))
-    d = d.withColumn("__y", F.col(col).cast("double"))
-    d = d.withColumn("__bkt", _quantile_buckets(d, order_by, n_bkt, cuts=cuts))
-
-    part_cols = ["__p11", "__p12", "__p21", "__p22", "__q1", "__q2"]
-    block_schema = T.StructType(
-        d.schema.fields
-        + [T.StructField(c, T.DoubleType(), True) for c in part_cols]
-    )
-
-    def blockfn(pdf):
-        pdf = pdf.sort_values(order_by, kind="mergesort")
-        y = pdf["__y"].to_numpy(dtype="float64")
-        fr = pdf["__first"].to_numpy().copy()
-        # Rows tied at the per-key minimum order_by all carry __first=1.
-        # Equal order_by values hash to the same quantile bucket, so every
-        # tied row is in THIS block: keep only the first (stable-sort
-        # order) as the absorbing seed, demote the rest to regular rows —
-        # matching the sequential engine, which seeds exactly one row.
-        if fr.sum() > 1:
-            seed_idx = int(np.argmax(fr))
-            fr[:] = 0
-            fr[seed_idx] = 1
-        n = len(y)
-        out = {c: np.empty(n) for c in part_cols}
-        # P = identity, B = 0 before the block starts
-        p = np.eye(2)
-        b1 = b2 = 0.0
-        for j in range(n):
-            if fr[j]:
-                mj = np.zeros((2, 2))
-                u1, u2 = y[j], 0.0
-            else:
-                mj = np.array([[m11, m12], [m21, m22]])
-                u1, u2 = alpha * y[j], beta * alpha * y[j]
-            with np.errstate(under="ignore"):
-                p = mj @ p
-                nb1 = mj[0, 0] * b1 + mj[0, 1] * b2 + u1
-                nb2 = mj[1, 0] * b1 + mj[1, 1] * b2 + u2
-            b1, b2 = nb1, nb2
-            out["__p11"][j], out["__p12"][j] = p[0, 0], p[0, 1]
-            out["__p21"][j], out["__p22"][j] = p[1, 0], p[1, 1]
-            out["__q1"][j], out["__q2"][j] = b1, b2
-        for c in part_cols:
-            pdf[c] = out[c]
-        return pdf
-
-    d = d.repartition(npart, *[F.col(c) for c in keys], F.col("__bkt"))
-    scanned = d.groupBy(*keys, "__bkt").applyInPandas(
-        blockfn, schema=block_schema
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    ordk = F.col(order_by)
-    summaries = scanned.groupBy(*keys, "__bkt").agg(
-        *[F.max_by(F.col(c), ordk).alias(c) for c in part_cols]
-    )
-
-    start_schema = T.StructType(
-        summaries.schema.fields
-        + [T.StructField("__ss1", T.DoubleType(), True),
-           T.StructField("__ss2", T.DoubleType(), True)]
-    )
-
-    def combine(pdf):
-        import numpy as np
-
-        pdf = pdf.sort_values("__bkt", kind="mergesort")
-        s1 = s2 = 0.0
-        ss1 = np.empty(len(pdf))
-        ss2 = np.empty(len(pdf))
-        for j in range(len(pdf)):
-            ss1[j], ss2[j] = s1, s2
-            r = pdf.iloc[j]
-            with np.errstate(under="ignore"):
-                n1 = r["__p11"] * s1 + r["__p12"] * s2 + r["__q1"]
-                n2 = r["__p21"] * s1 + r["__p22"] * s2 + r["__q2"]
-            s1, s2 = n1, n2
-        pdf["__ss1"] = ss1
-        pdf["__ss2"] = ss2
-        return pdf
-
-    offsets = (
-        summaries.groupBy(*keys)
-        .applyInPandas(combine, schema=start_schema)
-        .select(*keys, "__bkt", "__ss1", "__ss2")
-    )
-
-    joined = scanned.join(offsets, on=[*keys, "__bkt"], how="left")
-    ss1 = F.coalesce(F.col("__ss1"), F.lit(0.0))
-    ss2 = F.coalesce(F.col("__ss2"), F.lit(0.0))
-    joined = joined.withColumn(
-        "holt_level",
-        F.col("__p11") * ss1 + F.col("__p12") * ss2 + F.col("__q1"),
-    ).withColumn(
-        "holt_trend",
-        F.col("__p21") * ss1 + F.col("__p22") * ss2 + F.col("__q2"),
-    ).withColumn("holt_fc1", F.col("holt_level") + F.col("holt_trend"))
-    return joined.drop(
-        "__bkt", "__first", "__y", "__min_ord", *part_cols, "__ss1", "__ss2"
     )

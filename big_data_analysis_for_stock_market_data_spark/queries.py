@@ -241,13 +241,13 @@ def w_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w_ema_scan",
-    # The oracle replays the EXACT sequential recursion (recursive CTE,
-    # all literals CAST AS DOUBLE — bare decimals are DECIMAL in DuckDB);
-    # the Spark side is the re-associated block-parallel scan, equivalent
-    # at rtol ~1e-12 (~1e-11 absolute at these magnitudes). Quantizing to
-    # integer CENTI-units (round(ema*100) — double-to-integer rounding is
-    # engine-exact) makes the residual a ~4e-9/row boundary-flip risk:
-    # hash-comparable without pretending the scan is bit-identical.
+    # The oracle replays the sequential recursion (recursive CTE, all
+    # literals CAST AS DOUBLE — bare decimals are DECIMAL in DuckDB); the
+    # Spark side is the per-key fold, pandas ewm(adjust=False), which
+    # divides each step by ((1-a)+a) (see ind_recursive_family). Both
+    # emit integer CENTI-units (round(ema*100) — double-to-integer
+    # rounding is engine-exact), so a last-ulp difference between the two
+    # evaluation orders can only matter at a rounding boundary.
     oracle="""
     WITH RECURSIVE s AS (
       SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value,
@@ -268,18 +268,16 @@ def w_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_ema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMA via the block-parallel affine scan (windows.linear_recurrence):
-    quantile-cut buckets fold in parallel, one summary row per bucket
-    stitches boundaries — parallelism independent of |keys|. Emits the
-    centi-unit fixed-point EMA so the scan is ORACLE-CHECKED against the
-    sequential recursion replayed in SQL (see oracle note); the raw-double
-    surface stays covered by test_global_window's rtol pin. Measured:
-    21.5 s -> 3.3 s vs the sequential per-key pass on a 6.7M-row
-    single-key series (local[32])."""
+    """EMA(10) per user on the per-key recursive fold (indicators.ema: one
+    hash shuffle on the key, each user's series folded in one pandas
+    call, parallelism |keys|). Building it submits no Spark job. Emits
+    the centi-unit fixed-point EMA, oracle-checked against the
+    sequential recursion replayed in SQL (see oracle note)."""
+    from big_data_analysis_for_stock_market_data_spark.operators import indicators as ind
+
     ev = load(spark, sf_dir, "events")
-    out = win_ops.ema_scan(
-        ev, spans=[10], partition_by="user_id", order_by="ts", col="value",
-        num_buckets=8,
+    out = ind.ema(
+        ev, spans=[10], partition_by="user_id", order_by="ts", col="value"
     )
     return out.select(
         "event_id", "user_id", "ts", "value",

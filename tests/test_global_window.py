@@ -144,99 +144,3 @@ def test_prefix_sum_per_key(spark):
         .collect()
     )
     assert got == want
-
-
-def test_linear_recurrence_scan_matches_sequential(spark):
-    """Block-parallel affine scan == the per-key sequential fold (rtol):
-    multi-key, block_len far smaller than the series so the boundary
-    stitch actually runs, varying coefficients."""
-    import numpy as np
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from big_data_analysis_for_stock_market_data_spark.operators.windows import (
-        linear_recurrence,
-    )
-
-    rng = np.random.default_rng(11)
-    rows = []
-    want = {}
-    for key in ("a", "b"):
-        c = rng.uniform(0.2, 0.99, 500)
-        b = rng.normal(0.0, 1.0, 500)
-        y = 0.0
-        for i in range(500):
-            y = c[i] * y + b[i]
-            want[(key, i)] = y
-            rows.append(Row(k=key, t=i, c=float(c[i]), b=float(b[i])))
-    df = spark.createDataFrame(rows)
-    out = linear_recurrence(
-        df, {"y": (F.col("c"), F.col("b"))},
-        order_by="t", partition_by="k", num_buckets=12,
-    )
-    got = {(r.k, r.t): r.y for r in out.collect()}
-    assert len(got) == 1000
-    for kk, w in want.items():
-        assert abs(got[kk] - w) <= 1e-9 * max(1.0, abs(w)), (kk, got[kk], w)
-
-
-def test_ema_scan_matches_pandas_ewm(spark):
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Row
-
-    from big_data_analysis_for_stock_market_data_spark.operators.windows import ema_scan
-
-    rng = np.random.default_rng(3)
-    xs = rng.normal(100.0, 5.0, 700)
-    df = spark.createDataFrame(
-        [Row(symbol="Z", t=i, close=float(x)) for i, x in enumerate(xs)]
-    )
-    out = ema_scan(df, spans=[10, 26], order_by="t", num_buckets=9)
-    got = {r.t: (r.ema10, r.ema26) for r in out.collect()}
-    ref10 = pd.Series(xs).ewm(span=10, adjust=False).mean()
-    ref26 = pd.Series(xs).ewm(span=26, adjust=False).mean()
-    for i in range(700):
-        assert abs(got[i][0] - ref10[i]) <= 1e-9 * max(1.0, abs(ref10[i]))
-        assert abs(got[i][1] - ref26[i]) <= 1e-9 * max(1.0, abs(ref26[i]))
-
-
-def test_kama_scan_matches_sequential_kama(spark):
-    import numpy as np
-    from pyspark.sql import Row
-
-    from big_data_analysis_for_stock_market_data_spark.operators.indicators import kama
-    from big_data_analysis_for_stock_market_data_spark.operators.windows import kama_scan
-
-    rng = np.random.default_rng(21)
-    xs = np.cumsum(rng.normal(0.0, 1.0, 600)) + 100.0
-    df = spark.createDataFrame(
-        [Row(symbol="K", t=i, close=float(x)) for i, x in enumerate(xs)]
-    )
-    want = {r.t: r.kama10
-            for r in kama(df, n=10, order_by="t").collect()}
-    got = {r.t: r.kama10
-           for r in kama_scan(df, n=10, order_by="t", num_buckets=7).collect()}
-    assert len(got) == 600
-    for t in range(600):
-        assert abs(got[t] - want[t]) <= 1e-9 * max(1.0, abs(want[t])), t
-
-
-def test_rsi_scan_matches_sequential_rsi(spark):
-    import numpy as np
-    from pyspark.sql import Row
-
-    from big_data_analysis_for_stock_market_data_spark.operators.indicators import rsi
-    from big_data_analysis_for_stock_market_data_spark.operators.windows import rsi_scan
-
-    rng = np.random.default_rng(22)
-    xs = np.cumsum(rng.normal(0.0, 1.0, 500)) + 100.0
-    df = spark.createDataFrame(
-        [Row(symbol="R", t=i, close=float(x)) for i, x in enumerate(xs)]
-    )
-    want = {r.t: r.rsi14 for r in rsi(df, n=14, order_by="t").collect()}
-    got = {r.t: r.rsi14
-           for r in rsi_scan(df, n=14, order_by="t", num_buckets=6).collect()}
-    assert got[0] is None and (want[0] is None or want[0] != want[0])
-    for t in range(1, 500):
-        assert abs(got[t] - want[t]) <= 1e-9 * max(1.0, abs(want[t])), t

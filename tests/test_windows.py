@@ -5,6 +5,7 @@ import datetime as dt
 from pyspark.sql import Row
 
 from big_data_analysis_for_stock_market_data_spark.operators import windows as W
+from test_io_footer_schema import SF, _jobs_submitted, needs_sf
 
 
 def _ts(minute: int) -> dt.datetime:
@@ -154,38 +155,13 @@ def test_sequence_pattern_match_crafted(spark):
     assert out[3]["event_chain"] == "view>click>purchase"
 
 
-def test_holt_scan_matches_sequential_fold(spark):
-    # 2x2 matrix-affine block scan vs the bit-exact sequential engine:
-    # numerically equivalent (re-association only), rel err pinned
-    import math
+@needs_sf
+def test_w_ema_scan_build_submits_no_job(spark):
+    # The EMA entry runs on the per-key fold: building it is pure planning,
+    # with no quantile-sketch or other probe job before the first action.
+    from big_data_analysis_for_stock_market_data_spark.queries import queries
 
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        indicators as ind,
-    )
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        windows as win,
-    )
-
-    rows = [
-        (k, t, math.sin(0.7 * t + k) * 50 + t * 0.3 + k * 10)
-        for k in range(3)
-        for t in range(400)
-    ]
-    df = spark.createDataFrame(rows, "k int, t int, x double")
-    seq = {
-        (r.k, r.t): (r.holt_level, r.holt_trend)
-        for r in ind.holt_linear(
-            df, partition_by="k", order_by="t", col="x"
-        ).collect()
-    }
-    scan = win.holt_scan(
-        df, partition_by="k", order_by="t", col="x", num_buckets=7
-    ).collect()
-    assert len(scan) == len(seq)
-    for r in scan:
-        el, et = seq[(r.k, r.t)]
-        assert abs(r.holt_level - el) <= 1e-9 * max(1.0, abs(el)), (
-            r.k, r.t
-        )
-        assert abs(r.holt_trend - et) <= 1e-9 * max(1.0, abs(et))
-        assert abs(r.holt_fc1 - (r.holt_level + r.holt_trend)) < 1e-12
+    build = queries()["w_ema_scan"]
+    df, jobs = _jobs_submitted(spark, lambda: build(spark, SF))
+    assert jobs == []
+    assert df.columns == ["event_id", "user_id", "ts", "value", "ema10_centi"]

@@ -79,9 +79,10 @@ def exact_auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     Scalable construction: scores collapse to per-score tie groups first
     (one hash aggregate), then the rank prefix runs as the engine's
     two-phase parallel scan over the DISTINCT-score table
-    (``windows.prefix_sum`` — bucket-local sums in parallel, a
-    |buckets|-row offsets broadcast, never a single-partition global
-    window), and totals are one more aggregate. Works unchanged at any
+    (``windows.prefix_sum`` — key-range buckets from a min/max subquery
+    inside the query, bucket-local sums in parallel, a |buckets|-row
+    offsets broadcast; never a single-partition global window, never a
+    plan-time job), and totals are one more aggregate. Works unchanged at any
     distinct-score cardinality; quantizing scores upstream just shrinks
     the prefix side further.
     """
@@ -126,8 +127,9 @@ def ks_two_sample(
     value, so rows first COLLAPSE to per-distinct-value counts (one hash
     aggregate — the shuffle carries one row per distinct value, not per
     observation), both ECDFs run as the engine's two-phase parallel
-    prefix scan over that distinct table (``windows.prefix_sum`` — never
-    a single-task global window), and the max-abs-diff plus the two
+    prefix scan over that distinct table (``windows.prefix_sum_multi``
+    over key-range buckets — never a single-task global window, never a
+    plan-time job), and the max-abs-diff plus the two
     totals fold in one final aggregate. Every count is integral; the two
     divisions and subtraction are scalar IEEE doubles — engine-portable
     bit-for-bit."""
@@ -182,14 +184,15 @@ def lift_table(
 ) -> DataFrame:
     """Decile lift/gain table with GROUP-ATOMIC buckets: rows collapse to
     distinct-score groups (one hash aggregate), groups order by score
-    DESCENDING through the engine's two-phase parallel prefix scan, and a
-    group's bucket is decided by the count of strictly-higher-scoring
-    rows — floor(k·cum_before/N). Tied scores land wholly in one bucket
-    (bucket sizes flex around ties; the portable alternative to ntile's
-    order-dependent tie splitting), so the result is deterministic on any
-    engine and partitioning. Output per bucket: rows, positives,
-    cumulative rows/positives, cumulative gain and lift (each a single
-    IEEE expression over exact integers).
+    DESCENDING through the engine's two-phase parallel prefix scan
+    (``windows.prefix_sum_multi`` over key-range buckets, planned with no
+    job), and a group's bucket is decided by the count of
+    strictly-higher-scoring rows — floor(k·cum_before/N). Tied scores
+    land wholly in one bucket (bucket sizes flex around ties; the portable
+    alternative to ntile's order-dependent tie splitting), so the result
+    is deterministic on any engine and partitioning. Output per bucket:
+    rows, positives, cumulative rows/positives, cumulative gain and lift
+    (each a single IEEE expression over exact integers).
 
     ``label_col`` is a boolean/0-1 Column or name."""
     from big_data_analysis_for_stock_market_data_spark.operators.windows import (

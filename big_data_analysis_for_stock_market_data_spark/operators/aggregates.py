@@ -398,7 +398,9 @@ def rolling_active_counts(
        window_days);
     3. each interval emits +1 at its start and −1 at its expiry day;
     4. one global running sum over the delta days (the engine's two-phase
-       ``prefix_sum`` — never a single-partition window).
+       ``prefix_sum`` over key-range buckets, whose min/max subquery runs
+       inside the query — never a single-partition window, never a
+       plan-time job).
 
     Output: (day, active_count) at every day the count CHANGES — the
     complete step function of the rolling metric. Shuffles: one on key,
@@ -429,7 +431,7 @@ def rolling_active_counts(
         ).alias("__x")
     ).select("__x.day", "__x.__d")
     per_day = deltas.groupBy("day").agg(F.sum("__d").alias("__dd"))
-    # prefix_sum's quantile bucketing needs a numeric order key; DATE maps
+    # prefix_sum's key-range buckets need a numeric order key; DATE maps
     # losslessly to epoch-day ints
     per_day = per_day.withColumn("__dayi", F.unix_date("day"))
     out = prefix_sum(per_day, "__dd", order_by="__dayi", out_col="__cum")

@@ -176,10 +176,6 @@ _FIXED_COEFS = (
 )
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63) if v >= 0 else ((-v) << 1) - 1
-
-
 def _rice_cost(residual: "np.ndarray", k: int) -> int:
     u = np.where(residual >= 0, residual * 2, -residual * 2 - 1)
     return int((u >> k).sum()) + len(u) * (k + 1)

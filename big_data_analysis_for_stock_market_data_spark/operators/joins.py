@@ -431,77 +431,3 @@ def grid_radius_join(
         .filter(within)
         .drop("__gx", "__gy")
     )
-
-
-def _bloom_positions(key, num_bits: int, num_hashes: int):
-    """k independent bit positions per key: xxhash64 seeded by the hash
-    index, mod m. (Avoids Kirsch-Mitzenmacher h1+j*h2 arithmetic, which
-    overflows under ANSI mode — a fresh seeded hash per j is just as good
-    and has no arithmetic to overflow.)"""
-    s = key.cast("string")
-    return [
-        F.pmod(F.xxhash64(s, F.lit(j)), F.lit(num_bits))
-        for j in range(num_hashes)
-    ]
-
-
-def bloom_prefilter_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    how: str = "inner",
-    num_bits: int = 1 << 14,
-    num_hashes: int = 5,
-) -> DataFrame:
-    """Runtime-filter join: build a Bloom filter over the small side's join
-    keys (one distinct-positions aggregate), inline it as a literal bitmask
-    pre-filter on the big side, then run the exact join.
-
-    The pre-filter drops most non-matching big-side rows BEFORE the join
-    shuffle — at 100 TB the difference between shuffling the whole fact
-    table and shuffling only ~matching rows. False positives are harmless
-    (the exact join removes them); false negatives are impossible (every
-    small-side key sets all its bits). Spark's InjectRuntimeFilter applies
-    this automatically to some shuffle-join plans; this operator makes the
-    pattern explicit and tunable for plans the optimizer declines (e.g. a
-    computed join key, or a pre-filter reused across several consumers).
-
-    Driver participation is ``num_bits/64`` longs (control-plane only, like
-    an AQE statistics exchange — never row data). Default 16 Ki bits / 5
-    hashes: ~1e-4 false-positive rate at ~600 distinct build keys; size
-    ``num_bits`` ~ 16x the build-side distinct count for that rate.
-
-    Only big-side-REDUCING join types are legal: the pre-filter drops
-    big-side rows with no small-side match, which is exactly the inner /
-    semi contract but silently corrupts left/outer results (unmatched big
-    rows would vanish — except Bloom false positives, which would come
-    back null-padded, making the output collision-dependent)."""
-    if how not in ("inner", "semi", "left_semi", "leftsemi", "cross"):
-        raise ValueError(
-            "bloom_prefilter_join preserves only inner/semi semantics "
-            f"(the pre-filter drops unmatched big-side rows), got {how!r}"
-        )
-    width = num_bits // 64
-    pos = small.select(
-        F.explode(F.array(*_bloom_positions(F.col(on), num_bits, num_hashes))).alias("p")
-    ).distinct()
-    words = (
-        pos.select(
-            (F.col("p") / 64).cast("int").alias("w"),
-            F.call_function("shiftleft", F.lit(1).cast("long"), (F.col("p") % 64).cast("int")).alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("b").alias("bits"))
-        .collect()
-    )
-    mask = [0] * width
-    for r in words:
-        mask[r.w] = r.bits
-    lit_mask = F.array(*[F.lit(x).cast("long") for x in mask])
-    cond = None
-    for p in _bloom_positions(F.col(on), num_bits, num_hashes):
-        word = F.element_at(lit_mask, (p / 64).cast("int") + 1)
-        bit = F.call_function("shiftleft", F.lit(1).cast("long"), (p % 64).cast("int"))
-        hit = word.bitwiseAND(bit) != 0
-        cond = hit if cond is None else (cond & hit)
-    return big.filter(cond).join(small, on=on, how=how)

@@ -31,20 +31,6 @@ from big_data_analysis_for_stock_market_data_spark.ml.pipeline import (
 BUCKETS = 10_000
 
 
-def hash_sample(
-    df: DataFrame,
-    fraction: float,
-    key_col: str,
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by the md5 bucket of
-    ``key_col`` — the deterministic replacement for ``df.sample``."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    b = split_bucket(F.col(key_col), seed, BUCKETS)
-    return df.filter(b < int(fraction * BUCKETS))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     strata_col: str,

@@ -43,10 +43,6 @@ def tokens_col(col: Column) -> Column:
     return F.filter(raw, lambda t: t != "")
 
 
-def with_tokens(df: DataFrame, col: str = "text", out: str = "tokens") -> DataFrame:
-    return df.withColumn(out, tokens_col(F.col(col)))
-
-
 def quality_stats(df: DataFrame, col: str = "text") -> DataFrame:
     """Per-document quality signals: lengths, word counts, character-class
     ratios, stopword ratio (English list), mean token length. All ratios

@@ -301,21 +301,6 @@ def _read_code(br: _LsbBitReader, table) -> "int | None":
     return None
 
 
-def _prefix_encode(bw: _LsbBitWriter, value: int, codes) -> None:
-    """LZ77 length/distance prefix coding (spec 5.2.2): value -> prefix
-    symbol + extra bits; symbol written through ``codes``."""
-    v = value - 1
-    if v < 4:
-        ln, code = codes[v]
-        bw.write_code(code, ln)
-        return
-    nbits = v.bit_length() - 1
-    prefix = 2 * nbits + ((v >> (nbits - 1)) & 1)
-    ln, code = codes[prefix]
-    bw.write_code(code, ln)
-    bw.write(v & ((1 << (nbits - 1)) - 1), nbits - 1)
-
-
 def _prefix_symbol(value: int) -> int:
     v = value - 1
     if v < 4:

@@ -100,10 +100,11 @@ def shuffle_partitions(df: DataFrame) -> int:
 
 def compute_order_cuts(df: DataFrame, order_by: str, n: int) -> list[float]:
     """n-1 quantile cut points of ``order_by`` as plain floats — ONE
-    approxQuantile pass. Callers that hold a cheaper frame exposing the
-    same column (e.g. the raw fact table before window enrichment) should
-    compute cuts there and pass them down: the sketch pass then scans a
-    column-pruned plan instead of re-running the full upstream pipeline."""
+    approxQuantile job, run by the caller before planning. Callers that
+    hold a cheaper frame exposing the same column (e.g. the raw fact table
+    before window enrichment) should compute cuts there and pass them
+    down: the sketch then scans a column-pruned plan instead of re-running
+    the full upstream pipeline."""
     key = F.col(order_by).cast("double")
     probs = [i / n for i in range(1, n)]
     if not probs:
@@ -113,19 +114,12 @@ def compute_order_cuts(df: DataFrame, order_by: str, n: int) -> list[float]:
     )
 
 
-def _quantile_buckets(
-    df: DataFrame, order_by: str, n: int,
-    cuts: "list[float] | None" = None,
-) -> Column:
-    """Deterministic bucket id from n-1 quantile cut points of ``order_by``
-    (numeric/timestamp). Unlike ``repartitionByRange``, the cut points are
-    computed ONCE and baked into the expression, so every plan branch that
-    evaluates it assigns identical buckets — recomputation-safe."""
+def _quantile_buckets(order_by: str, cuts: Sequence[float]) -> Column:
+    """Bucket id of ``order_by`` (numeric/timestamp) from precomputed cut
+    points (``compute_order_cuts``): the number of cuts below the key. The
+    cuts are literals in the expression, so every plan branch that
+    evaluates it assigns identical buckets."""
     key = F.col(order_by).cast("double")
-    if cuts is None:
-        cuts = compute_order_cuts(df, order_by, n)
-    if not cuts:
-        return F.lit(0)
     # plain conditional sum, not a higher-order aggregate(): lambda
     # functions inside expressions that later become grouping keys hit
     # Catalyst binding bugs when the plan branches (observed
@@ -136,17 +130,55 @@ def _quantile_buckets(
     return bucket
 
 
+def _with_range_buckets(df: DataFrame, order_by: str) -> DataFrame:
+    """``df`` plus a ``__bkt`` column in ``[0, n)``, ``n =
+    shuffle_partitions(df)``: equal-width buckets over the finite range of
+    ``order_by`` (numeric/timestamp). The range comes from one uncorrelated
+    scalar subquery that runs inside the query, so building the plan
+    submits no job.
+
+    The map is monotone in Spark's ascending order, which is all the
+    two-phase scans below need to stitch exactly: NULL and −inf go to
+    bucket 0, +inf and NaN to bucket n−1 (Spark sorts NULL first and NaN
+    after +inf). Min and max do not depend on row order, so every plan
+    branch that evaluates the subquery assigns the same buckets, even if
+    it runs once per branch.
+
+    Balance is equal-width, not equal-count: a skewed key puts more rows
+    into one bucket, and a bucket is one task. Correctness never depends
+    on balance."""
+    n = shuffle_partitions(df)
+    key = F.col(order_by).cast("double")
+    # Spark orders NaN above +inf, so this keeps exactly the finite keys
+    finite = F.when(F.abs(key) < float("inf"), key)
+    # halves keep hi - lo finite when the keys span ±1.7e308
+    rng = df.select(
+        F.struct(
+            (F.min(finite) * 0.5).alias("lo"),
+            (F.max(finite) * 0.5 - F.min(finite) * 0.5).alias("span"),
+        )
+    ).scalar()
+    # try_divide: a zero or NULL span (one distinct finite key, or none)
+    # yields NULL, which greatest() skips — bucket 0. greatest/least put
+    # −inf at 0 and +inf and NaN (Spark's largest double) at n−1.
+    pos = F.try_divide(key * 0.5 - F.col("__rng.lo"), F.col("__rng.span")) * n
+    bucket = F.floor(F.least(F.greatest(pos, F.lit(0.0)), F.lit(n - 1.0)))
+    # the range as a column of its own: the subquery appears once per
+    # plan branch instead of once per use in the bucket expression
+    return (
+        df.withColumn("__rng", rng).withColumn("__bkt", bucket).drop("__rng")
+    )
+
+
 def prefix_sum(
     df: DataFrame,
     value_col: str,
     order_by: str,
     partition_by: str | Sequence[str] | None = None,
     out_col: str | None = None,
-    num_buckets: int | None = None,
-    exact_decimal: bool = True,
 ) -> DataFrame:
     """Distributed inclusive prefix sum (cumulative sum) in global or
-    per-key order.
+    per-key order, summed as decimal(28,8) and returned as double.
 
     With a ``partition_by`` key this is the plain per-key running-sum
     window — one hash shuffle on the key, parallelism = |keys|, no
@@ -155,64 +187,24 @@ def prefix_sum(
     and broadcast it, which for a high-cardinality key (user_id at
     100 TB) is a multi-GB broadcast to every executor.
 
-    The keyless (global-order) case uses the two-phase parallel scan:
-    bucket-local running sums in parallel, then each bucket shifted by the
-    cumulative total of its predecessors — an offsets frame of exactly
-    |buckets| rows (bounded by config, never by data), safely broadcast.
-    ``Window.orderBy(...)`` alone would compute this through ONE task.
-
-    With ``exact_decimal`` the re-association is exact (decimal addition
-    is associative), so either plan is bit-identical to the sequential
-    window."""
+    Without a key it is ``prefix_sum_multi`` of the one column: the
+    two-phase scan over key-range buckets. ``Window.orderBy(...)`` alone
+    would compute it through ONE task."""
     keys: list[str] = (
         [] if partition_by is None
         else [partition_by] if isinstance(partition_by, str)
         else list(partition_by)
     )
     out = out_col or f"cumsum_{value_col}"
-    val = (
-        F.col(value_col).cast("decimal(28,8)")
-        if exact_decimal else F.col(value_col)
-    )
-    if keys:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(order_by)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        result = F.sum(val).over(w)
-        if exact_decimal:
-            result = result.cast("double")
-        return df.withColumn(out, result)
-
-    n = int(
-        num_buckets or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n))
-    local_w = (
-        Window.partitionBy("__bkt")
+    if not keys:
+        return prefix_sum_multi(df, [value_col], order_by, [out])
+    w = (
+        Window.partitionBy(*keys)
         .orderBy(order_by)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    d = d.withColumn("__local", F.sum(val).over(local_w))
-
-    totals = d.groupBy("__bkt").agg(F.sum(val).alias("__tot"))
-    off_w = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__bkt", F.sum("__tot").over(off_w).alias("__off")
-    )
-    d = d.join(F.broadcast(offsets), on=["__bkt"], how="left")
-    if exact_decimal:
-        # sum(decimal(28,8)) widens to (38,8); adding two of those would
-        # overflow precision 38 and Spark silently DROPS scale to 7 —
-        # quantizing the result. Cast back to (28,8) so the final addition
-        # stays at scale 8 (documented bound: |total| < 1e20).
-        local = F.col("__local").cast("decimal(28,8)")
-        off = F.coalesce(F.col("__off").cast("decimal(28,8)"), F.lit(0))
-        total = (local + off).cast("double")
-    else:
-        total = F.col("__local") + F.coalesce(F.col("__off"), F.lit(0))
-    return d.withColumn(out, total).drop("__bkt", "__local", "__off")
+    result = F.sum(F.col(value_col).cast("decimal(28,8)")).over(w)
+    return df.withColumn(out, result.cast("double"))
 
 
 def prefix_sum_multi(
@@ -220,28 +212,30 @@ def prefix_sum_multi(
     value_cols: Sequence[str],
     order_by: str,
     out_cols: Sequence[str] | None = None,
-    num_buckets: int | None = None,
-    exact_decimal: bool = True,
 ) -> DataFrame:
     """Global-order inclusive prefix sums of SEVERAL columns in ONE
-    two-phase parallel scan: one quantile bucket assignment, one
-    bucket-local window pass carrying all the running sums, one
-    |buckets|-row totals aggregate, one offsets broadcast. Calling
-    ``prefix_sum`` k times costs k full scans + k broadcasts; this is the
-    fused form (the KS ECDF pair, multi-metric cumulative dashboards).
-    Same exactness contract as ``prefix_sum``."""
+    two-phase parallel scan: rows go to key-range buckets
+    (``_with_range_buckets``: a min/max subquery inside the query, no
+    sketch job), one bucket-local window pass carries all the running sums, a
+    |buckets|-row totals aggregate turns into per-bucket offsets, and one
+    offsets broadcast (bounded by config, never by data) shifts each
+    bucket by the totals of its predecessors. Calling ``prefix_sum`` k
+    times costs k full scans + k broadcasts; this is the fused form (the
+    KS ECDF pair, multi-metric cumulative dashboards).
+
+    Sums run in decimal(28,8), so the re-association is exact and the
+    result is bit-identical to the sequential window whatever the bucket
+    boundaries; equal-width buckets over a skewed key are unbalanced, not
+    wrong."""
     cols = list(value_cols)
     outs = list(out_cols) if out_cols else [f"cumsum_{c}" for c in cols]
     if len(outs) != len(cols):
         raise ValueError("out_cols must match value_cols")
-    n = int(
-        num_buckets or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
 
     def val(c):
-        return F.col(c).cast("decimal(28,8)") if exact_decimal else F.col(c)
+        return F.col(c).cast("decimal(28,8)")
 
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n))
+    d = _with_range_buckets(df, order_by)
     local_w = (
         Window.partitionBy("__bkt")
         .orderBy(order_by)
@@ -261,15 +255,13 @@ def prefix_sum_multi(
     d = d.join(F.broadcast(offsets), on=["__bkt"], how="left")
     helpers = ["__bkt"]
     for i, out in enumerate(outs):
-        if exact_decimal:
-            local = F.col(f"__local{i}").cast("decimal(28,8)")
-            off = F.coalesce(F.col(f"__off{i}").cast("decimal(28,8)"), F.lit(0))
-            d = d.withColumn(out, (local + off).cast("double"))
-        else:
-            d = d.withColumn(
-                out,
-                F.col(f"__local{i}") + F.coalesce(F.col(f"__off{i}"), F.lit(0)),
-            )
+        # sum(decimal(28,8)) widens to (38,8); adding two of those would
+        # overflow precision 38 and Spark silently DROPS scale to 7 —
+        # quantizing the result. Cast back to (28,8) so the final addition
+        # stays at scale 8 (documented bound: |total| < 1e20).
+        local = F.col(f"__local{i}").cast("decimal(28,8)")
+        off = F.coalesce(F.col(f"__off{i}").cast("decimal(28,8)"), F.lit(0))
+        d = d.withColumn(out, (local + off).cast("double"))
         helpers += [f"__local{i}", f"__off{i}"]
     return d.drop(*helpers)
 
@@ -281,34 +273,28 @@ def rolling_apply_parallel(
     lookback: int,
     order_by: str,
     partition_by: str | Sequence[str] | None = None,
-    num_buckets: int | None = None,
-    cuts: "list[float] | None" = None,
+    *,
+    cuts: Sequence[float],
 ) -> DataFrame:
     """Parallel bounded-history rolling computation INSIDE a partition key —
     the answer to 'one symbol's decade of history still runs on one core'.
 
-    ``cuts`` (optional): precomputed ``compute_order_cuts`` output. Without
-    it, the cut-point sketch runs against ``df`` itself — which at plan
-    time re-executes ``df``'s full upstream lineage once. Callers holding
-    a cheaper ancestor frame with the same ``order_by`` column should
-    sketch there and pass the cuts down (one pruned scan instead of two
-    full pipeline executions — the difference between 1x and 2x input
-    passes at 100 TB).
-
-    Rows are bucketed by deterministic quantile cuts of ``order_by``; each
-    bucket additionally receives the previous bucket's last ``lookback``
-    rows as read-only context, so any computation whose dependence is
-    bounded by ``lookback`` rows (rolling means/extrema/sums, lags up to
-    ``lookback``) is EXACT at bucket boundaries while buckets run in
-    parallel. ``fn(pdf) -> pdf`` is applied per (keys, bucket) group on the
-    timestamp-sorted frame (context included); context rows are dropped
-    from the output afterwards.
+    ``cuts``: ``compute_order_cuts`` output, computed by the caller
+    (``stock.feature_hints``), ideally on a cheaper ancestor frame with
+    the same ``order_by`` column. Rows are bucketed by those cut points;
+    each bucket additionally receives the previous bucket's last
+    ``lookback`` rows as read-only context, so any computation whose
+    dependence is bounded by ``lookback`` rows (rolling means/extrema/sums,
+    lags up to ``lookback``) is EXACT at bucket boundaries while buckets
+    run in parallel. ``fn(pdf) -> pdf`` is applied per (keys, bucket) group
+    on the timestamp-sorted frame (context included); context rows are
+    dropped from the output afterwards.
 
     Contract: every preceding bucket must hold ≥ ``lookback`` rows
-    (quantile buckets are near-equal-count; choose ``num_buckets`` ≤
-    |rows| / (4·lookback) to be safe). Unbounded recursions (EMA-family)
-    do NOT satisfy the bounded-dependence contract — use the exact
-    per-key ``applyInPandas`` pass for those.
+    (quantile cuts give near-equal-count buckets; use at most
+    |rows| / (4·lookback) of them to be safe). Unbounded recursions
+    (EMA-family) do NOT satisfy the bounded-dependence contract — use the
+    exact per-key ``applyInPandas`` pass for those.
     """
     import pandas as pd  # noqa: F401
 
@@ -319,10 +305,7 @@ def rolling_apply_parallel(
         else [partition_by] if isinstance(partition_by, str)
         else list(partition_by)
     )
-    n = int(
-        num_buckets or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n, cuts=cuts))
+    d = df.withColumn("__bkt", _quantile_buckets(order_by, cuts))
 
     # One pass marks each bucket's last `lookback` rows and EXPLODES them
     # into (own bucket, next bucket as context) — no union of two plan
@@ -363,25 +346,25 @@ def global_lag_lead(
     order_by: str,
     kind: str = "lag",
     out_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Globally-ordered LAG/LEAD *without* the single-partition collapse
     (the 100 TB answer to Q3 when no natural partition key exists).
 
-    Plan: bucket rows by DETERMINISTIC range boundaries (a one-pass quantile
-    sketch of ``order_by``, n-1 cut points held on the driver — bounded by
-    the bucket count, never by data size), run the window per bucket
-    (parallel, partition-local), then stitch bucket boundaries: a
+    Plan: bucket rows by key range (``_with_range_buckets``: equal-width
+    buckets between the key's min and max, which a scalar subquery
+    computes inside the query — no plan-time job), run the window per
+    bucket (parallel, partition-local), then stitch bucket boundaries: a
     |buckets|-row aggregate carries each bucket's first/last value to its
-    neighbor via a broadcast join. Cost: one sketch pass + one hash shuffle
-    on the bucket id — vs ``Window.orderBy(col)`` which funnels the entire
-    table through ONE task.
+    neighbor via a broadcast join. Cost: one min/max pass + one hash
+    shuffle on the bucket id — vs ``Window.orderBy(col)`` which funnels
+    the entire table through ONE task.
 
     Explicit buckets (not ``repartitionByRange``) are load-bearing: the
     range partitioner SAMPLES its bounds per shuffle, so the window branch
     and the boundary branch could see different partition assignments and
-    mis-stitch; a computed bucket column is identical everywhere it is
-    evaluated.
+    mis-stitch; a bucket computed from the key's min and max is identical
+    everywhere it is evaluated. Balance is equal-width: a skewed key
+    loads one bucket more, and the stitch stays exact.
 
     ``order_by`` must be a numeric/timestamp total order (unique values) —
     the same requirement any deterministic lag has (Q2). Offset is fixed at
@@ -391,11 +374,7 @@ def global_lag_lead(
     if kind not in ("lag", "lead"):
         raise ValueError(f"kind must be 'lag' or 'lead', got {kind!r}")
     out = out_col or f"{kind}_{value_col}"
-    n = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n))
+    d = _with_range_buckets(df, order_by)
 
     local_w = Window.partitionBy("__bkt").orderBy(order_by)
     neighbor = (F.lag if kind == "lag" else F.lead)(value_col, 1).over(local_w)

@@ -165,9 +165,11 @@ def w3_lead_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w1_scalable_global_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same semantics as w1_lag_label_parity but WITHOUT the single-
-    partition window (Q3 at scale): range-repartition + partition-local lag
-    + broadcast boundary stitch (operators/windows.py global_lag_lead).
-    Identical oracle — proving plan change, not semantics change."""
+    partition window (Q3 at scale): key-range buckets (min/max from a
+    scalar subquery inside the query, so building runs no job) +
+    bucket-local lag + broadcast boundary stitch (operators/windows.py
+    global_lag_lead). Identical oracle — proving plan change, not
+    semantics change."""
     events = load(spark, sf_dir, "events")
     d = win_ops.global_lag_lead(
         events, "value", order_by="ts", kind="lag", out_col="__prev"
@@ -194,8 +196,8 @@ def w_prefix_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running total via windows.prefix_sum. With a partition
     key this is the plain per-key running-sum window (parallelism =
     |users|, no auxiliary broadcast — the scalable plan for keyed data);
-    the keyless form uses the two-phase bucket scan with a |buckets|-row
-    broadcast. Exact under decimal addition either way."""
+    the keyless form is the two-phase scan over key-range buckets with a
+    |buckets|-row broadcast. Exact under decimal addition either way."""
     events = load(spark, sf_dir, "events")
     out = win_ops.prefix_sum(
         events, "value", order_by="ts", partition_by="user_id",
@@ -525,8 +527,9 @@ def j3_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j4_bloom_prefilter",
-    # the bloom is a lossless pre-filter (no false negatives; false
-    # positives die in the exact join), so the oracle is the PLAIN join
+    # the runtime Bloom filter Spark may inject is lossless (no false
+    # negatives; false positives die in the exact join), so the oracle is
+    # the same plain join
     oracle=f"""
     SELECT o.o_orderpriority,
            COUNT(*) AS n_items,
@@ -540,11 +543,14 @@ def j3_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j4_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime-filter join: a Bloom filter built from the selective orders
-    subset prunes non-matching lineitem rows BEFORE the join — at 100 TB
-    the fact side shuffles only ~matching rows instead of everything. The
-    filter is lossless by construction, so the result is exactly the plain
-    join (operators/joins.bloom_prefilter_join)."""
+    """Selective-dimension join, with the runtime filter left to Spark: the
+    plain inner join of lineitem with the selective orders subset. Under
+    the broadcast threshold the orders side is broadcast, so lineitem never
+    shuffles; with broadcast off, Spark's ``InjectRuntimeFilter`` adds a
+    ``might_contain`` Bloom filter on lineitem once its scan exceeds
+    ``spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold``,
+    so at 100 TB the fact side shuffles only ~matching rows. Building the
+    entry runs no job."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -552,7 +558,7 @@ def j4_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderpriority") == "1-URGENT")
         & (F.col("o_totalprice") > 150000)
     ).select(F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority")
-    joined = join_ops.bloom_prefilter_join(li, o, on="l_orderkey")
+    joined = li.join(o, on="l_orderkey")
     return (
         joined.groupBy("o_orderpriority")
         .agg(
@@ -4995,15 +5001,12 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful per-key running totals (O(1) state/key) replayed to
-    completion on applyInPandasWithState — pinned to the API this sandbox
-    can actually execute (the transformWithStateInPandas twin needs
-    protobuf and is explicitly experimental until testable,
-    streaming/ops.streaming_running_totals)."""
+    completion on applyInPandasWithState
+    (streaming/ops.streaming_running_totals)."""
     from big_data_analysis_for_stock_market_data_spark import streaming as st
 
     rt = st.streaming_running_totals(
-        _events_stream(spark, sf_dir), "user_id", "ts", "value",
-        api="apply_in_pandas",
+        _events_stream(spark, sf_dir), "user_id", "ts", "value"
     )
     _, sink = st.run_to_memory(rt, output_mode="append")
     return spark.table(sink)
@@ -6739,7 +6742,8 @@ def w_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact trailing-7-day active-user count as a step function — no
     per-window COUNT DISTINCT: gaps-and-islands coverage intervals per
     user, ±1 deltas at interval boundaries, one two-phase prefix sum over
-    delta days (operators/aggregates.rolling_active_counts)."""
+    delta days in key-range buckets, planned with no job
+    (operators/aggregates.rolling_active_counts)."""
     ev = load(spark, sf_dir, "events")
     return agg_ops.rolling_active_counts(ev, key="user_id", ts_col="ts",
                                          window_days=7)

@@ -391,100 +391,38 @@ def streaming_running_totals(
     key_col: str,
     ts_col: str,
     value_col: str,
-    api: str = "auto",
 ) -> DataFrame:
     """Per-key running totals (count, exact integer-micros sum, max so
-    far) with O(1) state per key, on either stateful API:
+    far) with O(1) state per key, on ``applyInPandasWithState``
+    (GroupState). Every statistic is association-free, so a replay
+    equals the batch running window."""
 
-    - ``api='apply_in_pandas'``: ``applyInPandasWithState`` (GroupState)
-      — dependency-free; the verified, registry-pinned path;
-    - ``api='transform_with_state'``: Spark 4's
-      ``transformWithStateInPandas`` (StatefulProcessor + ValueState).
-      EXPERIMENTAL here: its Python worker needs ``protobuf``, absent in
-      this environment, so the branch is mirror-maintained but has no
-      executable test — do not route verified entries through it;
-    - ``api='auto'``: modern API when protobuf is importable, else the
-      GroupState path. Outputs are designed to be identical either way
-      (every statistic is association-free).
-    """
-    if api == "auto":
-        try:
-            import google.protobuf  # noqa: F401
-            api = "transform_with_state"
-        except ImportError:
-            api = "apply_in_pandas"
-
-    if api == "apply_in_pandas":
-        def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-            n, s, mx = state.get if state.exists else (0, 0, None)
-            # Arrow may deliver a key's micro-batch rows as SEVERAL chunks
-            # in arbitrary chunk order; folding chunk-by-chunk would apply
-            # the running statistics out of timestamp order. Concatenate the
-            # whole micro-batch for this key, then sort ONCE and fold ONCE.
-            # State stays O(1) per key; only one micro-batch is buffered.
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if chunks:
-                whole = (
-                    chunks[0]
-                    if len(chunks) == 1
-                    else pd.concat(chunks, ignore_index=True)
-                )
-                out, n, s, mx = _fold_running_totals(
-                    key[0], whole, ts_col, value_col, n, s, mx
-                )
-                yield out
-            state.update((n, s, mx))
-
-        return df.groupBy(key_col).applyInPandasWithState(
-            fold,
-            outputStructType=_RUNNING_TOTALS_OUT,
-            stateStructType=_RUNNING_TOTALS_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    if api != "transform_with_state":
-        raise ValueError(f"unknown api {api!r}")
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", _RUNNING_TOTALS_STATE
+    def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        n, s, mx = state.get if state.exists else (0, 0, None)
+        # Arrow may deliver a key's micro-batch rows as SEVERAL chunks
+        # in arbitrary chunk order; folding chunk-by-chunk would apply
+        # the running statistics out of timestamp order. Concatenate the
+        # whole micro-batch for this key, then sort ONCE and fold ONCE.
+        # State stays O(1) per key; only one micro-batch is buffered.
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            whole = (
+                chunks[0]
+                if len(chunks) == 1
+                else pd.concat(chunks, ignore_index=True)
             )
+            out, n, s, mx = _fold_running_totals(
+                key[0], whole, ts_col, value_col, n, s, mx
+            )
+            yield out
+        state.update((n, s, mx))
 
-        def handleInputRows(self, key, rows, timerValues):
-            if self._totals.exists():
-                n, s, mx = self._totals.get()
-            else:
-                n, s, mx = 0, 0, None
-            # Same chunk-order hazard as the GroupState path: concat the
-            # key's whole micro-batch, sort once, fold once.
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                whole = (
-                    chunks[0]
-                    if len(chunks) == 1
-                    else pd.concat(chunks, ignore_index=True)
-                )
-                out, n, s, mx = _fold_running_totals(
-                    key[0], whole, ts_col, value_col, n, s, mx
-                )
-                yield out
-            self._totals.update((n, s, mx))
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
+    return df.groupBy(key_col).applyInPandasWithState(
+        fold,
         outputStructType=_RUNNING_TOTALS_OUT,
+        stateStructType=_RUNNING_TOTALS_STATE,
         outputMode="append",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -18,3 +18,21 @@ def spark():
         },
     )
     yield s
+
+
+@pytest.fixture
+def spark_conf(spark):
+    """``spark_conf(key, value)`` sets a session conf for this test only;
+    every key it touched is restored (or unset) afterwards."""
+    saved: dict[str, str | None] = {}
+
+    def set_conf(key: str, value) -> None:
+        saved.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, str(value))
+
+    yield set_conf
+    for key, value in saved.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)

@@ -1,6 +1,9 @@
 """Scalable global-order window (windows.global_lag_lead): value parity
 with the single-partition form, boundary stitching, empty partitions, and
-the plan property that no single-partition exchange exists."""
+the plan property that no exchange moves the big side into one partition.
+The bucket count is ``spark.sql.shuffle.partitions``."""
+
+import re
 
 import pytest
 from pyspark.sql import Window
@@ -21,13 +24,14 @@ def series(spark):
 
 @pytest.mark.parametrize("kind", ["lag", "lead"])
 @pytest.mark.parametrize("n_parts", [1, 7, 64])
-def test_matches_single_partition_window(spark, series, kind, n_parts):
-    # n_parts=64 > distinct range buckets for 500 rows => exercises
-    # empty/sparse partitions in the boundary stitch
+def test_matches_single_partition_window(
+    spark, spark_conf, series, kind, n_parts
+):
+    # n_parts=64 buckets over 500 rows => exercises sparse buckets in the
+    # boundary stitch
+    spark_conf("spark.sql.shuffle.partitions", n_parts)
     got = (
-        win_ops.global_lag_lead(
-            series, "v", order_by="t", kind=kind, num_partitions=n_parts
-        )
+        win_ops.global_lag_lead(series, "v", order_by="t", kind=kind)
         .orderBy("t")
         .collect()
     )
@@ -40,14 +44,34 @@ def test_matches_single_partition_window(spark, series, kind, n_parts):
     assert got == want
 
 
+def _operator(line: str) -> str:
+    """A plan line without its tree-drawing prefix."""
+    return re.sub(r"^[\s:|+-]*", "", line)
+
+
 def test_no_single_partition_exchange(series):
     df = win_ops.global_lag_lead(series, "v", order_by="t", kind="lag")
-    plan = P.explain_str(df, "simple")
-    # the big side shuffles by the deterministic bucket id (parallel
-    # windows); the ONLY SinglePartition exchange is the |buckets|-row
-    # bounds frame that gets broadcast back
-    assert "hashpartitioning(__bkt" in plan
-    assert plan.count("Exchange SinglePartition") == 1
+    lines = P.explain_str(df, "simple").splitlines()
+    # the big side shuffles by the bucket id (parallel windows)
+    assert any("hashpartitioning(__bkt" in ln for ln in lines)
+    # no exchange moves big-side rows into one partition: each
+    # SinglePartition exchange takes either the partial of a 1-row
+    # aggregate (the key-range subquery) or the per-bucket aggregate
+    # (the |buckets|-row bounds frame), and feeds the 1-row aggregate's
+    # final step or the bounds frame's window over __bkt
+    single = [
+        i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln
+    ]
+    assert single
+    for i in single:
+        parent, child = _operator(lines[i - 1]), _operator(lines[i + 1])
+        one_row = child.startswith("HashAggregate(keys=[], functions=[partial_")
+        per_bucket = re.match(r"(Hash|Sort)Aggregate\(keys?=\[__bkt#", child)
+        assert one_row or per_bucket, child
+        if one_row:
+            assert parent.startswith("HashAggregate(keys=[]"), parent
+        else:
+            assert parent.startswith("Sort [__bkt#"), parent
 
 
 def test_range_exchange_reused_not_recomputed(series):
@@ -71,11 +95,12 @@ def test_bad_kind_rejected(series):
         win_ops.global_lag_lead(series, "v", order_by="t", kind="middle")
 
 
-def test_prefix_sum_matches_sequential_window(spark, series):
+def test_prefix_sum_matches_sequential_window(spark, spark_conf, series):
     from pyspark.sql import functions as F
 
+    spark_conf("spark.sql.shuffle.partitions", 7)
     got = (
-        win_ops.prefix_sum(series, "v", order_by="t", num_buckets=7)
+        win_ops.prefix_sum(series, "v", order_by="t")
         .orderBy("t")
         .collect()
     )
@@ -109,10 +134,13 @@ def test_prefix_sum_keyed_plan_is_pure_window(spark):
     assert "Window" in plan
 
 
-def test_prefix_sum_keyless_offsets_broadcast_is_bounded(spark, series):
+def test_prefix_sum_keyless_offsets_broadcast_is_bounded(
+    spark, spark_conf, series
+):
     # The keyless two-phase scan broadcasts ONLY the |buckets|-row offsets
     # frame (bounded by config, never by data) — exactly one broadcast.
-    out = win_ops.prefix_sum(series, "v", order_by="t", num_buckets=7)
+    spark_conf("spark.sql.shuffle.partitions", 7)
+    out = win_ops.prefix_sum(series, "v", order_by="t")
     plan = P.explain_str(out, "simple")
     assert plan.count("BroadcastExchange") == 1
 
@@ -126,7 +154,7 @@ def test_prefix_sum_per_key(spark):
         (F.col("id") % 17 * 1.0).alias("v"),
     )
     got = (
-        win_ops.prefix_sum(df, "v", order_by="t", partition_by="k", num_buckets=5)
+        win_ops.prefix_sum(df, "v", order_by="t", partition_by="k")
         .orderBy("k", "t")
         .collect()
     )

@@ -6,6 +6,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from big_data_analysis_for_stock_market_data_spark.operators import joins as J
+from test_io_footer_schema import SF, needs_sf
 
 
 def _ts(minute):
@@ -80,61 +81,24 @@ def test_range_join(spark):
     assert got == {5: "low", 15: "mid"}  # 25 unmatched (inner)
 
 
-def test_bloom_prefilter_join_equals_plain_join(spark):
-    """False positives are removed by the exact join; false negatives are
-    impossible — so the bloom-prefiltered join must equal the plain join
-    exactly. Also check the pre-filter actually prunes non-matching rows."""
-    from pyspark.sql import functions as F
+@needs_sf
+def test_j4_runtime_bloom_filter_is_injected_by_spark(spark, spark_conf):
+    """j4 runs the plain join and leaves the runtime filter to Spark: with
+    broadcast off and the application-side scan threshold lowered,
+    InjectRuntimeFilter puts a ``might_contain`` Bloom filter on lineitem.
+    (At the default threshold lineitem at this scale is too small for it,
+    and at the engine's broadcast threshold orders is broadcast.)"""
+    from big_data_analysis_for_stock_market_data_spark.queries import queries
 
-    from big_data_analysis_for_stock_market_data_spark.operators.joins import (
-        bloom_prefilter_join,
+    spark_conf("spark.sql.autoBroadcastJoinThreshold", -1)
+    spark_conf(
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold",
+        "1b",
     )
-
-    big = spark.range(0, 5000).select(
-        (F.col("id") % 997).alias("k"), F.col("id").alias("payload")
-    )
-    small = spark.range(0, 40).select(
-        (F.col("id") * 13).alias("k"), (F.col("id") * 2.0).alias("dim")
-    )
-    got = bloom_prefilter_join(big, small, on="k").collect()
-    want = big.join(small, on="k").collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-    # the pre-filter drops unmatched big rows, so only inner/semi
-    # semantics survive — other join types must be rejected loudly
-    import pytest as _pytest
-    for bad in ("left", "left_outer", "full", "right"):
-        with _pytest.raises(ValueError, match="inner/semi"):
-            bloom_prefilter_join(big, small, on="k", how=bad)
-    semi = bloom_prefilter_join(big, small, on="k", how="left_semi").collect()
-    want_semi = big.join(small, on="k", how="left_semi").collect()
-    assert sorted(map(tuple, semi)) == sorted(map(tuple, want_semi))
-
-    # the literal-bitmask pre-filter prunes most non-matching keys
-    from big_data_analysis_for_stock_market_data_spark.operators.joins import (
-        _bloom_positions,
-    )
-    num_bits, k = 1 << 14, 5
-    pos = small.select(
-        F.explode(F.array(*_bloom_positions(F.col("k"), num_bits, k))).alias("p")
-    ).distinct().collect()
-    words = {}
-    for r in pos:
-        words[r.p // 64] = words.get(r.p // 64, 0) | (1 << (r.p % 64))
-    mask = [
-        w - (1 << 64) if (w := words.get(i, 0)) >= (1 << 63) else w
-        for i in range(num_bits // 64)
-    ]
-    lit_mask = F.array(*[F.lit(x).cast("long") for x in mask])
-    cond = None
-    for p in _bloom_positions(F.col("k"), num_bits, k):
-        word = F.element_at(lit_mask, (p / 64).cast("int") + 1)
-        bit = F.call_function("shiftleft", F.lit(1).cast("long"), (p % 64).cast("int"))
-        hit = word.bitwiseAND(bit) != 0
-        cond = hit if cond is None else (cond & hit)
-    survivors = big.filter(cond).count()
-    matching = big.join(small.select("k").distinct(), on="k").count()
-    assert matching <= survivors < big.count() * 0.2
+    df = queries()["j4_bloom_prefilter"](spark, SF)
+    df.collect()
+    assert "might_contain" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_binned_range_join_equals_plain_range_join(spark):

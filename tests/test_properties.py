@@ -2,12 +2,13 @@
 label domain, row-order invariance of grouped aggregates, dedup
 idempotence, salted-vs-direct aggregation equality, scalable-lag parity."""
 
+import functools
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_analysis_for_stock_market_data_spark.operators import dedup as dd
@@ -121,22 +122,108 @@ def test_salted_agg_equals_direct(spark, vals):
                 assert got == want
 
 
-@given(vals=values)
+#: order keys that sit at the edges of Spark's double order: NULL sorts
+#: first, NaN after +inf; ±1e300 stretch the finite key range
+EDGE_KEYS = (None, math.nan, math.inf, -math.inf, 1e300, -1e300)
+
+
+@st.composite
+def keyed_rows(draw):
+    """(t, v) rows with unique double order keys t, edge keys included;
+    empty and one-row frames come up as well."""
+    keys = draw(
+        st.lists(
+            st.floats(allow_nan=False, allow_infinity=False, width=64),
+            max_size=30, unique=True,
+        )
+    )
+    keys = [k for k in keys if abs(k) != 1e300]
+    keys += draw(st.lists(st.sampled_from(EDGE_KEYS), unique=True))
+    keys = draw(st.permutations(keys))
+    vals = draw(
+        st.lists(
+            st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
+            min_size=len(keys), max_size=len(keys),
+        )
+    )
+    return list(zip(keys, vals))
+
+
+def _canon(rows):
+    """Rows as comparable tuples (NaN != NaN, so it becomes a marker)."""
+    return [
+        tuple("NaN" if isinstance(x, float) and math.isnan(x) else x
+              for x in r)
+        for r in rows
+    ]
+
+
+#: bucket counts: one bucket, a few, and more buckets than rows
+BUCKETS = (1, 3, 64)
+
+
+def _at_each_bucket_count(spark, spark_conf, want, build):
+    """``want``'s rows, and ``build()``'s at every count in BUCKETS, keyed
+    by the count (0 for ``want``). A scan fixes its bucket count when it
+    is built, so each branch is built at its count and the union of all
+    of them runs as one query at the session's partition count."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    frames = [want.withColumn("__n", F.lit(0))]
+    for n in BUCKETS:
+        spark_conf(key, n)
+        got = build().select(*want.columns)
+        frames.append(got.withColumn("__n", F.lit(n)))
+    spark_conf(key, before)
+    union = functools.reduce(DataFrame.unionByName, frames)
+    out = {n: [] for n in (0, *BUCKETS)}
+    for r in union.orderBy("__n", "t").collect():
+        out[r["__n"]].append(r[:-1])
+    return {n: _canon(rows) for n, rows in out.items()}
+
+
+@given(rows=keyed_rows())
+@example(rows=[])
+@example(rows=[(math.nan, 1.0)])
 @SETTINGS
-def test_global_lag_matches_window(spark, vals):
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "t int, v double"
+def test_global_lag_matches_window(spark, spark_conf, rows):
+    df = spark.createDataFrame(rows, "t double, v double")
+    want = df.withColumn("lag_v", F.lag("v", 1).over(Window.orderBy("t")))
+    got = _at_each_bucket_count(
+        spark, spark_conf, want,
+        lambda: win_ops.global_lag_lead(df, "v", order_by="t", kind="lag"),
     )
-    got = (
-        win_ops.global_lag_lead(df, "v", order_by="t", kind="lag",
-                                num_partitions=3)
-        .orderBy("t").collect()
+    for n in BUCKETS:
+        assert got[n] == got[0], n
+
+
+@given(rows=keyed_rows())
+@example(rows=[])
+@example(rows=[(None, 1.0)])
+@SETTINGS
+def test_prefix_sum_matches_window(spark, spark_conf, rows):
+    df = spark.createDataFrame(rows, "t double, v double").withColumn(
+        "w", F.lit(0.5) - F.col("v")
     )
-    want = (
-        df.withColumn("lag_v", F.lag("v", 1).over(Window.orderBy("t")))
-        .orderBy("t").collect()
-    )
-    assert got == want
+    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
+
+    def running(c):
+        return F.sum(F.col(c).cast("decimal(28,8)")).over(w).cast("double")
+
+    want = df.select("t", running("v").alias("cv"), running("w").alias("cw"))
+    builds = {
+        "prefix_sum": lambda: win_ops.prefix_sum(
+            win_ops.prefix_sum(df, "v", order_by="t", out_col="cv"),
+            "w", order_by="t", out_col="cw",
+        ),
+        "prefix_sum_multi": lambda: win_ops.prefix_sum_multi(
+            df, ["v", "w"], order_by="t", out_cols=["cv", "cw"]
+        ),
+    }
+    for name, build in builds.items():
+        got = _at_each_bucket_count(spark, spark_conf, want, build)
+        for n in BUCKETS:
+            assert got[n] == got[0], (name, n)
 
 
 def test_hash_sampling_partition_invariant(spark):

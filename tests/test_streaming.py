@@ -481,9 +481,7 @@ def test_running_totals_chunk_order_race(spark, stream_dir):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
     try:
         stream = st.read_stream_parquet(spark, d, EVENTS_SCHEMA)
-        rt = st.streaming_running_totals(
-            stream, "user_id", "ts", "value", api="apply_in_pandas"
-        )
+        rt = st.streaming_running_totals(stream, "user_id", "ts", "value")
         _, sink = st.run_to_memory(rt, output_mode="append")
         got = spark.table(sink).toPandas()
     finally:

@@ -2,6 +2,7 @@
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 
 from big_data_analysis_for_stock_market_data_spark.operators import windows as W
@@ -156,12 +157,26 @@ def test_sequence_pattern_match_crafted(spark):
 
 
 @needs_sf
-def test_w_ema_scan_build_submits_no_job(spark):
-    # The EMA entry runs on the per-key fold: building it is pure planning,
-    # with no quantile-sketch or other probe job before the first action.
+@pytest.mark.parametrize("name", [
+    "w_ema_scan",
+    "w1_scalable_global_lag",
+    "w_rolling_active_users",
+    "ml_auc_exact",
+    "ml_ks_2sample",
+    "ml_lift_table",
+    "j4_bloom_prefilter",
+])
+def test_w_ema_scan_build_submits_no_job(spark, name):
+    # Building these entries is pure planning: the EMA runs on the per-key
+    # fold, the global-order scans take their bucket range from a subquery
+    # inside the query, and j4's runtime filter is Spark's — no sketch,
+    # collect or other probe job before the first action.
     from big_data_analysis_for_stock_market_data_spark.queries import queries
 
-    build = queries()["w_ema_scan"]
+    build = queries()[name]
     df, jobs = _jobs_submitted(spark, lambda: build(spark, SF))
     assert jobs == []
-    assert df.columns == ["event_id", "user_id", "ts", "value", "ema10_centi"]
+    if name == "w_ema_scan":
+        assert df.columns == [
+            "event_id", "user_id", "ts", "value", "ema10_centi"
+        ]

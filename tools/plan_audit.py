@@ -113,11 +113,9 @@ NESTED_LOOP_OK = {
 MAX_EXCHANGES = 9
 
 #: Entries whose construction may legitimately touch the driver:
-#: j4's Bloom build collects num_bits/64 longs (a bitmask, control-plane
-#: by design — joins.py bloom_prefilter_join docstring); streaming
-#: entries drain a memory sink by contract; ML entries train models.
+#: streaming entries drain a memory sink by contract; ML entries train
+#: models.
 DRIVER_ACTION_OK = {
-    "j4_bloom_prefilter",
     # iterative fixpoint tests: a bounded .limit(1).count() per round is
     # the loop-termination probe, not data movement
     "dedup_clusters",

@@ -803,8 +803,10 @@ def semantic_dedup(
     keep-against-survivors variant is inherently sequential and is the
     documented non-goal.)
 
-    Scale: the quantizer is ``simsearch.deterministic_kmeans`` (broadcast
-    centroids, one corpus pass per iteration); pair cost is
+    Scale: the quantizer is ``simsearch.deterministic_kmeans``, the same
+    one IVF uses, and every assignment is the narrow nearest-centroid
+    kernel (``simsearch._nearest_cells``: one broadcast centroid array,
+    one corpus pass, no shuffle); pair cost is
     Σ|cell|² — n_clusters must grow ∝ corpus/target_cell_size, exactly
     the IVF sizing rule. Cosine is rounded to ``round_to`` before the
     threshold test so the accept set is identical on every engine.
@@ -825,7 +827,7 @@ def semantic_dedup(
     LOWEST-id near neighbor for pruned rows (null for kept).
     """
     from big_data_analysis_for_stock_market_data_spark.operators.simsearch import (
-        _sq_dist,
+        _nearest_cells,
         cosine,
         deterministic_kmeans,
     )
@@ -833,17 +835,7 @@ def semantic_dedup(
     cents = deterministic_kmeans(
         df, n_clusters, n_iters, id_col, vec_col, seed
     )
-    w_assign = Window.partitionBy(id_col).orderBy(
-        _sq_dist(F.col(vec_col), F.col("centroid")).asc(),
-        F.col("cluster").asc(),
-    )
-    assigned = (
-        df.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w_assign))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, vec_col, "cluster")
-    )
+    assigned = _nearest_cells(df.select(id_col, vec_col), cents, vec_col, 1)
     # assigned feeds several consumers (cell sizes, both pair sides, the
     # final spine join); without the checkpoint the kmeans + assignment
     # lineage re-executes once per consumer (r06 plan audit: 111

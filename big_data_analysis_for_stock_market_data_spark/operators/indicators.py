@@ -435,27 +435,6 @@ def holt_linear(
     )
 
 
-def macd(df: DataFrame, pairs: Iterable[tuple[int, int]] = ((12, 26),),
-         partition_by="symbol", order_by="date", col="close") -> DataFrame:
-    """MACD_{a,b} = EMA_a - EMA_b (reference consumed macd510..macd1226 and
-    differenced them in Python at ``G_2_rf_nordd_fe.py:92-96``)."""
-    pairs = [tuple(p) for p in pairs]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        cache: dict[int, pd.Series] = {}
-        for a, b in pairs:
-            for n in (a, b):
-                if n not in cache:
-                    cache[n] = pdf[col].ewm(span=n, adjust=False).mean()
-            pdf[f"macd{a}{b}"] = cache[a] - cache[b]
-        return pdf
-
-    return _recursive_apply(
-        df, partition_by, order_by,
-        {f"macd{a}{b}": T.DoubleType() for a, b in pairs}, fn,
-    )
-
-
 def rsi(df: DataFrame, n: int = 14, partition_by="symbol", order_by="date",
         col="close", out: str | None = None) -> DataFrame:
     """Wilder RSI: 100 - 100/(1+RS), RS = Wilder-EMA(gains)/Wilder-EMA(losses)
@@ -498,38 +477,6 @@ def _seq_rolling_sum(a, n: int):
             acc = acc + w[:, j]
         out[n - 1:] = acc
     return out
-
-
-def kama(df: DataFrame, n: int = 10, fast: int = 2, slow: int = 30,
-         partition_by="symbol", order_by="date", col="close",
-         out: str | None = None) -> DataFrame:
-    """Kaufman adaptive MA: efficiency ratio scales the smoothing constant
-    between fast and slow EMA alphas; recurrence runs as a numpy loop per
-    symbol partition."""
-    import numpy as np
-
-    out_col = out or f"kama{n}"
-    fast_sc = 2.0 / (fast + 1)
-    slow_sc = 2.0 / (slow + 1)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[col].to_numpy(dtype="float64")
-        m = len(x)
-        change = np.abs(x - np.roll(x, n))
-        vol = _seq_rolling_sum(np.abs(np.diff(x, prepend=x[0])), n)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            er = np.where(vol > 0, change / vol, 0.0)
-        er[:n] = 0.0
-        sc = (er * (fast_sc - slow_sc) + slow_sc) ** 2
-        y = np.empty(m)
-        if m:
-            y[0] = x[0]
-            for i in range(1, m):
-                y[i] = y[i - 1] + sc[i] * (x[i] - y[i - 1])
-        pdf[out_col] = y
-        return pdf
-
-    return _recursive_apply(df, partition_by, order_by, {out_col: T.DoubleType()}, fn)
 
 
 def sar(df: DataFrame, partition_by="symbol", order_by="date", col="close",

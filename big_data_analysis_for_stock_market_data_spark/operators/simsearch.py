@@ -358,111 +358,6 @@ def ann_join(
     )
 
 
-def ivf_index(
-    corpus: DataFrame,
-    n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-):
-    """IVF coarse quantizer: seeded k-means over the corpus; every vector is
-    assigned to its nearest centroid. Returns (assigned corpus with a
-    ``__cluster`` column, centroids DataFrame (__cluster, __center)).
-
-    At scale this is the write-once index step: the assigned corpus is
-    persisted clustered/partitioned by ``__cluster``, so probing reads only
-    n_probe/n_clusters of the data (partition pruning does the skipping)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    corpus = ensure_parallelism(corpus)
-    with_vec = corpus.withColumn(
-        "__features", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    km = KMeans(k=n_clusters, seed=seed, featuresCol="__features",
-                predictionCol="__cluster")
-    from big_data_analysis_for_stock_market_data_spark.ml.pipeline import (
-        strip_training_summaries,
-    )
-
-    # shed the KMeans training summary before transform: it pins the
-    # SparkSession in the closure, which is non-serializable once any
-    # Observation has run (see ml/pipeline.strip_training_summaries)
-    model = strip_training_summaries(km.fit(with_vec))
-    assigned = model.transform(with_vec).drop("__features")
-    centroids = corpus.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "__cluster int, __center array<double>",
-    )
-    return assigned, centroids
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-    round_to: int | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: k-means coarse quantizer, each query probes
-    its ``n_probe`` nearest centroids, exact cosine re-ranks within the
-    probed cells. ``n_probe == n_clusters`` degrades gracefully to exact
-    brute force (asserted in tests). Candidate cost ≈ |corpus|·n_probe/
-    n_clusters per query versus |corpus| for brute force. ``round_to``
-    rounds the cosine before ranking (same cross-engine tie-stability
-    knob as ``brute_force_topk``)."""
-    assigned, centroids = ivf_index(corpus, n_clusters, id_col, vec_col, seed)
-
-    # squared L2 to each centroid; top n_probe cells per query
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("__qvec"), F.col("__center"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    q_cells = (
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-        )
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("__d2", d2)
-    )
-    pw = Window.partitionBy("__qid").orderBy(F.col("__d2").asc(), F.col("__cluster"))
-    probes = (
-        q_cells.withColumn("__pr", F.row_number().over(pw))
-        .filter(F.col("__pr") <= n_probe)
-        .select("__qid", "__qvec", "__cluster")
-    )
-
-    cand = (
-        assigned.join(F.broadcast(probes), "__cluster")
-        .filter(F.col(id_col) != F.col("__qid"))
-    )
-    score = cosine(F.col(vec_col), F.col("__qvec"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = cand.select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        score.alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
-
-
 def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -526,6 +421,39 @@ def _sq_dist(vec: Column, cent: Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
+def _nearest_cells(
+    df: DataFrame, cents: DataFrame, vec_col: str, n: int
+) -> DataFrame:
+    """The nearest-centroid kernel: ``df`` plus a ``cluster`` column, one
+    row for each of the row's ``n`` nearest centroids in (squared
+    distance, cluster id) order — the order a per-row window over the
+    same keys gives, ties to the lower id. ``n = 1`` is the k-means and
+    IVF assignment; ``n = n_probe`` gives a query's probe cells.
+
+    The centroids (cluster, centroid) are aggregated into ONE array row,
+    crossed into ``df`` as a broadcast, and each row sorts its own
+    distances in place: a narrow pass, instead of shuffling |df|·|cents|
+    rows into a per-row window."""
+    table = cents.agg(
+        F.collect_list(F.struct("cluster", "centroid")).alias("__cents")
+    )
+    ranked = F.array_sort(
+        F.transform(
+            F.col("__cents"),
+            lambda c: F.struct(
+                _sq_dist(F.col(vec_col), c.getField("centroid")).alias("d"),
+                c.getField("cluster").alias("cluster"),
+            ),
+        )
+    )
+    cells = F.transform(F.slice(ranked, 1, n), lambda s: s.getField("cluster"))
+    return (
+        df.crossJoin(F.broadcast(table))
+        .withColumn("cluster", F.explode(cells))
+        .drop("__cents")
+    )
+
+
 def deterministic_kmeans(
     corpus: DataFrame,
     n_clusters: int = 8,
@@ -534,15 +462,16 @@ def deterministic_kmeans(
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
-    """Lloyd iterations made engine-deterministic — the oracle-checkable
-    coarse quantizer behind the IVF scale path (``ivf_index`` keeps Spark
-    ML's KMeans for production; THIS variant exists so the full iterative
-    algorithm can be certified against an external SQL replay):
+    """Lloyd iterations made engine-deterministic — the one coarse
+    quantizer behind IVF, IVF-PQ and ``dedup.semantic_dedup``. Every step
+    is a pure data function, so an external SQL replay certifies the full
+    iterative algorithm:
 
     - init: the ``n_clusters`` vectors with the smallest md5 bucket of
       their id (``ml.split_bucket``'s trick — a pure data function, not a
       partition-seeded sample); cluster ids 0..n-1 in (bucket, id) order;
-    - assign: argmin squared distance, ties to the lowest cluster id;
+    - assign: argmin squared distance, ties to the lowest cluster id
+      (``_nearest_cells`` with n = 1);
     - update: per-dimension mean with DECIMAL(18,9)-exact sums (addition
       order cannot perturb the centroid), divided in double; empty
       clusters keep their previous centroid;
@@ -570,15 +499,8 @@ def deterministic_kmeans(
         )
     )
     for _ in range(n_iters):
-        joined = corpus.select(id_col, vec_col).crossJoin(F.broadcast(cents))
-        w_arg = Window.partitionBy(id_col).orderBy(
-            _sq_dist(F.col(vec_col), F.col("centroid")).asc(),
-            F.col("cluster").asc(),
-        )
-        assigned = (
-            joined.withColumn("__rn", F.row_number().over(w_arg))
-            .filter(F.col("__rn") == 1)
-            .select(id_col, vec_col, "cluster")
+        assigned = _nearest_cells(
+            corpus.select(id_col, vec_col), cents, vec_col, 1
         )
         dims = assigned.select(
             "cluster", F.posexplode(F.col(vec_col)).alias("dim", "val")
@@ -615,69 +537,79 @@ def deterministic_kmeans(
             # and every downstream reference (corpus assign, query
             # probe, PQ encode) re-executes the WHOLE training lineage
             # — measured 16 parquet scans / 37 exchanges for
-            # ivf_det_topk at 2 iterations. The checkpointed frame is
+            # ivf_topk at 2 iterations. The checkpointed frame is
             # n_clusters rows; values are unchanged.
             .localCheckpoint(eager=True)
         )
     return cents
 
 
-def ivf_det_topk(
+def _ivf_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    n_clusters: int,
+    n_probe: int,
+    n_iters: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    seed: int,
+) -> DataFrame:
+    """The IVF index-and-probe step: quantize the corpus
+    (``deterministic_kmeans``), assign every vector to its nearest cell,
+    and pair each query with the vectors of its ``n_probe`` nearest
+    cells. Returns ``corpus``'s columns plus ``__qid``/``__qvec``, one row
+    per (vector, query) pair, self-pairs excluded."""
+    cents = deterministic_kmeans(
+        corpus, n_clusters, n_iters, id_col, vec_col, seed
+    )
+    assigned = _nearest_cells(corpus, cents, vec_col, 1)
+    probes = _nearest_cells(
+        queries.select(
+            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
+        ),
+        cents, "__qvec", n_probe,
+    )
+    return (
+        assigned.join(F.broadcast(probes), "cluster")
+        .filter(F.col(id_col) != F.col("__qid"))
+        .dropDuplicates([id_col, "__qid"])
+    )
+
+
+def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_clusters: int = 8,
-    n_probe: int = 3,
+    n_clusters: int = 16,
+    n_probe: int = 4,
     n_iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
-    round_to: int = 6,
+    round_to: int | None = None,
 ) -> DataFrame:
-    """IVF ANN top-k over the deterministic quantizer: assign the corpus to
-    final centroids, probe each query's ``n_probe`` nearest cells, exact
-    cosine re-rank (rounded before ranking for cross-engine tie order).
-    Same probe-prunes-the-scan shape as ``ivf_topk``; every step replayable
-    in SQL."""
-    cents = deterministic_kmeans(
-        corpus, n_clusters, n_iters, id_col, vec_col, seed
+    """IVF approximate top-k: the deterministic k-means quantizer
+    (``deterministic_kmeans``), each query probes its ``n_probe`` nearest
+    cells, exact cosine re-ranks within the probed cells. ``n_probe ==
+    n_clusters`` degrades to exact brute force (asserted in tests).
+    Candidate cost ≈ |corpus|·n_probe/n_clusters per query versus |corpus|
+    for brute force; at scale the assigned corpus is persisted
+    partitioned by cell, so probes prune partitions. ``round_to`` rounds
+    the cosine before ranking (same cross-engine tie-stability knob as
+    ``brute_force_topk``). Every step is replayable in SQL."""
+    cand = _ivf_candidates(
+        corpus, queries, n_clusters, n_probe, n_iters, id_col, vec_col,
+        query_id_col, seed,
     )
-    w_assign = Window.partitionBy(id_col).orderBy(
-        _sq_dist(F.col(vec_col), F.col("centroid")).asc(),
-        F.col("cluster").asc(),
-    )
-    assigned = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w_assign))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, vec_col, "cluster")
-    )
-    w_probe = Window.partitionBy("__qid").orderBy(
-        _sq_dist(F.col("__qvec"), F.col("centroid")).asc(),
-        F.col("cluster").asc(),
-    )
-    probes = (
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-        )
-        .crossJoin(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= n_probe)
-        .select("__qid", "__qvec", "cluster")
-    )
-    cand = (
-        assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col(id_col) != F.col("__qid"))
-        .dropDuplicates([id_col, "__qid"])
-    )
+    score = cosine(F.col(vec_col), F.col("__qvec"))
+    if round_to is not None:
+        score = F.round(score, round_to)
     scored = cand.select(
         F.col("__qid").alias(query_id_col),
         F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col(vec_col), F.col("__qvec")), round_to).alias(
-            "cos_sim"
-        ),
+        score.alias("cos_sim"),
     )
     w_rank = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
@@ -695,11 +627,10 @@ def ivf_det_topk(
 # per d/m-dim subspace); approximate distances come from per-subspace
 # lookup tables (ADC), so the corpus is scanned as m bytes/vector instead
 # of d floats — at 100 TB that is the difference between RAM-resident and
-# not. Codebook families mirror the LSH/IVF precedent: 'md5' derives
-# centroid components from md5-60 uniforms INSIDE the expression (no
-# dim-sized literals, externally replayable in any SQL engine — the oracle
-# mode); a SparkML-KMeans-trained codebook would be the quality-tuned
-# production variant (same encode/ADC machinery).
+# not. The codebook derives centroid components from md5-60 uniforms
+# INSIDE the expression (no dim-sized literals, externally replayable in
+# any SQL engine, so the oracle checks it); a trained codebook would plug
+# into the same encode/ADC machinery.
 # ---------------------------------------------------------------------------
 
 def _pq_centroid(sub: Column, cent: Column, j: Column) -> Column:
@@ -836,40 +767,16 @@ def ivfpq_det_topk(
     100 TB the probed cells are partition-pruned AND each candidate costs
     m code lookups, not dim float multiplies. Every stage (Lloyd
     iterations, cell assignment, codebook, encode, ADC) is replayable in
-    external SQL, so the WHOLE composition is hash-verifiable."""
+    external SQL, so the WHOLE composition is hash-verifiable. Shares
+    its index-and-probe step with ``ivf_topk``; only the scoring
+    differs."""
     d_sub = dim // m
-    cents = deterministic_kmeans(
-        corpus, n_clusters, n_iters, id_col, vec_col, seed
+    encoded = pq_encode(
+        corpus.select(id_col, vec_col), col=vec_col, m=m, k=pq_k, dim=dim
     )
-    w_assign = Window.partitionBy(id_col).orderBy(
-        _sq_dist(F.col(vec_col), F.col("centroid")).asc(),
-        F.col("cluster").asc(),
-    )
-    assigned = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w_assign))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, vec_col, "cluster")
-    )
-    encoded = pq_encode(assigned, col=vec_col, m=m, k=pq_k, dim=dim)
-    w_probe = Window.partitionBy("__qid").orderBy(
-        _sq_dist(F.col("__qvec"), F.col("centroid")).asc(),
-        F.col("cluster").asc(),
-    )
-    probes = (
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-        )
-        .crossJoin(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= n_probe)
-        .select("__qid", "__qvec", "cluster")
-    )
-    cand = (
-        encoded.join(F.broadcast(probes), "cluster")
-        .filter(F.col(id_col) != F.col("__qid"))
-        .dropDuplicates([id_col, "__qid"])
+    cand = _ivf_candidates(
+        encoded, queries, n_clusters, n_probe, n_iters, id_col, vec_col,
+        query_id_col, seed,
     )
     qvec = F.col("__qvec")
     approx = F.aggregate(

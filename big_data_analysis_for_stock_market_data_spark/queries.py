@@ -3564,20 +3564,21 @@ def _ivf_oracle_sql(
 
 @register("simsearch_ivf_det_topk", oracle=_ivf_oracle_sql())
 def simsearch_ivf_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-5 over the DETERMINISTIC quantizer
+    """IVF ANN top-5 over the engine's one quantizer
     (simsearch.deterministic_kmeans): md5-seeded init, fixed 2 Lloyd
     iterations with decimal-exact centroid means, 3-probe search, 6dp
     pre-rank cosine — the entire ITERATIVE algorithm replayed and
-    hash-verified by the SQL oracle. The Spark-ML-KMeans variant
-    (simsearch_ivf_topk) stays as the production path."""
+    hash-verified by the SQL oracle (operators/simsearch.ivf_topk; the
+    same function simsearch_ivf_topk runs at full probe)."""
     from big_data_analysis_for_stock_market_data_spark.operators import simsearch as ss
 
     emb = load(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ss.ivf_det_topk(
-        emb, queries_df, k=5, n_clusters=8, n_probe=3, n_iters=2, seed=42
+    return ss.ivf_topk(
+        emb, queries_df, k=5, n_clusters=8, n_probe=3, n_iters=2, seed=42,
+        round_to=6,
     )
 
 
@@ -3591,7 +3592,8 @@ def simsearch_ivfpq_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB ANN layout (partition-pruned scan × m-byte codes), with EVERY
     stage (Lloyd iterations, assignment, codebook, encode, ADC) replayed
     and hash-verified by the SQL oracle
-    (operators/simsearch.ivfpq_det_topk)."""
+    (operators/simsearch.ivfpq_det_topk, which shares ivf_topk's
+    index-and-probe step)."""
     from big_data_analysis_for_stock_market_data_spark.operators import simsearch as ss
 
     emb = load(spark, sf_dir, "embeddings")
@@ -3607,7 +3609,7 @@ def simsearch_ivfpq_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "simsearch_ivf_topk",
     # exact oracle via the index-structure invariant: with
-    # n_probe == n_clusters the IVF machinery (seeded k-means assign →
+    # n_probe == n_clusters the IVF machinery (k-means assign →
     # per-cell scan → cosine re-rank) MUST reproduce the flat exact scan
     # — any vector lost or duplicated by the cell partitioning breaks
     # the hash. So the oracle is plain brute-force top-5 (the
@@ -3638,14 +3640,14 @@ def simsearch_ivfpq_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def simsearch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-5 with the seeded (production) k-means quantizer, run
-    at full probe: partition-by-cell + scan-all-cells must equal the
-    flat exact scan — the invariant that certifies the index plumbing
-    end-to-end regardless of where k-means put the centroids. The
-    pruned-probe search (n_probe < n_clusters) is covered by
-    simsearch_ivf_det_topk's full SQL replay; at scale the assigned
-    corpus is persisted partitioned by cell so probes prune
-    partitions."""
+    """IVF ANN top-5 over the deterministic k-means quantizer (16 cells,
+    2 Lloyd iterations), run at full probe: partition-by-cell +
+    scan-all-cells must equal the flat exact scan — the invariant that
+    certifies the index plumbing end-to-end regardless of where k-means
+    put the centroids. The pruned-probe search (n_probe < n_clusters) is
+    covered by simsearch_ivf_det_topk's full SQL replay of the same
+    function; at scale the assigned corpus is persisted partitioned by
+    cell so probes prune partitions."""
     from big_data_analysis_for_stock_market_data_spark.operators import simsearch as ss
 
     emb = load(spark, sf_dir, "embeddings")

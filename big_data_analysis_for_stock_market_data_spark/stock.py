@@ -30,24 +30,29 @@ from big_data_analysis_for_stock_market_data_spark.operators import windows as w
 MINUTES_PER_DAY = 390  # 09:30-16:00 trading session
 
 
-def _uniform(seed_col, salt: int, hash_fn: str = "xxhash64"):
-    """Deterministic uniform in [0,1) from a row id — hashing, not rand():
-    reproducible independent of partitioning, task retries, and row order.
-    ``hash_fn='md5'`` derives the value from md5 hex (identical in every
-    SQL engine — the oracle-parity variant; xxhash64 is faster and stays
-    the default)."""
+def _hash_long(seed_col, salt: int, hash_fn: str = "xxhash64"):
+    """Deterministic non-negative long from a row id and a salt.
+    ``hash_fn='md5'`` takes the first 15 hex digits of md5 (identical in
+    every SQL engine — the oracle-parity variant; xxhash64 is faster and
+    stays the default)."""
     if hash_fn == "xxhash64":
-        h = F.abs(F.xxhash64(seed_col, F.lit(salt)))
-    elif hash_fn == "md5":
-        h = F.conv(
+        return F.abs(F.xxhash64(seed_col, F.lit(salt)))
+    if hash_fn == "md5":
+        return F.conv(
             F.substring(
                 F.md5(F.concat_ws(":", seed_col.cast("string"), F.lit(salt))),
                 1, 15,
             ),
             16, 10,
         ).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
+def _uniform(seed_col, salt: int, hash_fn: str = "xxhash64"):
+    """Deterministic uniform in [0,1) from a row id — hashing, not rand():
+    reproducible independent of partitioning, task retries, and row order
+    (``_hash_long`` names the hash families)."""
+    h = _hash_long(seed_col, salt, hash_fn)
     return (h % F.lit(1_000_000_007)).cast("double") / 1_000_000_007.0
 
 
@@ -113,24 +118,7 @@ def make_stock_fixture(
         (F.least(open_, F.col("close")) * spread_lo).alias("low"),
         "close",
         (
-            100
-            + (
-                F.abs(F.xxhash64("id", F.lit(seed + 4)))
-                if hash_fn == "xxhash64"
-                else F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ":", F.col("id").cast("string"),
-                                F.lit(seed + 4),
-                            )
-                        ),
-                        1, 15,
-                    ),
-                    16, 10,
-                ).cast("long")
-            )
-            % 10_000
+            100 + _hash_long(F.col("id"), seed + 4, hash_fn) % 10_000
         ).cast("int").alias("volume"),
     ).withColumn("date_only", F.to_date("date"))
 

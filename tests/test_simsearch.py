@@ -1,11 +1,14 @@
 """Similarity-search tests (operators/simsearch.py)."""
 
 import math
+import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from big_data_analysis_for_stock_market_data_spark.operators import simsearch as S
+from test_io_footer_schema import SF, needs_sf
 
 
 def _vecs(spark):
@@ -84,16 +87,46 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     )
     exact = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in ss.brute_force_topk(emb, queries, k=5).collect()
+        for r in ss.brute_force_topk(emb, queries, k=5, round_to=6).collect()
     }
     # probing every cell makes IVF exhaustive -> must equal brute force
     full = {
         (r.query_id, r.rank): r.neighbor_id
         for r in ss.ivf_topk(
-            emb, queries, k=5, n_clusters=8, n_probe=8
+            emb, queries, k=5, n_clusters=8, n_probe=8, n_iters=2, round_to=6
         ).collect()
     }
     assert full == exact
+
+    # the deterministic quantizer is a pure data function: rerun == rerun
+    c1 = {
+        (r.cluster, tuple(r.centroid))
+        for r in ss.deterministic_kmeans(emb, 8, 2).collect()
+    }
+    c2 = {
+        (r.cluster, tuple(r.centroid))
+        for r in ss.deterministic_kmeans(emb.repartition(5), 8, 2).collect()
+    }
+    assert c1 == c2
+
+
+def test_nearest_cells_orders_by_distance_then_cluster(spark):
+    # centroid 1 and 3 are both at distance 1 from v=(1, 0): the tie goes
+    # to the lower id; w=(4, 4) is nearest 2, then 1, then 3. Growing n
+    # returns nested prefixes of that order, which pins the order itself.
+    cents = spark.createDataFrame(
+        [(3, [0.0, 0.0]), (2, [5.0, 5.0]), (1, [2.0, 0.0])],
+        "cluster int, centroid array<double>",
+    )
+    vecs = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (20, [4.0, 4.0])], "vec_id long, embedding array<double>"
+    )
+    order = {10: [1, 3, 2], 20: [2, 1, 3]}
+    for n in (1, 2, 3, 5):
+        got = {}
+        for r in S._nearest_cells(vecs, cents, "embedding", n).collect():
+            got.setdefault(r.vec_id, set()).add(r.cluster)
+        assert got == {v: set(o[:n]) for v, o in order.items()}, n
 
 
 def test_ivf_partial_probe_shape_and_recall(spark):
@@ -113,39 +146,6 @@ def test_ivf_partial_probe_shape_and_recall(spark):
     assert set(by_q) == {0, 1, 2}
     for ranks in by_q.values():
         assert sorted(ranks) == [1, 2, 3, 4, 5]
-
-
-def test_ivf_det_full_probe_equals_bruteforce(spark):
-    from big_data_analysis_for_stock_market_data_spark.operators import simsearch as ss
-    from big_data_analysis_for_stock_market_data_spark.queries import load
-    from pyspark.sql import functions as F
-
-    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ss.brute_force_topk(emb, queries, k=5, round_to=6).collect()
-    }
-    full = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ss.ivf_det_topk(
-            emb, queries, k=5, n_clusters=8, n_probe=8, n_iters=2
-        ).collect()
-    }
-    assert full == exact
-
-    # the deterministic quantizer is a pure data function: rerun == rerun
-    c1 = {
-        (r.cluster, tuple(r.centroid))
-        for r in ss.deterministic_kmeans(emb, 8, 2).collect()
-    }
-    c2 = {
-        (r.cluster, tuple(r.centroid))
-        for r in ss.deterministic_kmeans(emb.repartition(5), 8, 2).collect()
-    }
-    assert c1 == c2
 
 
 def test_pq_encode_range_and_adc_identity(spark):
@@ -298,3 +298,39 @@ def test_ann_join_zero_arg_sizing_path(spark):
     out = S.ann_join(df.filter("vec_id % 2 = 1"), df.filter("vec_id % 2 = 0"),
                      k=1, dim=4, n_tables=4, plane_mode="axis", round_to=6)
     assert out.collect()
+
+
+@needs_sf
+@pytest.mark.parametrize("name", [
+    "simsearch_ivf_topk",
+    "simsearch_ivf_det_topk",
+    "simsearch_ivfpq_det_topk",
+    "dedup_semantic_ivf",
+])
+def test_ivf_family_matches_oracle(spark, name):
+    # The IVF family's replay oracles (full Lloyd iterations, probes, PQ
+    # codes, prune decisions) hash-compared the way check_correctness
+    # does: both sides through pandas, order-insensitive value hash.
+    import duckdb
+
+    from big_data_analysis_for_stock_market_data_spark.queries import (
+        oracle_sql,
+        queries,
+    )
+    from tools.check_correctness import TABLES, table_hash
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(SF, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    got = queries()[name](spark, SF).toPandas()
+    res = con.execute(oracle_sql()[name])
+    ocols = [d[0] for d in res.description]
+    want = res.df()
+    con.close()
+    srows = list(got.itertuples(index=False, name=None))
+    orows = list(want.itertuples(index=False, name=None))
+    assert srows and len(srows) == len(orows)
+    assert sorted(got.columns) == sorted(ocols)
+    assert table_hash(srows, list(got.columns)) == table_hash(orows, ocols)

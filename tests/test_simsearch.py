@@ -87,9 +87,32 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     )
     exact = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in ss.brute_force_topk(emb, queries, k=5, round_to=6).collect()
+        for r in ss.brute_force_topk(emb, queries, k=5).collect()
     }
     # probing every cell makes IVF exhaustive -> must equal brute force
+    full = {
+        (r.query_id, r.rank): r.neighbor_id
+        for r in ss.ivf_topk(
+            emb, queries, k=5, n_clusters=8, n_probe=8
+        ).collect()
+    }
+    assert full == exact
+
+
+def test_ivf_det_full_probe_equals_bruteforce(spark):
+    from big_data_analysis_for_stock_market_data_spark.operators import simsearch as ss
+    from big_data_analysis_for_stock_market_data_spark.queries import load
+    from pyspark.sql import functions as F
+
+    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    exact = {
+        (r.query_id, r.rank): r.neighbor_id
+        for r in ss.brute_force_topk(emb, queries, k=5, round_to=6).collect()
+    }
+    # same exhaustive-probe identity under the rounded (tie-stable) ranking
     full = {
         (r.query_id, r.rank): r.neighbor_id
         for r in ss.ivf_topk(

@@ -417,9 +417,11 @@ def connected_components(
 
     Spark-shaped iteration: each round is one join + one aggregate on the
     edge list; rounds = graph diameter (near-dup clusters are shallow —
-    a handful of rounds). Converged state is checked with a 1-row count,
-    and lineage is truncated via localCheckpoint each round so the plan
-    doesn't grow with iterations (the standard iterative-algorithm
+    a handful of rounds). Each round's labels carry a ``changed`` flag
+    (a neighbor's label was smaller), so convergence is a 1-row probe of
+    the checkpointed labels themselves, with no join to the previous
+    round; lineage is truncated via localCheckpoint each round so the
+    plan doesn't grow with iterations (the standard iterative-algorithm
     discipline on Spark)."""
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -441,7 +443,7 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
+        labels = (
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
@@ -449,18 +451,11 @@ def connected_components(
                     F.col("component"),
                     F.coalesce(F.col("nbr_component"), F.col("component")),
                 ).alias("component"),
+                (F.col("nbr_component") < F.col("component")).alias("changed"),
             )
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if labels.filter("changed").limit(1).count() == 0:
             break
     return labels.select(F.col("node").alias("doc_id"), "component")
 

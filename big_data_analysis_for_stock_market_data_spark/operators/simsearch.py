@@ -12,7 +12,8 @@ Two paths, mirroring what a 100 TB pipeline needs:
   deterministic pseudo-random hyperplane family (seeded xxhash64 → ±1
   components) maps each vector to a sign-bit bucket key; candidates join
   within buckets only, then exact cosine re-ranks. Sub-linear candidate
-  generation; recall tuned by (n_planes, n_tables).
+  generation; recall tuned by (n_planes, n_tables). ``ann_join`` is the
+  one sign-LSH top-k, for a query batch and for two corpora alike.
 
 Everything is expression-level (no UDF): the dot product runs inside
 whole-stage codegen. A Pandas-UDF variant is deliberately absent — at dim
@@ -59,6 +60,52 @@ def with_normalized(df: DataFrame, col: str = "embedding",
     )
 
 
+def _rank_topk(scored: DataFrame, key: str, score: str, k: int,
+               ascending: bool = False) -> DataFrame:
+    """The one top-k step of every search operator here: ``row_number``
+    per ``key`` over (``score``, ``neighbor_id``) — best score first, ties
+    to the lower neighbor id — keeping ranks 1..k, ordered by (key, rank).
+    ``ascending`` for distances, where lower is better."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(key).orderBy(order, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .orderBy(key, "rank")
+    )
+
+
+def _cos_sim(a: Column, b: Column, round_to: int | None) -> Column:
+    """Exact cosine as ``cos_sim``. ``round_to`` rounds it to that many
+    decimals BEFORE any ranking: sub-ulp summation noise can otherwise
+    flip the order of two near-tied neighbors between runs/engines;
+    rounding makes the ranking — and therefore the whole result —
+    reproducible and oracle-comparable."""
+    sim = cosine(a, b)
+    return (sim if round_to is None else F.round(sim, round_to)).alias(
+        "cos_sim"
+    )
+
+
+def _distinct_scored(cand: DataFrame, *cols: Column) -> DataFrame:
+    """One row per pair of a candidate set that can repeat a pair (an LSH
+    pair sharing buckets in several tables; the IVF probe, whose oracles
+    replay ``DISTINCT``): ``cols`` = (key id, neighbor id, score), scored
+    FIRST, then ``distinct()``.
+
+    The ids determine the vectors and the score is a pure function of
+    them, so deduping (ids, score) keeps exactly the rows deduping (ids,
+    vectors) would — but every aggregation key is fixed-width: the hash
+    map stays compact, the dedup exchange carries ~24 bytes per row
+    instead of two 64-float vectors, no per-row NaN/-0.0 array
+    normalization runs, and the plan stays a HashAggregate
+    (``dropDuplicates(ids)`` keeps ``first(array)`` buffers, which force
+    a SortAggregate). Precondition: ids uniquely determine their vectors
+    — true of any sane embedding table; duplicate ids with DIFFERENT
+    vectors would give one row per distinct score, not per id pair."""
+    return cand.select(*cols).distinct()
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -71,34 +118,22 @@ def brute_force_topk(
     """Exact cosine top-k neighbors for each query vector. ``queries`` must
     be broadcastable (the deliberate contract of the exact path). Ties break
     on neighbor id for determinism. Excludes self-matches when ids collide.
-
     ``round_to``: rank on (and emit) the cosine rounded to this many
-    decimals. Sub-ulp summation noise can otherwise flip the order of two
-    near-tied neighbors between runs/engines; rounding makes the ranking —
-    and therefore the whole result — reproducible and oracle-comparable."""
-    corpus = ensure_parallelism(corpus)
+    decimals (``_cos_sim``)."""
     q = queries.select(
         F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
     )
-    scored = corpus.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col("__qid")
+    scored = (
+        ensure_parallelism(corpus)
+        .crossJoin(F.broadcast(q))
+        .filter(F.col(id_col) != F.col("__qid"))
+        .select(
+            F.col("__qid").alias(query_id_col),
+            F.col(id_col).alias("neighbor_id"),
+            _cos_sim(F.col(vec_col), F.col("__qvec"), round_to),
+        )
     )
-    sim = cosine(F.col(vec_col), F.col("__qvec"))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    scored = scored.select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        sim.alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
+    return _rank_topk(scored, query_id_col, "cos_sim", k)
 
 
 #: resolve_n_planes defaults: 8 planes saturate recall up to ~2000 corpus
@@ -188,91 +223,16 @@ def _bucket_expr(
     return expr
 
 
-def lsh_bucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    dim: int = 64,
-    n_planes: int | str = "auto",
-    n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    plane_mode: str = "hash",
-    round_to: int | None = None,
-    corpus_rows: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: sign-random-projection buckets over ``n_tables``
-    independent tables (union of candidates → recall boost), exact cosine
-    re-rank inside the candidate set. The corpus is hashed once per table;
-    at scale the bucketed corpus would be written out and reused across
-    query batches (the IVF-file pattern). ``round_to`` rounds the cosine
-    BEFORE ranking so near-ties order identically across engines;
-    ``plane_mode='axis'`` makes the bucket family SQL-replayable (see
-    ``_bucket_expr``). ``n_planes`` defaults to ``'auto'``, sizing the
-    bucket width from the corpus cardinality (``resolve_n_planes``) so the
-    candidate volume stays flat as the corpus grows; an int overrides;
-    ``corpus_rows`` skips the sizing count.
-
-    Precondition (shared with ``ann_join``/``cosine_near_dup_pairs``):
-    ids uniquely determine their vectors — true of any sane embedding
-    table. Candidate dedup relies on it (duplicate ids with DIFFERENT
-    vectors would emit one row per distinct score instead of one per id
-    pair)."""
-    n_planes = resolve_n_planes(n_planes, corpus, corpus_rows)
-    corpus = ensure_parallelism(corpus)
-    c_buckets = corpus.select(
-        id_col, vec_col,
-        F.explode(
-            F.array(*[_bucket_expr(F.col(vec_col), t, n_planes, dim,
-                                   plane_mode=plane_mode)
-                      for t in range(n_tables)])
-        ).alias("__bucket"),
-    )
-    q_buckets = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(vec_col).alias("__qvec"),
-        F.explode(
-            F.array(*[_bucket_expr(F.col(vec_col), t, n_planes, dim,
-                                   plane_mode=plane_mode)
-                      for t in range(n_tables)])
-        ).alias("__bucket"),
-    )
-    # Candidate dedup is distinct() over (ids + cos_sim), with the cosine
-    # computed BEFORE the dedup: the vectors are functionally determined
-    # by their ids (same exploded source row), so the score is too, and
-    # the deduped row set is identical to deduping on (ids + vecs) — but
-    # the aggregation keys are now all FIXED-WIDTH (two ids + one
-    # double), so the hash map stays compact, the dedup exchange carries
-    # ~24 bytes/row instead of two 64-float vectors (~20x), and the
-    # per-candidate NaN/-0.0 array normalization Spark inserts for
-    # array-typed grouping keys disappears. (dropDuplicates(ids) is still
-    # avoided: first(array<float>) buffers force SortAggregate — r11,
-    # guide §3/§7.2; this keeps HashAggregate AND drops the vectors from
-    # the aggregation entirely — r12, guide §2.3 shuffle-fewer-bytes.)
-    # Multi-bucket duplicates score identically (pure function of the
-    # vecs), so distinct() collapses them exactly as before.
-    cos = cosine(F.col(vec_col), F.col("__qvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = (
-        c_buckets.join(F.broadcast(q_buckets), "__bucket")
-        .filter(F.col(id_col) != F.col("__qid"))
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col(id_col).alias("neighbor_id"),
-            cos.alias("cos_sim"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
+def _bucket_explode(
+    vec: Column, n_planes: int, n_tables: int, dim: int, plane_mode: str
+) -> Column:
+    """``__bucket``: the row's ``_bucket_expr`` id in each of ``n_tables``
+    tables, exploded to one row per table — the candidate key both sides
+    of a sign-LSH join select."""
+    return F.explode(
+        F.array(*[_bucket_expr(vec, t, n_planes, dim, plane_mode=plane_mode)
+                  for t in range(n_tables)])
+    ).alias("__bucket")
 
 
 def ann_join(
@@ -288,74 +248,43 @@ def ann_join(
     round_to: int | None = None,
     corpus_rows: int | None = None,
 ) -> DataFrame:
-    """Corpus-to-corpus approximate nearest-neighbor JOIN: for every left
-    vector, its top-k approximate neighbors among the right vectors —
-    retrieval-style linking (eval→train near-dup attribution, cross-corpus
-    retrieval augmentation) where BOTH sides are large.
+    """The sign-LSH approximate top-k: for every left vector, its top-k
+    approximate neighbors among the right vectors, as (left_id,
+    neighbor_id, cos_sim, rank). Serves a query batch against a corpus
+    (``simsearch_lsh_topk``) and corpus-to-corpus linking (eval→train
+    near-dup attribution, cross-corpus retrieval augmentation) alike.
 
-    Unlike ``lsh_bucket_topk`` (which broadcasts a bounded query batch),
-    both sides here bucket by sign-LSH and meet in a bucket-keyed SHUFFLE
-    equi join — each side scans once, candidates are bounded by bucket
-    co-occupancy, and nothing is broadcast, so the operator survives two
-    100 TB corpora. Exact cosine re-ranks candidates; ``round_to`` rounds
-    before ranking for cross-engine tie stability; ``plane_mode='axis'``
-    makes the family SQL-replayable. A left vector with no shared bucket
-    yields no row (ANN contract: recall is tunable via tables/planes).
-    ``n_planes`` defaults to ``'auto'``, sizing the bucket width from the
-    RIGHT (retrieved) corpus cardinality via ``resolve_n_planes`` — the
+    Both sides bucket by sign-random-projection over ``n_tables``
+    independent tables (union of candidates → recall boost) and meet in
+    a bucket equi join; exact cosine re-ranks the candidates. Which side
+    is broadcast is Spark's choice (``autoBroadcastJoinThreshold``): a
+    query batch or a small corpus is broadcast, two large corpora meet in
+    a bucket-keyed shuffle, with candidates bounded by bucket
+    co-occupancy. ``round_to`` rounds before ranking for cross-engine tie
+    stability; ``plane_mode='axis'`` makes the family SQL-replayable (see
+    ``_bucket_expr``). A left vector with no shared bucket yields no row
+    (ANN contract: recall is tunable via tables/planes). ``n_planes``
+    defaults to ``'auto'``, sizing the bucket width from the RIGHT
+    (retrieved) corpus cardinality via ``resolve_n_planes`` — the
     measured fix for the fixed-plane quadratic-candidates cliff; an int
-    overrides; ``corpus_rows`` skips the sizing count. Unique-id
-    precondition as in ``lsh_bucket_topk``."""
+    overrides; ``corpus_rows`` skips the sizing count. Ids must determine
+    their vectors (``_distinct_scored``)."""
     n_planes = resolve_n_planes(n_planes, right, corpus_rows)
+    bucket = _bucket_explode(F.col(vec_col), n_planes, n_tables, dim,
+                             plane_mode)
     l_b = ensure_parallelism(left).select(
-        F.col(id_col).alias("__lid"),
-        F.col(vec_col).alias("__lvec"),
-        F.explode(
-            F.array(*[_bucket_expr(F.col(vec_col), t, n_planes, dim,
-                                   plane_mode=plane_mode)
-                      for t in range(n_tables)])
-        ).alias("__bucket"),
+        F.col(id_col).alias("__lid"), F.col(vec_col).alias("__lvec"), bucket
     )
     r_b = ensure_parallelism(right).select(
-        F.col(id_col).alias("__rid"),
-        F.col(vec_col).alias("__rvec"),
-        F.explode(
-            F.array(*[_bucket_expr(F.col(vec_col), t, n_planes, dim,
-                                   plane_mode=plane_mode)
-                      for t in range(n_tables)])
-        ).alias("__bucket"),
+        F.col(id_col).alias("__rid"), F.col(vec_col).alias("__rvec"), bucket
     )
-    # Score BEFORE the candidate dedup, then distinct() over (ids +
-    # cos_sim): the vectors are functionally determined by the ids, so
-    # the cosine is too and the deduped row set is identical — but the
-    # aggregation keys are fixed-width (no array normalization per row),
-    # the dedup exchange carries ~24 bytes/row instead of two 64-float
-    # vectors, and the vectors never outlive the bucket-join stage (r12,
-    # guide §2.3; see lsh_bucket_topk for the full rationale and why
-    # dropDuplicates(ids) stays banned). __bucket is dropped by the
-    # select, so multi-bucket pairs still collapse to one row — they
-    # score identically by construction.
-    cos = cosine(F.col("__lvec"), F.col("__rvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = (
-        l_b.join(r_b, "__bucket")
-        .filter(F.col("__lid") != F.col("__rid"))
-        .select(
-            F.col("__lid").alias("left_id"),
-            F.col("__rid").alias("neighbor_id"),
-            cos.alias("cos_sim"),
-        )
-        .distinct()
+    scored = _distinct_scored(
+        l_b.join(r_b, "__bucket").filter(F.col("__lid") != F.col("__rid")),
+        F.col("__lid").alias("left_id"),
+        F.col("__rid").alias("neighbor_id"),
+        _cos_sim(F.col("__lvec"), F.col("__rvec"), round_to),
     )
-    w = Window.partitionBy("left_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("left_id", "rank")
-    )
+    return _rank_topk(scored, "left_id", "cos_sim", k)
 
 
 def cosine_near_dup_pairs(
@@ -370,21 +299,18 @@ def cosine_near_dup_pairs(
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup's semantic variant):
-    LSH-bucket the corpus against itself, exact-cosine verify, keep pairs
-    ≥ threshold. Returns (id_a, id_b, cos_sim), id_a < id_b.
+    LSH-bucket the corpus against itself (``ann_join``'s bucketing),
+    exact-cosine verify, keep pairs ≥ threshold. Returns (id_a, id_b,
+    cos_sim), id_a < id_b. Spark applies the threshold before the
+    candidate dedup, so only near-duplicate pairs reach its exchange.
     ``n_planes`` defaults to ``'auto'``, sizing buckets from the corpus
     cardinality (``resolve_n_planes``); an int overrides; ``corpus_rows``
-    skips the sizing count. Unique-id precondition as in
-    ``lsh_bucket_topk``."""
+    skips the sizing count. Ids must determine their vectors
+    (``_distinct_scored``)."""
     n_planes = resolve_n_planes(n_planes, df, corpus_rows)
-    df = ensure_parallelism(df)
-    bucketed = df.select(
+    bucketed = ensure_parallelism(df).select(
         id_col, vec_col,
-        F.explode(
-            F.array(*[_bucket_expr(F.col(vec_col), t, n_planes, dim,
-                                   plane_mode=plane_mode)
-                      for t in range(n_tables)])
-        ).alias("__bucket"),
+        _bucket_explode(F.col(vec_col), n_planes, n_tables, dim, plane_mode),
     )
     a = bucketed.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"), "__bucket"
@@ -392,21 +318,13 @@ def cosine_near_dup_pairs(
     b = bucketed.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"), "__bucket"
     )
-    # Score before the dedup, filter on the threshold, THEN distinct()
-    # over (ids + cos_sim) — same fixed-width-keys rationale as
-    # lsh_bucket_topk/ann_join (the cosine is functionally determined by
-    # the id pair, so the deduped set is identical), plus the threshold
-    # filter now runs BEFORE the aggregation, so only near-duplicate
-    # pairs enter the dedup exchange at all (r12, guide §2.3).
     return (
-        a.join(b, "__bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            cosine(F.col("__va"), F.col("__vb")).alias("cos_sim"),
+        _distinct_scored(
+            a.join(b, "__bucket").filter(F.col("id_a") < F.col("id_b")),
+            F.col("id_a"), F.col("id_b"),
+            _cos_sim(F.col("__va"), F.col("__vb"), None),
         )
         .filter(F.col("cos_sim") >= threshold)
-        .distinct()
         .orderBy("id_a", "id_b")
     )
 
@@ -547,6 +465,7 @@ def deterministic_kmeans(
 def _ivf_candidates(
     corpus: DataFrame,
     queries: DataFrame,
+    score: Column,
     n_clusters: int,
     n_probe: int,
     n_iters: int,
@@ -555,11 +474,14 @@ def _ivf_candidates(
     query_id_col: str,
     seed: int,
 ) -> DataFrame:
-    """The IVF index-and-probe step: quantize the corpus
-    (``deterministic_kmeans``), assign every vector to its nearest cell,
-    and pair each query with the vectors of its ``n_probe`` nearest
-    cells. Returns ``corpus``'s columns plus ``__qid``/``__qvec``, one row
-    per (vector, query) pair, self-pairs excluded."""
+    """The IVF index-and-probe step shared by ``ivf_topk`` and
+    ``ivfpq_det_topk``: quantize the corpus (``deterministic_kmeans``),
+    assign every vector to its nearest cell, pair each query with the
+    vectors of its ``n_probe`` nearest cells (self-pairs excluded) and
+    score each pair with ``score`` — over ``corpus``'s columns plus
+    ``__qvec``. Returns (query_id_col, neighbor_id, score), deduplicated
+    score first (``_distinct_scored``), as the oracles' ``SELECT
+    DISTINCT`` does."""
     cents = deterministic_kmeans(
         corpus, n_clusters, n_iters, id_col, vec_col, seed
     )
@@ -570,10 +492,12 @@ def _ivf_candidates(
         ),
         cents, "__qvec", n_probe,
     )
-    return (
+    return _distinct_scored(
         assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col(id_col) != F.col("__qid"))
-        .dropDuplicates([id_col, "__qid"])
+        .filter(F.col(id_col) != F.col("__qid")),
+        F.col("__qid").alias(query_id_col),
+        F.col(id_col).alias("neighbor_id"),
+        score,
     )
 
 
@@ -596,29 +520,16 @@ def ivf_topk(
     n_clusters`` degrades to exact brute force (asserted in tests).
     Candidate cost ≈ |corpus|·n_probe/n_clusters per query versus |corpus|
     for brute force; at scale the assigned corpus is persisted
-    partitioned by cell, so probes prune partitions. ``round_to`` rounds
-    the cosine before ranking (same cross-engine tie-stability knob as
+    partitioned by cell, so probes prune partitions. Candidates are
+    scored before they are deduplicated, so the dedup hash-aggregates
+    fixed-width (ids, score) rows. ``round_to`` rounds the cosine before
+    ranking (same cross-engine tie-stability knob as
     ``brute_force_topk``). Every step is replayable in SQL."""
     cand = _ivf_candidates(
-        corpus, queries, n_clusters, n_probe, n_iters, id_col, vec_col,
-        query_id_col, seed,
+        corpus, queries, _cos_sim(F.col(vec_col), F.col("__qvec"), round_to),
+        n_clusters, n_probe, n_iters, id_col, vec_col, query_id_col, seed,
     )
-    score = cosine(F.col(vec_col), F.col("__qvec"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = cand.select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        score.alias("cos_sim"),
-    )
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
+    return _rank_topk(cand, query_id_col, "cos_sim", k)
 
 
 # ---------------------------------------------------------------------------
@@ -660,6 +571,20 @@ def _pq_subdist(vec: Column, sub: Column, cent: Column, d_sub: int) -> Column:
     )
 
 
+def _adc_sqdist(qvec: Column, m: int, d_sub: int) -> Column:
+    """ADC approximate squared distance of ``qvec`` to a PQ-coded vector:
+    Σ_s table[s][pq_code[s]] — m codebook lookups, no corpus floats."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("pq_code"),
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda c, s: _pq_subdist(qvec, s, c.cast("bigint"), d_sub),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def pq_encode(
     df: DataFrame,
     col: str = "embedding",
@@ -669,30 +594,25 @@ def pq_encode(
     out: str = "pq_code",
 ) -> DataFrame:
     """Encode each vector as m sub-codes: per subspace, the argmin-distance
-    centroid (first index on exact ties). Pure expressions — the k×d_sub
-    loop lives in runtime ``transform``/``aggregate``, not in the plan
-    tree, so codegen stays small at any (m, k)."""
+    centroid — the minimum of (distance, index) structs, so each
+    sub-distance is computed once and exact ties go to the first index.
+    Pure expressions — the k×d_sub loop lives in runtime
+    ``transform``/``aggregate``, not in the plan tree, so codegen stays
+    small at any (m, k)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d_sub = dim // m
     vec = F.col(col)
-    subs = F.sequence(F.lit(0), F.lit(m - 1))
     code = F.transform(
-        subs,
-        lambda s: (
-            F.array_position(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(k - 1)),
-                    lambda c: _pq_subdist(vec, s, c, d_sub),
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: F.array_min(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(k - 1)),
+                lambda c: F.struct(
+                    _pq_subdist(vec, s, c, d_sub).alias("d"), c.alias("c")
                 ),
-                F.array_min(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(k - 1)),
-                        lambda c: _pq_subdist(vec, s, c, d_sub),
-                    )
-                ),
-            ) - 1
-        ).cast("int"),
+            )
+        ).getField("c"),
     )
     return df.withColumn(out, code)
 
@@ -715,33 +635,20 @@ def pq_topk(
     Scores round to 6 dp before ranking (near-ties order identically
     across engines); ties break on neighbor id. The query set broadcasts
     (same contract as brute_force_topk)."""
-    d_sub = dim // m
-    encoded = pq_encode(corpus, col=col, m=m, k=k, dim=dim)
-    joined = encoded.crossJoin(F.broadcast(queries)).filter(
-        F.col(id_col) != F.col(query_id_col)
+    scored = (
+        pq_encode(corpus, col=col, m=m, k=k, dim=dim)
+        .crossJoin(F.broadcast(queries))
+        .filter(F.col(id_col) != F.col(query_id_col))
+        .select(
+            F.col(query_id_col),
+            F.col(id_col).alias("neighbor_id"),
+            F.round(_adc_sqdist(F.col(query_col), m, dim // m), 6).alias(
+                "approx_sqdist"
+            ),
+        )
     )
-    qvec = F.col(query_col)
-    approx = F.aggregate(
-        F.zip_with(
-            F.col("pq_code"),
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda c, s: _pq_subdist(qvec, s, c.cast("bigint"), d_sub),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        F.round(approx, 6).alias("approx_sqdist"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sqdist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_neighbors)
-    )
+    return _rank_topk(scored, query_id_col, "approx_sqdist", n_neighbors,
+                      ascending=True)
 
 
 def ivfpq_det_topk(
@@ -763,44 +670,23 @@ def ivfpq_det_topk(
     """IVF-PQ, the canonical web-scale ANN layout, end-to-end
     deterministic: the IVF coarse quantizer (``deterministic_kmeans``)
     prunes the scan to ``n_probe`` cells per query, and within candidates
-    the PQ codes score by ADC lookups instead of exact distance — at
-    100 TB the probed cells are partition-pruned AND each candidate costs
-    m code lookups, not dim float multiplies. Every stage (Lloyd
-    iterations, cell assignment, codebook, encode, ADC) is replayable in
-    external SQL, so the WHOLE composition is hash-verifiable. Shares
-    its index-and-probe step with ``ivf_topk``; only the scoring
-    differs."""
-    d_sub = dim // m
+    the PQ codes score by ADC lookups (``_adc_sqdist``, as ``pq_topk``)
+    instead of exact distance — at 100 TB the probed cells are
+    partition-pruned AND each candidate costs m code lookups, not dim
+    float multiplies. Every stage (Lloyd iterations, cell assignment,
+    codebook, encode, ADC) is replayable in external SQL, so the WHOLE
+    composition is hash-verifiable. Shares its index-and-probe step and
+    score-first dedup with ``ivf_topk`` (``_ivf_candidates``); only the
+    score differs."""
     encoded = pq_encode(
         corpus.select(id_col, vec_col), col=vec_col, m=m, k=pq_k, dim=dim
     )
+    adc = F.round(_adc_sqdist(F.col("__qvec"), m, dim // m), round_to)
     cand = _ivf_candidates(
-        encoded, queries, n_clusters, n_probe, n_iters, id_col, vec_col,
-        query_id_col, seed,
+        encoded, queries, adc.alias("approx_sqdist"), n_clusters, n_probe,
+        n_iters, id_col, vec_col, query_id_col, seed,
     )
-    qvec = F.col("__qvec")
-    approx = F.aggregate(
-        F.zip_with(
-            F.col("pq_code"),
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda c, s: _pq_subdist(qvec, s, c.cast("bigint"), d_sub),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = cand.select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        F.round(approx, round_to).alias("approx_sqdist"),
-    )
-    w_rank = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sqdist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
+    return _rank_topk(cand, query_id_col, "approx_sqdist", k, ascending=True)
 
 
 def int8_quantize(

@@ -3361,25 +3361,24 @@ def simsearch_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuned so near-orthogonal vectors still fill the top-k) — the
     sub-linear scale path. Axis-plane family + 6-dp pre-rank rounding so
     the oracle replays the identical candidate set and ranking; the
-    production default stays seeded-hash planes."""
+    production default stays seeded-hash planes. Runs the one sign-LSH
+    top-k, operators/simsearch.ann_join, with the 3 queries as its left
+    side (Spark broadcasts them)."""
     from big_data_analysis_for_stock_market_data_spark.operators import simsearch as ss
 
     emb = load(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ss.lsh_bucket_topk(
-        emb, queries_df, k=5, n_planes=6, n_tables=8,
+    return ss.ann_join(
+        emb.filter(F.col("vec_id") < 3), emb, k=5, n_planes=6, n_tables=8,
         plane_mode="axis", round_to=6,
-    )
+    ).withColumnRenamed("left_id", "query_id")
 
 
 @register(
     "simsearch_ann_join",
-    # same axis-plane family as simsearch_lsh_topk, but corpus-to-corpus:
-    # odd vectors retrieve from even vectors through a bucket-keyed
-    # shuffle join (no broadcast side) — the oracle replays the exact
-    # candidate set and 6-dp pre-rank rounding
+    # same axis-plane family and operator (ann_join) as
+    # simsearch_lsh_topk, but corpus-to-corpus: odd vectors retrieve from
+    # even vectors through the bucket equi join — the oracle replays the
+    # exact candidate set and 6-dp pre-rank rounding
     oracle=f"""
     WITH b AS (
       SELECT vec_id, embedding,
@@ -3414,11 +3413,12 @@ def simsearch_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simsearch_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-to-corpus ANN join (operators/simsearch.ann_join): every
     odd-id vector retrieves its top-2 approximate neighbors among even-id
-    vectors via sign-LSH buckets meeting in a SHUFFLE equi join — the
-    both-sides-large retrieval/linking shape (eval→train attribution,
-    cross-corpus augmentation) where lsh_bucket_topk's broadcast query
-    batch doesn't apply. Axis planes + 6-dp pre-rank rounding keep the
-    candidate set and ranking SQL-replayable."""
+    vectors via sign-LSH buckets meeting in an equi join — the
+    retrieval/linking shape (eval→train attribution, cross-corpus
+    augmentation) with a whole corpus on the left instead of a query
+    batch. At these sizes Spark broadcasts one side; two large corpora
+    meet in a bucket-keyed shuffle. Axis planes + 6-dp pre-rank rounding
+    keep the candidate set and ranking SQL-replayable."""
     from big_data_analysis_for_stock_market_data_spark.operators import simsearch as ss
 
     emb = load(spark, sf_dir, "embeddings")
@@ -7694,6 +7694,7 @@ def h1_ancestor_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     clo = nodes.filter(F.col("parent") >= 1).select(
         "id", F.col("parent").alias("ancestor"), F.lit(1).alias("depth")
     ).localCheckpoint(eager=True)
+    n_paths = clo.count()
     while True:
         # join closure with itself: paths id->mid (depth a) + mid->anc
         # (depth b) give id->anc (depth a+b); doubling squares max depth
@@ -7710,11 +7711,10 @@ def h1_ancestor_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("depth") + F.col("d2")).alias("depth"),
             )
         )
-        new_clo = clo.unionByName(longer).distinct().localCheckpoint(eager=True)
-        if new_clo.count() == clo.count():  # control-plane fixpoint test
-            clo = new_clo
+        clo = clo.unionByName(longer).distinct().localCheckpoint(eager=True)
+        n_prev, n_paths = n_paths, clo.count()
+        if n_paths == n_prev:  # control-plane fixpoint test
             break
-        clo = new_clo
     return clo.orderBy("id", "depth")
 
 
@@ -12158,8 +12158,8 @@ def g4_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine that clusters near-duplicates, exposed as the standalone
     graph operator). Each round is one edge-key join + one grouped MIN,
     co-partitioned at scale; rounds = graph diameter, lineage truncated
-    per round, convergence checked with a 1-row count. Component label =
-    min part key in the component."""
+    per round, convergence checked with a 1-row probe of the round's
+    changed flags. Component label = min part key in the component."""
     from big_data_analysis_for_stock_market_data_spark.operators.dedup import (
         connected_components,
     )

@@ -4,6 +4,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from big_data_analysis_for_stock_market_data_spark.operators import dedup as D
+from test_io_footer_schema import SF, _jobs_submitted, needs_sf
 
 BASE = (
     "spark executes declarative dataframe plans with catalyst optimizing "
@@ -192,6 +193,20 @@ def test_connected_components_clusters(spark):
         10: 10, 11: 10,
         20: 20, 21: 20, 22: 20,
     }
+
+
+@needs_sf
+def test_connected_components_build_jobs(spark):
+    # Each round's labels carry their own changed flag, so the convergence
+    # probe reads the checkpointed labels instead of joining them to the
+    # previous round's: building g4 (11 rounds) submitted 129 jobs with
+    # the join, 96 without.
+    from big_data_analysis_for_stock_market_data_spark.queries import queries
+
+    build = queries()["g4_connected_components"]
+    df, jobs = _jobs_submitted(spark, lambda: build(spark, SF))
+    assert len(jobs) <= 96
+    assert df.count() == 1880
 
 
 def test_cross_containment_detects_quoted_eval_doc(spark):

@@ -382,12 +382,15 @@ def test_ann_candidate_dedup_hash_aggregates(spark):
     # widest intermediate). r12: the distinct now runs over
     # (ids, cos_sim) — all fixed-width — so additionally no exchange
     # after the bucket join may carry a vector column: the vectors must
-    # not outlive the join stage.
+    # not outlive the join stage. The IVF probe dedups the same way:
+    # scored first, then distinct() (dropDuplicates([id, qid]) planned a
+    # SortAggregate with both vectors in its exchange).
     import re
 
     vec_cols = re.compile(r"__lvec|__rvec|__qvec|__va|__vb|embedding")
     for name in ("simsearch_ann_join", "simsearch_lsh_topk",
-                 "dedup_cosine_near"):
+                 "dedup_cosine_near", "simsearch_ivf_topk",
+                 "simsearch_ivf_det_topk", "simsearch_ivfpq_det_topk"):
         df = q(spark, name)
         plan = P.explain_str(df, "simple")
         assert "SortAggregate" not in plan, name

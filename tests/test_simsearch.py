@@ -58,10 +58,8 @@ def test_normalized_dot_equals_cosine(spark):
 
 def test_lsh_finds_the_near_identical_neighbor(spark):
     df = _vecs(spark)
-    queries = df.filter("vec_id = 1").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = S.lsh_bucket_topk(df, queries, k=2, dim=4, n_planes=4, n_tables=4)
+    out = S.ann_join(df.filter("vec_id = 1"), df, k=2, dim=4, n_planes=4,
+                     n_tables=4)
     rows = out.collect()
     assert rows, "LSH returned no candidates"
     # the near-identical vector must be the top hit when found
@@ -310,7 +308,7 @@ def test_auto_is_the_keyword_default():
     # the sized plane family, not the fixed-8 cliff. Pin the signatures.
     import inspect
 
-    for fn in (S.lsh_bucket_topk, S.ann_join, S.cosine_near_dup_pairs):
+    for fn in (S.ann_join, S.cosine_near_dup_pairs):
         assert inspect.signature(fn).parameters["n_planes"].default == "auto", fn
 
 

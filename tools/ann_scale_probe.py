@@ -1,9 +1,11 @@
 """ANN-join scale probe: does the sign-LSH bucket join stay SPARSE as
 both corpora grow — and does the plane-count knob hold it there?
 
-`ann_join` (operators/simsearch.py) is the only corpus×corpus shape in
-the engine: both sides bucket by sign-random-projection and meet in a
-bucket-keyed shuffle equi join. Its 100 TB failure mode is bucket
+`ann_join` (operators/simsearch.py) is the engine's one sign-LSH top-k,
+and the only corpus×corpus shape: both sides bucket by
+sign-random-projection and meet in a bucket equi join (a bucket-keyed
+shuffle once neither side is small enough to broadcast; at this probe's
+sizes Spark may broadcast one side). Its 100 TB failure mode is bucket
 DENSITY: with a fixed number of hyperplanes the bucket count is fixed
 (2^n_planes per table), so growing the corpus 10x makes every bucket
 10x denser and the candidate-pair count grows ~quadratically — the
@@ -80,32 +82,33 @@ def synth_vectors(spark, n: int, salt: str):
 
 def candidate_pairs(left, right, n_planes: int) -> int:
     """Replicates ann_join's candidate stage (bucket equi join, pre-rerank,
-    post-dedup) and counts it — the quantity whose growth rate decides
-    whether the operator survives 100x. Both sides pass through
-    ensure_parallelism exactly as ann_join does, so cand_sec is measured
-    under the production partitioning (ADVICE r09)."""
+    post-dedup) with its own bucketing helper and counts it — the
+    quantity whose growth rate decides whether the operator survives
+    100x. Both sides pass through ensure_parallelism exactly as ann_join
+    does, so cand_sec is measured under the production partitioning
+    (ADVICE r09)."""
     from pyspark.sql import functions as F
 
     from big_data_analysis_for_stock_market_data_spark.operators import (
         ensure_parallelism,
     )
     from big_data_analysis_for_stock_market_data_spark.operators.simsearch import (
-        _bucket_expr,
+        _bucket_explode,
     )
+
+    bucket = _bucket_explode(F.col("embedding"), n_planes, N_TABLES, DIM,
+                             "hash")
 
     def bucketed(df, idname):
         return ensure_parallelism(df).select(
-            F.col("vec_id").alias(idname),
-            F.explode(
-                F.array(*[_bucket_expr(F.col("embedding"), t, n_planes, DIM)
-                          for t in range(N_TABLES)])
-            ).alias("__bucket"),
+            F.col("vec_id").alias(idname), bucket
         )
 
     return (
         bucketed(left, "__lid").join(bucketed(right, "__rid"), "__bucket")
         .filter(F.col("__lid") != F.col("__rid"))
-        .dropDuplicates(["__lid", "__rid"])
+        .select("__lid", "__rid")
+        .distinct()
         .count()
     )
 

@@ -12,6 +12,7 @@ from big_data_analysis_for_stock_market_data_spark.functions.scalar import (
     json_double,
     json_long,
     json_str,
+    md5_60,
     normalize_ws,
     tokenize,
     with_date_parts,
@@ -22,6 +23,7 @@ __all__ = [
     "json_double",
     "json_long",
     "json_str",
+    "md5_60",
     "normalize_ws",
     "tokenize",
     "with_date_parts",

@@ -41,6 +41,15 @@ def tokenize(col: Column | str) -> Column:
     )
 
 
+def md5_60(col: Column | str) -> Column:
+    """The md5-60 value of a string: its md5's first 15 hex digits as a
+    long. Spark's xxhash64 has no twin in other SQL engines, but md5 hex
+    is the same in all of them, so an external oracle recomputes this
+    value exactly; 60 bits, not 64, keep it positive in a signed BIGINT
+    on both sides."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def first_word(col: Column | str) -> Column:
     return F.regexp_extract(col, r"^(\S+)", 1)
 

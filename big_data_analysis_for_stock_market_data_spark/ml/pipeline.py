@@ -886,6 +886,88 @@ def train_plsa_topics(
     )
 
 
+def _best_stump(
+    rows: DataFrame, feature_cols: Sequence[str], target: str
+) -> DataFrame:
+    """The exact stump split search of both integer tree ensembles, over
+    the integer feature columns and the integer ``target`` column:
+
+    - the features melt (``stack``) into (fid, fval, target) rows; per
+      (fid, fval) a count + target sum, then prefix sums over the value
+      order give every threshold's left partition in ONE pass (no
+      candidate x row explode — the split-finding shape blocked GBT
+      uses at scale, here exact);
+    - integer leaf values v = floor(sum/n) via the pmod identity
+      spelled out on BOTH engines (neither Spark's ``div`` nor
+      DuckDB's ``//`` floors on negatives — both truncate — but the
+      pre-subtracted numerator is exactly divisible, so truncation is
+      exact);
+    - split score = the TRUE SSE reduction under integer leaves,
+      2*v*s - v^2*n summed over both sides — pure BIGINT (no rational
+      cross-multiplication).
+
+    Returns the 1-row winner on (gain DESC, feature, value):
+    (fid, fval, __vl, __vr, __n, __gain), ``__n`` the row count."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    stack_expr = "stack({}, {}) as (fid, fval)".format(
+        len(feature_cols),
+        ", ".join(
+            f"{i + 1}, cast({c} as long)" for i, c in enumerate(feature_cols)
+        ),
+    )
+    tot = rows.agg(F.count(F.lit(1)).alias("__n"), F.sum(target).alias("__s"))
+    by_val = rows.selectExpr(stack_expr, target).groupBy("fid", "fval").agg(
+        F.count(F.lit(1)).alias("__cn"),
+        F.sum(target).alias("__cs"),
+    )
+    w = Window.partitionBy("fid").orderBy("fval")
+    wall = Window.partitionBy("fid")
+    fdiv = "(({s}) - pmod(({s}), ({n}))) div ({n})"
+    cand = (
+        by_val.select(
+            "fid", "fval",
+            F.sum("__cn").over(w).alias("__nl"),
+            F.sum("__cs").over(w).alias("__sl"),
+            F.max("fval").over(wall).alias("__maxv"),
+        )
+        .filter(F.col("fval") < F.col("__maxv"))
+        .crossJoin(F.broadcast(tot))
+        .selectExpr(
+            "fid", "fval", "__nl", "__sl", "__n",
+            "__n - __nl as __nr", "__s - __sl as __sr",
+        )
+        .selectExpr(
+            "fid", "fval", "__nl", "__nr", "__n", "__sl", "__sr",
+            fdiv.format(s="__sl", n="__nl") + " as __vl",
+            fdiv.format(s="__sr", n="__nr") + " as __vr",
+        )
+        .selectExpr(
+            "fid", "fval", "__vl", "__vr", "__n",
+            "2*__vl*__sl - __vl*__vl*__nl"
+            " + 2*__vr*__sr - __vr*__vr*__nr as __gain",
+        )
+    )
+    return cand.orderBy(F.col("__gain").desc(), "fid", "fval").limit(1)
+
+
+def _stump_leaf(feature_cols: Sequence[str]):
+    """The leaf a stump (fid, fval, __vl, __vr) crossed into a row gives
+    it: ``__vl`` when the row's split feature is <= fval, else ``__vr``."""
+    from pyspark.sql import functions as F
+
+    split_val = "case fid {} end".format(
+        " ".join(
+            f"when {i + 1} then cast({c} as long)"
+            for i, c in enumerate(feature_cols)
+        )
+    )
+    return F.when(
+        F.expr(split_val) <= F.col("fval"), F.col("__vl")
+    ).otherwise(F.col("__vr"))
+
+
 def train_gbt_stumps_exact(
     df: DataFrame,
     feature_cols: Sequence[str],
@@ -897,102 +979,32 @@ def train_gbt_stumps_exact(
     the oracle-able twin of Spark ML's float GBT (``train_gbt``, which
     stays rows-only: impurity ordering over doubles is not replayable).
     Squared loss, depth-1 trees, learning rate 1, predictions and
-    residuals in ``scale`` fixed point. Each round:
-
-    - per (feature, value): count + residual sum, then prefix sums over
-      the value order give every threshold's left partition in ONE pass
-      per round (no candidate x row explode — the split-finding shape
-      blocked GBT uses at scale, here exact);
-    - integer leaf values v = floor(sum/n) via the pmod identity
-      spelled out on BOTH engines (neither Spark's ``div`` nor
-      DuckDB's ``//`` floors on negatives — both truncate — but the
-      pre-subtracted numerator is exactly divisible, so truncation is
-      exact);
-    - split score = the TRUE SSE reduction under integer leaves,
-      2*v*s - v^2*n summed over both sides — pure BIGINT (no rational
-      cross-multiplication), ties broken (gain DESC, feature, value);
-    - the 1-row winner broadcast-joins back to update predictions
-      (no driver scalars), with a localCheckpoint truncating the
-      iterative lineage (same discipline as ALS/BPE/PLSA).
+    residuals in ``scale`` fixed point. Each round finds the best split
+    of the residuals with ``_best_stump``, the exact split search
+    ``train_rf_stumps_exact`` also runs (ties broken on gain DESC,
+    feature, value). The 1-row winner broadcast-joins back to update
+    predictions (no driver scalars), with a localCheckpoint truncating
+    the iterative lineage (same discipline as ALS/BPE/PLSA).
 
     Returns one row per round: (round, feature, threshold,
     v_left_q, v_right_q, gain, sum_abs_res_q) — the fitted model AND
     its training trajectory, hash-comparable against an unrolled-CTE
     SQL replay."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    n_feat = len(feature_cols)
-    stack_expr = "stack({}, {}) as (fid, fval)".format(
-        n_feat,
-        ", ".join(
-            f"{i + 1}, cast({c} as long)" for i, c in enumerate(feature_cols)
-        ),
-    )
     cur = df.select(
         *[F.col(c).cast("long").alias(c) for c in feature_cols],
         (F.col(label_col).cast("long") * scale).alias("__ym"),
         F.lit(0).cast("long").alias("__pred"),
     ).localCheckpoint(eager=True)
 
-    fdiv = "(({s}) - pmod(({s}), ({n}))) div ({n})"
     out_rows = []
     for r in range(1, rounds + 1):
         res = cur.withColumn("__res", F.col("__ym") - F.col("__pred"))
-        tot = res.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("__res").alias("__s"),
-        )
-        melted = res.selectExpr(stack_expr, "__res")
-        by_val = melted.groupBy("fid", "fval").agg(
-            F.count(F.lit(1)).alias("__cn"),
-            F.sum("__res").alias("__cs"),
-        )
-        w = Window.partitionBy("fid").orderBy("fval")
-        wall = Window.partitionBy("fid")
-        cand = (
-            by_val.select(
-                "fid", "fval",
-                F.sum("__cn").over(w).alias("__nl"),
-                F.sum("__cs").over(w).alias("__sl"),
-                F.max("fval").over(wall).alias("__maxv"),
-            )
-            .filter(F.col("fval") < F.col("__maxv"))
-            .crossJoin(F.broadcast(tot))
-            .selectExpr(
-                "fid", "fval", "__nl", "__sl",
-                "__n - __nl as __nr", "__s - __sl as __sr",
-            )
-            .selectExpr(
-                "fid", "fval", "__nl", "__nr",
-                fdiv.format(s="__sl", n="__nl") + " as __vl",
-                fdiv.format(s="__sr", n="__nr") + " as __vr",
-                "__sl", "__sr",
-            )
-            .selectExpr(
-                "fid", "fval", "__vl", "__vr",
-                "2*__vl*__sl - __vl*__vl*__nl"
-                " + 2*__vr*__sr - __vr*__vr*__nr as __gain",
-            )
-        )
-        best = F.broadcast(
-            cand.orderBy(F.col("__gain").desc(), "fid", "fval").limit(1)
-        )
-        split_val = "case __b.fid {} end".format(
-            " ".join(
-                f"when {i + 1} then cast({c} as long)"
-                for i, c in enumerate(feature_cols)
-            )
-        )
+        best = F.broadcast(_best_stump(res, feature_cols, "__res"))
         cur = (
-            res.crossJoin(best.alias("__b"))
-            .withColumn(
-                "__pred",
-                F.col("__pred") + F.when(
-                    F.expr(split_val) <= F.col("__b.fval"),
-                    F.col("__b.__vl"),
-                ).otherwise(F.col("__b.__vr")),
-            )
+            res.crossJoin(best)
+            .withColumn("__pred", F.col("__pred") + _stump_leaf(feature_cols))
             .select(*feature_cols, "__ym", "__pred")
             .localCheckpoint(eager=True)
         )
@@ -1042,24 +1054,17 @@ def train_rf_stumps_exact(
     1), and the confusion counts ride along on every output row.
 
     One row per tree: (tree, feature, threshold, v_left_q, v_right_q,
-    gain, n_sample, forest_tp, forest_fp, forest_fn, forest_tn)."""
-    from pyspark.sql import Window
+    gain, n_sample, forest_tp, forest_fp, forest_fn, forest_tn). Each
+    tree's split comes from ``_best_stump``, the split search
+    ``train_gbt_stumps_exact`` runs."""
     from pyspark.sql import functions as F
 
-    n_feat = len(feature_cols)
-    stack_expr = "stack({}, {}) as (fid, fval)".format(
-        n_feat,
-        ", ".join(
-            f"{i + 1}, cast({c} as long)" for i, c in enumerate(feature_cols)
-        ),
-    )
     base = df.select(
         F.col(id_col).cast("long").alias("__rid"),
         *[F.col(c).cast("long").alias(c) for c in feature_cols],
         (F.col(label_col).cast("long") * scale).alias("__ym"),
     ).localCheckpoint(eager=True)
 
-    fdiv = "(({s}) - pmod(({s}), ({n}))) div ({n})"
     bests = []
     for t in range(1, n_trees + 1):
         samp = base.filter(
@@ -1068,45 +1073,8 @@ def train_rf_stumps_exact(
                 f"':{t}:{seed}')), 1, 8), 16, 10) as bigint) % {keep_mod}"
             ) < keep_lt
         )
-        tot = samp.agg(
-            F.count(F.lit(1)).alias("__n"), F.sum("__ym").alias("__s")
-        )
-        by_val = samp.selectExpr(stack_expr, "__ym").groupBy(
-            "fid", "fval"
-        ).agg(
-            F.count(F.lit(1)).alias("__cn"),
-            F.sum("__ym").alias("__cs"),
-        )
-        w = Window.partitionBy("fid").orderBy("fval")
-        wall = Window.partitionBy("fid")
-        cand = (
-            by_val.select(
-                "fid", "fval",
-                F.sum("__cn").over(w).alias("__nl"),
-                F.sum("__cs").over(w).alias("__sl"),
-                F.max("fval").over(wall).alias("__maxv"),
-            )
-            .filter(F.col("fval") < F.col("__maxv"))
-            .crossJoin(F.broadcast(tot))
-            .selectExpr(
-                "fid", "fval", "__nl", "__sl", "__n",
-                "__n - __nl as __nr", "__s - __sl as __sr",
-            )
-            .selectExpr(
-                "fid", "fval", "__nl", "__nr", "__n", "__sl", "__sr",
-                fdiv.format(s="__sl", n="__nl") + " as __vl",
-                fdiv.format(s="__sr", n="__nr") + " as __vr",
-            )
-            .selectExpr(
-                "fid", "fval", "__vl", "__vr", "__n",
-                "2*__vl*__sl - __vl*__vl*__nl"
-                " + 2*__vr*__sr - __vr*__vr*__nr as __gain",
-            )
-        )
         bests.append(
-            cand.orderBy(F.col("__gain").desc(), "fid", "fval")
-            .limit(1)
-            .select(
+            _best_stump(samp, feature_cols, "__ym").select(
                 F.lit(t).cast("long").alias("tree"),
                 "fid", "fval", "__vl", "__vr", "__gain",
                 F.col("__n").alias("__nsamp"),
@@ -1117,20 +1085,9 @@ def train_rf_stumps_exact(
         stumps = stumps.unionByName(b)
     stumps = stumps.localCheckpoint(eager=True)
 
-    split_val = "case fid {} end".format(
-        " ".join(
-            f"when {i + 1} then cast({c} as long)"
-            for i, c in enumerate(feature_cols)
-        )
-    )
     votes = (
         base.crossJoin(F.broadcast(stumps))
-        .withColumn(
-            "__leaf",
-            F.when(
-                F.expr(split_val) <= F.col("fval"), F.col("__vl")
-            ).otherwise(F.col("__vr")),
-        )
+        .withColumn("__leaf", _stump_leaf(feature_cols))
         .withColumn(
             "__vote",
             (2 * F.col("__leaf") >= F.lit(scale)).cast("long"),

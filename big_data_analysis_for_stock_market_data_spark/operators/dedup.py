@@ -22,9 +22,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_analysis_for_stock_market_data_spark.functions.scalar import md5_60
 from big_data_analysis_for_stock_market_data_spark.operators import ensure_parallelism
 from big_data_analysis_for_stock_market_data_spark.operators.text import tokens_col
 
@@ -141,7 +142,10 @@ def minhash_signatures(
     ``hash_mode='xxhash64'`` (default): base = xxhash64(shingle), perm_i =
     xxhash64(base, seed=i). ``hash_mode='md5_60'``: both levels are the
     md5-derived 60-bit value (md5 hex is engine-universal, so an external
-    SQL oracle recomputes identical signatures — slower, parity-purposed)."""
+    SQL oracle recomputes identical signatures — slower, parity-purposed).
+
+    Returns (``id_col``, the input's other columns, ``out``): only the
+    shingle column is dropped, so a key such as ``copy_id`` rides along."""
     seeds = F.array(*[F.lit(i) for i in range(num_hashes)])
     if hash_mode == "xxhash64":
         base = F.transform(F.col(shingle_col), lambda s: F.xxhash64(s))
@@ -149,10 +153,7 @@ def minhash_signatures(
         def perm(h, s):
             return F.xxhash64(h, s)
     elif hash_mode == "md5_60":
-        def md5_60(c):
-            return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-        base = F.transform(F.col(shingle_col), lambda s: md5_60(s))
+        base = F.transform(F.col(shingle_col), md5_60)
 
         def perm(h, s):
             return md5_60(
@@ -168,7 +169,25 @@ def minhash_signatures(
             acc, seeds, lambda a, s: F.least(a, perm(h, s))
         ),
     )
-    return df.select(id_col, sig.alias(out))
+    rest = [c for c in df.columns if c not in (id_col, shingle_col)]
+    return df.select(id_col, *rest, sig.alias(out))
+
+
+def _ordered_pairs(ids: Column) -> Column:
+    """Every (id_a, id_b) pair with id_a < id_b of a sorted, distinct id
+    array, as structs: element i pairs with each element after it — no
+    self-join and no filter. The pair count is quadratic in the array
+    size; the callers' bucket and doc-freq caps bound it."""
+    n = F.size(ids)
+    return F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, n - i - 1),
+                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+            ),
+        )
+    )
 
 
 def lsh_candidate_pairs(
@@ -238,31 +257,11 @@ def lsh_candidate_pairs(
     buckets = banded.groupBy("band_id", "bucket").agg(
         F.array_sort(F.collect_set(id_col)).alias("members")
     ).filter(F.size("members") > 1)
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("members") - 2),
-                        lambda i: F.transform(
-                            F.slice(
-                                F.col("members"),
-                                i + 2,
-                                F.size("members") - i - 1,
-                            ),
-                            lambda right: F.struct(
-                                F.element_at(F.col("members"), i + 1).alias("id_a"),
-                                right.alias("id_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+    return (
+        buckets.select(F.explode(_ordered_pairs(F.col("members"))).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
     )
-    return pairs
 
 
 def jaccard_verify(
@@ -381,18 +380,8 @@ def ngram_jaccard_near_dups(
             (F.size("__ids") >= 2) & (F.size("__ids") <= max_doc_freq)
         )
     )
-    sz = F.size("__ids")
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, sz - i - 1),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     pairs = (
-        grouped.select(F.explode(pair_structs).alias("__p"))
+        grouped.select(F.explode(_ordered_pairs(F.col("__ids"))).alias("__p"))
         .select(
             F.col("__p.id_a").alias("id_a"), F.col("__p.id_b").alias("id_b")
         )
@@ -476,9 +465,7 @@ def _token_bits(source: str):
     if source == "xxhash64":
         return F.xxhash64("__t")
     if source == "md5_60":
-        return F.conv(F.substring(F.md5(F.col("__t")), 1, 15), 16, 10).cast(
-            "long"
-        )
+        return md5_60("__t")
     raise ValueError(f"unknown bit_source {source!r}")
 
 
@@ -749,20 +736,8 @@ def exact_substring_pairs(
             (F.size("__ids") >= 2) & (F.size("__ids") <= max_doc_freq)
         )
     )
-    n = F.size("__ids")
-    pairs = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, n - i - 1),
-                lambda y: F.struct(
-                    x.alias("id_a"), y.alias("id_b")
-                ),
-            ),
-        )
-    )
     return (
-        grouped.select(F.explode(pairs).alias("__p"))
+        grouped.select(F.explode(_ordered_pairs(F.col("__ids"))).alias("__p"))
         .groupBy(
             F.col("__p.id_a").alias("id_a"),
             F.col("__p.id_b").alias("id_b"),

@@ -1,8 +1,8 @@
 """Graph analytics on edge DataFrames (engine extension; the reference has
 no graph surface). Companions live elsewhere for historical reasons:
 connected components in ``operators/dedup.py`` (duplicate clusters),
-triangle counting and transitive closure in ``queries.py``
-(``g1_triangle_count``, ``h1_ancestor_closure``).
+the co-purchase edge build (``_copurchase_edges``) and transitive
+closure (``h1_ancestor_closure``) in ``queries.py``.
 
 Design rule shared by all of them: iteration count is part of the spec
 (fixed, small), each round is pure joins + aggregates on the edge list,
@@ -142,3 +142,20 @@ def bfs_hops(
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt.select("node")
     return visited
+
+
+def ordered_triangles(edges: DataFrame) -> DataFrame:
+    """Every triangle a < b < c of an ordered edge list (keys…, u, v) with
+    u < v, once, as (keys…, a, b, c); the keys are the columns other than
+    u and v (a ``copy_id`` keeps replicas apart). Two key-equi hash joins
+    — (a, b) ⋈ (b, c) on b, then ⋈ (a, c) on both ends — so each triangle
+    is found from its smallest corner only. Callers pass a checkpointed
+    edge list: all three legs read it."""
+    keys = [c for c in edges.columns if c not in ("u", "v")]
+
+    def leg(x: str, y: str) -> DataFrame:
+        return edges.select(*keys, F.col("u").alias(x), F.col("v").alias(y))
+
+    return leg("a", "b").join(leg("b", "c"), [*keys, "b"]).join(
+        leg("a", "c"), [*keys, "a", "c"]
+    )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_analysis_for_stock_market_data_spark.functions.scalar import md5_60
 from big_data_analysis_for_stock_market_data_spark.operators import ensure_parallelism
 
 
@@ -548,12 +549,7 @@ def _pq_centroid(sub: Column, cent: Column, j: Column) -> Column:
     """Deterministic codebook component in [-1, 1]: md5-60 uniform of
     (sub, cent, j) — identical hex, hence identical double, in every
     engine."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", sub, cent, j, F.lit("pq"))), 1, 15
-        ),
-        16, 10,
-    ).cast("long")
+    h = md5_60(F.concat_ws(":", sub, cent, j, F.lit("pq")))
     return (h % 1000000007) / 1000000007.0 * 2.0 - 1.0
 
 
@@ -634,9 +630,11 @@ def pq_topk(
     approximate distance is Σ_s table[s][code_s] — m lookups per vector.
     Scores round to 6 dp before ranking (near-ties order identically
     across engines); ties break on neighbor id. The query set broadcasts
-    (same contract as brute_force_topk)."""
+    (same contract as brute_force_topk), and the corpus is widened to
+    the session's parallelism (``ensure_parallelism``) before the
+    encode, its heaviest step."""
     scored = (
-        pq_encode(corpus, col=col, m=m, k=k, dim=dim)
+        pq_encode(ensure_parallelism(corpus), col=col, m=m, k=k, dim=dim)
         .crossJoin(F.broadcast(queries))
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_analysis_for_stock_market_data_spark.functions.scalar import md5_60
+
 #: Per-language stopword markers for the score-and-argmax heuristic.
 #: Deliberately small: the operator's value is the *mechanism* (vectorized
 #: scoring at scale); swapping richer lists in is data, not code.
@@ -313,11 +315,9 @@ def fingerprint_rolling(df: DataFrame, col: str = "text",
     parity trick as dedup.simhash_signatures."""
     toks = tokens_col(F.col(col))
     if token_hash == "xxhash64":
-        def h(t):
-            return F.xxhash64(t)
+        h = F.xxhash64
     elif token_hash == "md5_60":
-        def h(t):
-            return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
+        h = md5_60
     else:
         raise ValueError(f"unknown token_hash {token_hash!r}")
     rolled = F.aggregate(
@@ -633,27 +633,102 @@ def bigram_logprob(
     )
 
 
+def bpe_merge_rounds(
+    words: DataFrame, n_merges: int
+) -> tuple[DataFrame, DataFrame]:
+    """The BPE merge-round loop (Sennrich 2016) every BPE entry runs:
+    ``n_merges`` rounds over a (keys…, w, freq) word table, where the
+    keys are the columns other than ``w`` and ``freq`` and each key
+    learns its own rules (a ``copy_id`` keeps replicas apart). Each
+    round counts adjacent symbol pairs weighted by word frequency, picks
+    the winner per key on (count DESC, left ASC, right ASC) via
+    min-of-struct with negated count — deterministic on any engine —
+    and merges it everywhere, left-to-right non-overlapping, as a JVM
+    array fold (SQL ``aggregate``; no Python).
+
+    Every round touches vocabulary-sized rows only: the winner rides as
+    a broadcast 1-row (or per-key) aggregate, no driver scalar, and each
+    round's segment table is checkpointed — rounds chain, and every
+    round's winner branch plus the final rule union would otherwise
+    re-execute all prior rounds' aggregates (56 exchanges before the
+    checkpoints). Callers pass a checkpointed word table for the same
+    reason: each round's winner and the rule union branch off it.
+
+    Returns (rules, segments): rules is (merge_rank, keys…, left, right,
+    merged, pair_count), one row per key and learned rule; segments is
+    (keys…, w, freq, syms), each word's subwords after the last round."""
+    keys = [c for c in words.columns if c not in ("w", "freq")]
+    segs = words.select(
+        *keys, "w", "freq",
+        F.expr(
+            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
+        ).alias("syms"),
+    )
+    # left-to-right non-overlapping merge as a fold: append, unless the
+    # accumulator's last element is `left` and the incoming symbol is
+    # `right` — then replace the last element with the merged token.
+    # "aaa" under (a,a) -> [aa, a], never [a, aa].
+    merge_fold = (
+        "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
+        "CASE WHEN size(acc) > 0 AND element_at(acc, -1) = __a "
+        "          AND s = __b "
+        "     THEN concat(slice(acc, 1, size(acc) - 1), "
+        "                 array(concat(__a, __b))) "
+        "     ELSE concat(acc, array(s)) END)"
+    )
+    rules = None
+    for t in range(n_merges):
+        counted = (
+            segs.filter(F.size("syms") >= 2)
+            .select(
+                *keys, "freq",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(syms) - 1), "
+                        "i -> struct(syms[i-1] AS a, syms[i] AS b))"
+                    )
+                ).alias("p"),
+            )
+            .groupBy(*keys, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            .agg(F.sum("freq").alias("cnt"))
+        )
+        best = counted.groupBy(*keys).agg(
+            F.min(F.struct((-F.col("cnt")).alias("nc"), "a", "b")).alias("m")
+        ).select(
+            *keys,
+            (-F.col("m.nc")).alias("__cnt"),
+            F.col("m.a").alias("__a"),
+            F.col("m.b").alias("__b"),
+        )
+        rule = best.select(
+            F.lit(t + 1).alias("merge_rank"), *keys,
+            F.col("__a").alias("left"),
+            F.col("__b").alias("right"),
+            F.concat("__a", "__b").alias("merged"),
+            F.col("__cnt").alias("pair_count"),
+        )
+        rules = rule if rules is None else rules.unionByName(rule)
+        winner = F.broadcast(best.select(*keys, "__a", "__b"))
+        segs = (
+            (segs.join(winner, keys) if keys else segs.crossJoin(winner))
+            .select(*keys, "w", "freq", F.expr(merge_fold).alias("syms"))
+            .localCheckpoint(eager=True)
+        )
+    return rules, segs
+
+
 def bpe_train_merges(
     df: DataFrame,
     n_merges: int = 4,
     col: str = "text",
 ) -> DataFrame:
     """Learn the first ``n_merges`` BPE merge rules over the corpus — the
-    tokenizer-training step of an LLM data pipeline (Sennrich 2016),
-    distributed: each round counts adjacent symbol pairs weighted by word
-    frequency, then merges the most frequent pair everywhere,
-    left-to-right non-overlapping.
-
-    Distribution shape: the corpus collapses to the DISTINCT-WORD table
-    (word, freq) after one explode+count — all |corpus| dependence ends
-    there; each round is a pair explode + grouped sum over the
-    vocabulary-sized frame, the winning rule rides as a broadcast 1-row
-    aggregate (no driver scalar), and re-segmentation is a pure JVM array
-    fold (SQL ``aggregate`` — no Python anywhere). Ties break on
-    (count DESC, left ASC, right ASC) via min-of-struct with negated
-    count, so the rule sequence is deterministic on any engine. At 100 TB
-    the word count is the only shuffle that sees corpus cardinality;
-    every round touches |vocab| rows.
+    tokenizer-training step of an LLM data pipeline, distributed: the
+    corpus collapses to the DISTINCT-WORD table (word, freq) after one
+    explode+count — all |corpus| dependence ends there — and
+    ``bpe_merge_rounds`` learns the rules over that vocabulary-sized
+    table. At 100 TB the word count is the only shuffle that sees corpus
+    cardinality; every round touches |vocab| rows.
 
     Returns (merge_rank, left, right, merged, pair_count), one row per
     learned rule, in rule order.
@@ -662,77 +737,10 @@ def bpe_train_merges(
         df.select(F.explode(tokens_col(F.col(col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        # each round's winner AND the final rule union branch off this
-        # frame — without the checkpoint the CORPUS explode re-executes
-        # once per branch (n_merges+ full input passes at 100 TB); with
-        # it, one corpus pass, and every later branch reads the
-        # vocab-sized table (same pattern as graph.pagerank's edge table)
         .localCheckpoint(eager=True)
     )
-    segs = words.select(
-        "freq",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
-    )
-    rules = []
-    for t in range(n_merges):
-        counted = (
-            segs.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1), "
-                        "i -> struct(syms[i-1] AS a, syms[i] AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        best = counted.agg(
-            F.min(F.struct((-F.col("cnt")).alias("nc"), "a", "b")).alias("m")
-        ).select(
-            (-F.col("m.nc")).alias("__cnt"),
-            F.col("m.a").alias("__a"),
-            F.col("m.b").alias("__b"),
-        )
-        rules.append(
-            best.select(
-                F.lit(t + 1).alias("merge_rank"),
-                F.col("__a").alias("left"),
-                F.col("__b").alias("right"),
-                F.concat("__a", "__b").alias("merged"),
-                F.col("__cnt").alias("pair_count"),
-            )
-        )
-        # left-to-right non-overlapping merge as a fold: append, unless
-        # the accumulator's last element is `left` and the incoming
-        # symbol is `right` — then replace the last element with the
-        # merged token. "aaa" under (a,a) -> [aa, a], never [a, aa].
-        merge_fold = (
-            "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
-            "CASE WHEN size(acc) > 0 AND element_at(acc, -1) = __a "
-            "          AND s = __b "
-            "     THEN concat(slice(acc, 1, size(acc) - 1), "
-            "                 array(concat(__a, __b))) "
-            "     ELSE concat(acc, array(s)) END)"
-        )
-        # per-round checkpoint: rounds chain (seg3 = f(f(f(seg0)))), and
-        # every round's winner branch plus the final rule union would
-        # otherwise re-execute all prior rounds' aggregates (r06 plan
-        # audit: 56 exchanges). Each checkpoint is the vocab-sized
-        # segment table — tiny next to the corpus.
-        segs = (
-            segs.crossJoin(F.broadcast(best))
-            .select("freq", F.expr(merge_fold).alias("syms"))
-            .localCheckpoint(eager=True)
-        )
-    out = rules[0]
-    for r in rules[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("merge_rank")
+    rules, _ = bpe_merge_rounds(words, n_merges)
+    return rules.orderBy("merge_rank")
 
 
 def bpe_tokenize_counts(
@@ -747,14 +755,14 @@ def bpe_tokenize_counts(
     order. Emits per-document subword statistics (counts, not strings —
     the pipeline signal is sequence length for packing/budgeting).
 
-    Plan: training as in ``bpe_train_merges`` (one corpus pass into the
-    checkpointed distinct-word table; each round vocab-sized);
-    application is a SECOND corpus pass — the doc-token explode joined
-    to the vocab-sized segment table (AQE broadcasts it when small),
-    which already holds every distinct word's segmentation. Two input
-    passes total at any scale; checkpointing the exploded corpus instead
-    would trade a rescan for materializing it, a loss at 100 TB.
-    Returns (id, n_words, n_subwords, sum_subword_chars)."""
+    Plan: training is ``bpe_merge_rounds`` over the checkpointed
+    distinct-word table (one corpus pass; each round vocab-sized), whose
+    final segment table already holds every distinct word's
+    segmentation; application is a SECOND corpus pass — the doc-token
+    explode joined to that segment table (AQE broadcasts it when small).
+    Two input passes total at any scale; checkpointing the exploded
+    corpus instead would trade a rescan for materializing it, a loss at
+    100 TB. Returns (id, n_words, n_subwords, sum_subword_chars)."""
     words = (
         df.select(
             F.col(id_col),
@@ -766,45 +774,7 @@ def bpe_tokenize_counts(
         .agg(F.count(F.lit(1)).alias("freq"))
         .localCheckpoint(eager=True)
     )
-    segs = vocab.select(
-        "w", "freq",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
-    )
-    for _t in range(n_merges):
-        counted = (
-            segs.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1), "
-                        "i -> struct(syms[i-1] AS a, syms[i] AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        best = counted.agg(
-            F.min(F.struct((-F.col("cnt")).alias("nc"), "a", "b")).alias("m")
-        ).select(
-            F.col("m.a").alias("__a"), F.col("m.b").alias("__b")
-        )
-        merge_fold = (
-            "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
-            "CASE WHEN size(acc) > 0 AND element_at(acc, -1) = __a "
-            "          AND s = __b "
-            "     THEN concat(slice(acc, 1, size(acc) - 1), "
-            "                 array(concat(__a, __b))) "
-            "     ELSE concat(acc, array(s)) END)"
-        )
-        segs = (
-            segs.crossJoin(F.broadcast(best))
-            .select("w", "freq", F.expr(merge_fold).alias("syms"))
-            .localCheckpoint(eager=True)
-        )
+    _, segs = bpe_merge_rounds(vocab, n_merges)
     seg_sizes = segs.select(
         "w",
         F.size("syms").alias("__n_sub"),

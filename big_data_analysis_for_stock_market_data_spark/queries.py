@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from big_data_analysis_for_stock_market_data_spark.functions.scalar import md5_60
 from big_data_analysis_for_stock_market_data_spark.operators import aggregates as agg_ops
 from big_data_analysis_for_stock_market_data_spark.operators import joins as join_ops
 from big_data_analysis_for_stock_market_data_spark.operators import windows as win_ops
@@ -7144,6 +7145,30 @@ def a17_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _copurchase_edges(baskets: DataFrame) -> DataFrame:
+    """The co-purchase part graph every ``g*`` entry and the graph decade
+    folds run on: ``baskets`` is (l_orderkey, l_partkey) rows, plus any
+    other columns (``copy_id``), which become keys of every join and
+    group. Distinct (order, part) rows self-join on the order, each
+    unordered part pair is kept once as u < v, and pairs bought together
+    in at least two orders are the edges (keys…, u, v). Checkpointed:
+    every caller reads the edge list more than once, and the distinct +
+    self-join + support lineage would otherwise run once per reader."""
+    keys = [c for c in baskets.columns if c not in ("l_orderkey", "l_partkey")]
+    parts = baskets.distinct()
+    a = parts.select("l_orderkey", *keys, F.col("l_partkey").alias("u"))
+    b = parts.select("l_orderkey", *keys, F.col("l_partkey").alias("v"))
+    return (
+        a.join(b, ["l_orderkey", *keys])
+        .filter(F.col("u") < F.col("v"))
+        .groupBy(*keys, "u", "v")
+        .agg(F.count(F.lit(1)).alias("__sup"))
+        .filter(F.col("__sup") >= 2)
+        .select(*keys, "u", "v")
+        .localCheckpoint(eager=True)
+    )
+
+
 @register(
     "g1_triangle_count",
     # triangles on the co-purchase graph: edges (a<b) from basket pairs
@@ -7173,27 +7198,15 @@ def g1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     two hash joins; at scale the standard mitigation (orient edges from
     low- to high-degree endpoints) bounds the join fan-out, noted here
     because the ordered-id orientation is already degree-agnostic for
-    this graph size."""
-    li = load(spark, sf_dir, "lineitem")
-    parts = li.select("l_orderkey", "l_partkey").distinct()
-    a = parts.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = parts.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("u", "v")
+    this graph size. Edges from ``_copurchase_edges``, triangles from
+    operators/graph.ordered_triangles."""
+    from big_data_analysis_for_stock_market_data_spark.operators.graph import (
+        ordered_triangles,
     )
-    # e1/e2/e3 all read edges: checkpoint once or the whole distinct +
-    # self-join + support lineage executes three times (audited: 22 vs 9
-    # exchanges). Same truncation connected_components uses per round.
-    edges = edges.localCheckpoint(eager=True)
-    e1 = edges
-    e2 = edges.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    e3 = edges.select(F.col("u").alias("u"), F.col("v").alias("w"))
-    tris = e1.join(e2, "v").join(e3, ["u", "w"])
+
+    li = load(spark, sf_dir, "lineitem")
+    edges = _copurchase_edges(li.select("l_orderkey", "l_partkey"))
+    tris = ordered_triangles(edges)
     return tris.agg(F.count(F.lit(1)).alias("n_triangles")).crossJoin(
         edges.agg(F.count(F.lit(1)).alias("n_edges"))
     )
@@ -7266,22 +7279,11 @@ def g2_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates are damped integer sums, so the in-neighbor aggregation is
     order-free and the oracle replays every iteration exactly. Each round
     is key-equi joins + one grouped sum on (node) — co-partitioned at
-    scale."""
+    scale. Edges from ``_copurchase_edges``, fed both ways."""
     from big_data_analysis_for_stock_market_data_spark.operators.graph import pagerank_nano
 
     li = load(spark, sf_dir, "lineitem")
-    parts = li.select("l_orderkey", "l_partkey").distinct()
-    a = parts.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = parts.select("l_orderkey", F.col("l_partkey").alias("v"))
-    eo = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
+    eo = _copurchase_edges(li.select("l_orderkey", "l_partkey"))
     edges = eo.unionByName(
         eo.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -9347,22 +9349,12 @@ def g3_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     where each level is a frontier equi join + anti join on the node key
     (co-partitioned at scale, flat lineage via per-level checkpoints).
     The oracle's recursive CTE enumerates bounded paths and MIN-groups;
-    the engine's first-discovery level equals that minimum."""
+    the engine's first-discovery level equals that minimum. Edges from
+    ``_copurchase_edges``, fed both ways."""
     from big_data_analysis_for_stock_market_data_spark.operators.graph import bfs_hops
 
     li = load(spark, sf_dir, "lineitem")
-    parts = li.select("l_orderkey", "l_partkey").distinct()
-    a = parts.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = parts.select("l_orderkey", F.col("l_partkey").alias("v"))
-    eo = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
+    eo = _copurchase_edges(li.select("l_orderkey", "l_partkey"))
     edges = eo.unionByName(
         eo.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -12156,27 +12148,17 @@ def g4_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the undirected co-purchase part graph
     (operators/dedup.connected_components — the same iterative min-label
     engine that clusters near-duplicates, exposed as the standalone
-    graph operator). Each round is one edge-key join + one grouped MIN,
-    co-partitioned at scale; rounds = graph diameter, lineage truncated
-    per round, convergence checked with a 1-row probe of the round's
-    changed flags. Component label = min part key in the component."""
+    graph operator) over the ``_copurchase_edges`` graph. Each round is
+    one edge-key join + one grouped MIN, co-partitioned at scale;
+    rounds = graph diameter, lineage truncated per round, convergence
+    checked with a 1-row probe of the round's changed flags. Component
+    label = min part key in the component."""
     from big_data_analysis_for_stock_market_data_spark.operators.dedup import (
         connected_components,
     )
 
     li = load(spark, sf_dir, "lineitem")
-    parts = li.select("l_orderkey", "l_partkey").distinct()
-    a = parts.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = parts.select("l_orderkey", F.col("l_partkey").alias("v"))
-    eo = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
+    eo = _copurchase_edges(li.select("l_orderkey", "l_partkey"))
     cc = connected_components(eo, id_a="u", id_b="v", max_iter=50)
     return cc.select(F.col("doc_id").alias("part"), "component").orderBy(
         "part"
@@ -12304,9 +12286,7 @@ def dq_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").cast("string"),
         F.col("o_orderpriority"),
     )
-    hv = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast(
-        "decimal(38,0)"
-    )
+    hv = md5_60(row_str).cast("decimal(38,0)")
     h = orders.select("o_orderstatus", hv.alias("__hv"))
     mod = F.lit(1000000000000000000).cast("decimal(38,0)")
     grp = h.groupBy("o_orderstatus").agg(
@@ -13059,24 +13039,12 @@ def g5_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer sufficient statistics of Pearson's r over directed
     edge endpoints (both directions of each undirected edge, so source
     and target marginals coincide); r = (M*Sxy - Sx^2/..) is a
-    determined function of the one output row. Plan: the g1 edge build
-    (checkpointed once), a tiny degree table joined twice — degree
-    tables are |V|-sized, broadcastable at any realistic scale."""
+    determined function of the one output row. Plan: the checkpointed
+    edge build (``_copurchase_edges``), a tiny degree table joined
+    twice — degree tables are |V|-sized, broadcastable at any realistic
+    scale."""
     li = load(spark, sf_dir, "lineitem")
-    parts = li.select("l_orderkey", "l_partkey").distinct()
-    a = parts.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = parts.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("u", "v")
-    )
-    # same lineage-truncation rationale as g1_triangle_count: three
-    # readers of the expensive self-join build
-    edges = edges.localCheckpoint(eager=True)
+    edges = _copurchase_edges(li.select("l_orderkey", "l_partkey"))
     dir_edges = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -13538,21 +13506,10 @@ def g6_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     already linked — the classic candidate-edge score. At scale the
     wedge join fans out quadratically in the max degree; the standard
     mitigation (cap or sample high-degree wedge centers) applies, noted
-    because this graph's degrees are moderate. Edge build checkpointed
-    once, same as g1/g5."""
+    because this graph's degrees are moderate. Edges from
+    ``_copurchase_edges`` (checkpointed once)."""
     li = load(spark, sf_dir, "lineitem")
-    parts = li.select("l_orderkey", "l_partkey").distinct()
-    a = parts.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = parts.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("u", "v")
-    )
-    edges = edges.localCheckpoint(eager=True)
+    edges = _copurchase_edges(li.select("l_orderkey", "l_partkey"))
     dir_edges = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -16003,25 +15960,16 @@ def g7_clustering_coeff_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     each node — the g1 ordered-triangle join exploded to its three
     corners — and the node degree; c(v) = 2*tri/(deg*(deg-1)) is a
     determined function of the exact integer pair. Plan: the
-    checkpointed edge build, the triangle join, one corner explode +
-    two hash aggregates."""
-    li = load(spark, sf_dir, "lineitem")
-    parts = li.select("l_orderkey", "l_partkey").distinct()
-    a = parts.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = parts.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("u", "v")
+    checkpointed edge build (``_copurchase_edges``), the triangle join
+    (operators/graph.ordered_triangles), one corner explode + two hash
+    aggregates."""
+    from big_data_analysis_for_stock_market_data_spark.operators.graph import (
+        ordered_triangles,
     )
-    edges = edges.localCheckpoint(eager=True)
-    e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    e3 = edges.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
+
+    li = load(spark, sf_dir, "lineitem")
+    edges = _copurchase_edges(li.select("l_orderkey", "l_partkey"))
+    tri = ordered_triangles(edges)
     corners = (
         tri.select(F.col("a").alias("node"))
         .unionAll(tri.select(F.col("b").alias("node")))
@@ -16629,8 +16577,9 @@ def scale10_minhash_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash banding fold — the one core LLM-pipeline shuffle shape
     without a scale-decade invariance entry until now — at 10x: replicate
     the shingled corpus in-plan, run the 16-permutation md5-60 signature
-    fold (the SQL-replayable family dedup_minhash_md5 certifies) and the
-    4-band r=4 banding per copy, aggregate bucket occupancy per
+    fold (operators/dedup.minhash_signatures, the code dedup_minhash_md5
+    certifies; copy_id rides through it) and the 4-band r=4 banding per
+    copy, aggregate bucket occupancy per
     (band, key, copy), and fold pure integers per copy — bucket count,
     candidate-pair count Σ n·(n−1)/2, max bucket size, member count —
     asserting all 10 copies agree (a partial-agg or placement bug at the
@@ -16646,25 +16595,7 @@ def scale10_minhash_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = shingled.withColumn(
         "copy_id", F.explode(F.sequence(F.lit(0), F.lit(9)))
     )
-    seeds = F.array(*[F.lit(i) for i in range(16)])
-
-    def md5_60(c):
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-    base = F.transform(F.col("shingles"), lambda s: md5_60(s))
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), 16)
-    sig = F.aggregate(
-        base,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, seeds,
-            lambda a, s: F.least(
-                a, md5_60(F.concat_ws(":", h.cast("string"),
-                                      s.cast("string")))
-            ),
-        ),
-    )
-    sigs = rep.select("doc_id", "copy_id", sig.alias("signature"))
+    sigs = dd.minhash_signatures(rep, 16, hash_mode="md5_60")
     banded = sigs.select(
         "doc_id", "copy_id",
         F.posexplode(
@@ -16782,18 +16713,19 @@ def _scale10_bpe_oracle_sql(n_merges: int = 4, n_copies: int = 10) -> str:
 @register("scale10_bpe_merge", oracle=_scale10_bpe_oracle_sql(4, 10))
 def scale10_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-merge determinism at 10x: replicate the token stream in-plan,
-    learn the first 4 merge rules independently per copy — per-copy pair
-    counts, per-copy (cnt DESC, a, b) winner via min-of-struct, per-copy
-    JVM array-fold re-segmentation (the exact semantics of
-    operators/text.bpe_train_merges, with copy_id threaded through every
-    key) — and fold per merge rank, asserting all 10 copies learned the
-    IDENTICAL rule (n_variants = 1). The argmax tiebreak is the
-    determinism-critical step: a nondeterministic tie pick or a
-    partial-agg bug at the 10x pair-count shuffle surfaces as a variant.
-    Plan: one corpus tokenize pass -> checkpointed 10x word table -> per
-    round one vocab-sized pair-count aggregate + a 10-row per-copy winner
-    broadcast-joined back -> 4-row output."""
+    learn the first 4 merge rules independently per copy with the loop
+    text_bpe_merges runs (operators/text.bpe_merge_rounds, copy_id as
+    its key: per-copy pair counts, per-copy (cnt DESC, a, b) winner via
+    min-of-struct, per-copy JVM array-fold re-segmentation), and fold
+    per merge rank, asserting all 10 copies learned the IDENTICAL rule
+    (n_variants = 1). The argmax tiebreak is the determinism-critical
+    step: a nondeterministic tie pick or a partial-agg bug at the 10x
+    pair-count shuffle surfaces as a variant. Plan: one corpus tokenize
+    pass -> checkpointed 10x word table -> per round one vocab-sized
+    pair-count aggregate + a 10-row per-copy winner broadcast-joined
+    back -> 4-row output."""
     from big_data_analysis_for_stock_market_data_spark.operators.text import (
+        bpe_merge_rounds,
         tokens_col,
     )
 
@@ -16805,70 +16737,9 @@ def scale10_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = (
         rep.groupBy("copy_id", "w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        # same checkpoint rationale as bpe_train_merges: every round's
-        # winner branch and the rule union branch off this frame; without
-        # it the corpus explode re-executes per branch
         .localCheckpoint(eager=True)
     )
-    segs = words.select(
-        "copy_id", "freq",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
-    )
-    rules = []
-    for t in range(4):
-        counted = (
-            segs.filter(F.size("syms") >= 2)
-            .select(
-                "copy_id", "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1), "
-                        "i -> struct(syms[i-1] AS a, syms[i] AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy(
-                "copy_id", F.col("p.a").alias("a"), F.col("p.b").alias("b")
-            )
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        best = counted.groupBy("copy_id").agg(
-            F.min(F.struct((-F.col("cnt")).alias("nc"), "a", "b")).alias("m")
-        ).select(
-            "copy_id",
-            (-F.col("m.nc")).alias("__cnt"),
-            F.col("m.a").alias("__a"),
-            F.col("m.b").alias("__b"),
-        )
-        rules.append(
-            best.select(
-                F.lit(t + 1).alias("merge_rank"), "copy_id",
-                F.col("__a").alias("left"),
-                F.col("__b").alias("right"),
-                F.concat("__a", "__b").alias("merged"),
-                F.col("__cnt").alias("pair_count"),
-            )
-        )
-        merge_fold = (
-            "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
-            "CASE WHEN size(acc) > 0 AND element_at(acc, -1) = __a "
-            "          AND s = __b "
-            "     THEN concat(slice(acc, 1, size(acc) - 1), "
-            "                 array(concat(__a, __b))) "
-            "     ELSE concat(acc, array(s)) END)"
-        )
-        segs = (
-            segs.join(
-                F.broadcast(best.select("copy_id", "__a", "__b")), "copy_id"
-            )
-            .select("copy_id", "freq", F.expr(merge_fold).alias("syms"))
-            .localCheckpoint(eager=True)
-        )
-    out = rules[0]
-    for r in rules[1:]:
-        out = out.unionByName(r)
+    out, _ = bpe_merge_rounds(words, 4)
     return (
         out.groupBy("merge_rank")
         .agg(
@@ -17335,38 +17206,25 @@ def scale10_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting at 10x (scale-decade invariance — the graph
     family's fold; pattern: scale10_pricing_rollup). The raw basket
     pairs replicate in-plan BEFORE the distinct, so every stage of
-    g1_triangle_count's pipeline (distinct, basket self-join, support
-    >= 2 filter, ordered two-hop triangle join) runs at 10x the data
-    keyed by copy_id; copies never mix because copy_id rides every join
-    key. Per-copy fold on pure integers — edge count, an integer edge
-    checksum (content, not just cardinality), triangle count — asserts
-    all 10 copies agree. Same localCheckpoint truncation as g1: the
-    edge lineage is materialized once, then read by the three triangle
-    join legs, keeping the exchange count flat at any scale."""
+    g1_triangle_count's pipeline runs at 10x the data keyed by copy_id,
+    through the same code: ``_copurchase_edges`` (distinct, basket
+    self-join, support >= 2 filter, checkpoint) and
+    operators/graph.ordered_triangles, both of which take the copy_id
+    column as a key of every join, so copies never mix. Per-copy fold on
+    pure integers — edge count, an integer edge checksum (content, not
+    just cardinality), triangle count — asserts all 10 copies agree."""
+    from big_data_analysis_for_stock_market_data_spark.operators.graph import (
+        ordered_triangles,
+    )
+
     li = load(spark, sf_dir, "lineitem")
-    rep = (
-        li.select("l_orderkey", "l_partkey")
-        .withColumn("copy_id", F.explode(F.sequence(F.lit(0), F.lit(9))))
-        .distinct()
+    edges = _copurchase_edges(
+        li.select("l_orderkey", "l_partkey").withColumn(
+            "copy_id", F.explode(F.sequence(F.lit(0), F.lit(9)))
+        )
     )
-    a = rep.select("l_orderkey", "copy_id", F.col("l_partkey").alias("u"))
-    b = rep.select("l_orderkey", "copy_id", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, ["l_orderkey", "copy_id"])
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("copy_id", "u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select("copy_id", "u", "v")
-    )
-    edges = edges.localCheckpoint(eager=True)
-    e2 = edges.select(
-        "copy_id", F.col("u").alias("v"), F.col("v").alias("w")
-    )
-    e3 = edges.select("copy_id", "u", F.col("v").alias("w"))
     tri_per = (
-        edges.join(e2, ["copy_id", "v"])
-        .join(e3, ["copy_id", "u", "w"])
+        ordered_triangles(edges)
         .groupBy("copy_id")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
@@ -17445,8 +17303,9 @@ def scale10_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components at 10x — the decade fold for the ITERATIVE
     operator family (dedup.connected_components: per-round edge join +
     grouped MIN, per-round lineage truncation, 1-row convergence probe).
-    Ten disjoint replicas of the co-purchase graph live in ONE edge
-    list via offset node ids (node' = copy_id * 2^32 + node), so a
+    Ten disjoint replicas of the co-purchase graph (``_copurchase_edges``
+    with a copy_id key, the g* edge build) live in ONE edge list via
+    offset node ids (node' = copy_id * 2^32 + node), so a
     single operator invocation carries all ten through every min-label
     round — the convergence loop must terminate simultaneously and
     produce shifted-identical labels on every replica. Per-copy fold on
@@ -17461,24 +17320,13 @@ def scale10_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     off = F.lit(1 << 32).cast("long")
     li = load(spark, sf_dir, "lineitem")
-    rep = (
-        li.select("l_orderkey", "l_partkey")
-        .withColumn("copy_id", F.explode(F.sequence(F.lit(0), F.lit(9))))
-        .distinct()
-    )
-    a = rep.select("l_orderkey", "copy_id", F.col("l_partkey").alias("u"))
-    b = rep.select("l_orderkey", "copy_id", F.col("l_partkey").alias("v"))
-    eo = (
-        a.join(b, ["l_orderkey", "copy_id"])
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("copy_id", "u", "v")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .filter(F.col("__sup") >= 2)
-        .select(
-            (F.col("copy_id").cast("long") * off + F.col("u")).alias("u"),
-            (F.col("copy_id").cast("long") * off + F.col("v")).alias("v"),
+    eo = _copurchase_edges(
+        li.select("l_orderkey", "l_partkey").withColumn(
+            "copy_id", F.explode(F.sequence(F.lit(0), F.lit(9)))
         )
-        .localCheckpoint(eager=True)
+    ).select(
+        (F.col("copy_id").cast("long") * off + F.col("u")).alias("u"),
+        (F.col("copy_id").cast("long") * off + F.col("v")).alias("v"),
     )
     cc = connected_components(eo, id_a="u", id_b="v", max_iter=50)
     per = (

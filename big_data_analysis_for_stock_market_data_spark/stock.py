@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from big_data_analysis_for_stock_market_data_spark.functions.scalar import md5_60
 from big_data_analysis_for_stock_market_data_spark.operators import indicators as ind
 from big_data_analysis_for_stock_market_data_spark.operators import windows as win_ops
 
@@ -32,19 +33,13 @@ MINUTES_PER_DAY = 390  # 09:30-16:00 trading session
 
 def _hash_long(seed_col, salt: int, hash_fn: str = "xxhash64"):
     """Deterministic non-negative long from a row id and a salt.
-    ``hash_fn='md5'`` takes the first 15 hex digits of md5 (identical in
-    every SQL engine — the oracle-parity variant; xxhash64 is faster and
-    stays the default)."""
+    ``hash_fn='md5'`` takes the md5-60 value (``functions.scalar.md5_60``,
+    identical in every SQL engine — the oracle-parity variant; xxhash64
+    is faster and stays the default)."""
     if hash_fn == "xxhash64":
         return F.abs(F.xxhash64(seed_col, F.lit(salt)))
     if hash_fn == "md5":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", seed_col.cast("string"), F.lit(salt))),
-                1, 15,
-            ),
-            16, 10,
-        ).cast("long")
+        return md5_60(F.concat_ws(":", seed_col.cast("string"), F.lit(salt)))
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 

@@ -1,13 +1,13 @@
 """Similarity-search tests (operators/simsearch.py)."""
 
 import math
-import os
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from big_data_analysis_for_stock_market_data_spark.operators import simsearch as S
+from oracle_compare import assert_matches_oracle
 from test_io_footer_schema import SF, needs_sf
 
 
@@ -329,29 +329,30 @@ def test_ann_join_zero_arg_sizing_path(spark):
     "dedup_semantic_ivf",
 ])
 def test_ivf_family_matches_oracle(spark, name):
-    # The IVF family's replay oracles (full Lloyd iterations, probes, PQ
-    # codes, prune decisions) hash-compared the way check_correctness
-    # does: both sides through pandas, order-insensitive value hash.
-    import duckdb
+    # The IVF family's replay oracles: full Lloyd iterations, probes, PQ
+    # codes and prune decisions.
+    assert_matches_oracle(spark, name)
 
-    from big_data_analysis_for_stock_market_data_spark.queries import (
-        oracle_sql,
-        queries,
-    )
-    from tools.check_correctness import TABLES, table_hash
 
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    got = queries()[name](spark, SF).toPandas()
-    res = con.execute(oracle_sql()[name])
-    ocols = [d[0] for d in res.description]
-    want = res.df()
-    con.close()
-    srows = list(got.itertuples(index=False, name=None))
-    orows = list(want.itertuples(index=False, name=None))
-    assert srows and len(srows) == len(orows)
-    assert sorted(got.columns) == sorted(ocols)
-    assert table_hash(srows, list(got.columns)) == table_hash(orows, ocols)
+@needs_sf
+def test_pq_encode_runs_in_parallel(spark):
+    # The sf0.01 embeddings are one file, so a scan-partitioned corpus
+    # ran the PQ encode, and every other stage of simsearch_pq_topk, as
+    # one task; widened to the session's parallelism, the encode stage
+    # runs one task per shuffle partition.
+    from big_data_analysis_for_stock_market_data_spark.queries import queries
+
+    sc = spark.sparkContext
+    df = queries()["simsearch_pq_topk"](spark, SF)
+    sc.setJobGroup("pq_encode_width", "pq_encode_width")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("pq_encode_width")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert max(tasks) > 1

@@ -96,7 +96,7 @@ def bench_stock_ml(spark, hints: dict | None) -> tuple[float, float, dict]:
     # 45-column frame was ~25% of the FE stage (measured r04)
     #
     # Widen before caching (r11, guide §2.5-2.6 idle capacity): the
-    # pipeline's last exchange is the per-symbol applyInPandas pass,
+    # pipeline's last exchange feeds the per-symbol Python pass,
     # so the enriched frame lands in |symbols|=4 non-empty partitions
     # — cache materialization, randomSplit, the assembler transform
     # and every RF treeAggregate round then run ≤4-wide on a 32-core

@@ -16,8 +16,9 @@ Two execution classes, chosen per indicator:
 
 2. **Recursive** (EMA and everything seeded from it: MACD, APO, PPO, KAMA,
    Wilder RSI, Wilder ATR, ADX): the recurrence ``y_t = f(y_{t-1}, x_t)``
-   has no fixed-frame window form, so these run as ``applyInPandas`` over
-   the symbol partitions — Arrow-vectorized, partition-local sequential
+   has no fixed-frame window form, so these run as one ``mapInPandas``
+   call per key-sorted partition that folds each symbol's rows in turn
+   (``_recursive_apply``) — Arrow-vectorized, partition-local sequential
    scans (pandas ``ewm`` / numpy loops), the engine's sanctioned stateful
    escape hatch. Scale contract: ONE SYMBOL's history must fit in one
    executor's memory (minute bars ≈ 4 M rows/decade ≈ tens of MB — holds at
@@ -233,7 +234,7 @@ def true_range(df: DataFrame, partition_by="symbol", order_by="date",
 def atr_sma(df: DataFrame, n: int = 14, partition_by="symbol",
             order_by="date", out: str = "atr") -> DataFrame:
     """SMA-smoothed ATR (closed-form). Wilder's recursive smoothing lives in
-    ``wilder_indicators`` (applyInPandas)."""
+    ``wilder_indicators`` (the recursive fold)."""
     tmp = "__tr_for_atr"
     d = true_range(df, partition_by, order_by, out=tmp)
     d = d.withColumn(out, F.avg(tmp).over(_frame(partition_by, order_by, n)))
@@ -321,7 +322,7 @@ def ultosc(df: DataFrame, n1: int = 7, n2: int = 14, n3: int = 28,
 
 
 # ---------------------------------------------------------------------------
-# Recursive indicators (applyInPandas over symbol partitions)
+# Recursive indicators (one mapInPandas call per key-sorted partition)
 # ---------------------------------------------------------------------------
 
 def _recursive_apply(
@@ -331,36 +332,101 @@ def _recursive_apply(
     new_cols: dict[str, T.DataType],
     fn,
 ) -> DataFrame:
-    """Shared applyInPandas scaffold: one group per partition key, sorted by
-    ``order_by`` inside the pandas function, schema = input + new columns.
+    """Shared fold scaffold: hash-partition on the keys, sort each
+    partition by (keys, ``order_by``), and cross into Python once per
+    partition (``mapInPandas``); ``_fold_key_segments`` calls the per-key
+    ``fn`` on each key's contiguous, ``order_by``-sorted rows. Schema =
+    input + new columns.
+
+    ``fn`` sees exactly the frame a per-key ``groupBy().applyInPandas``
+    would hand it after a stable sort on ``order_by`` (NULLs last), so the
+    results are bit-identical to the per-key fold, without a Spark-built
+    pandas frame and a Python call per group. NULL keys form one
+    segment, as in ``groupBy``. Memory is one Arrow batch plus the open
+    key's rows.
 
     The pre-shuffle asks for an explicit partition count
-    (REPARTITION_BY_NUM), which AQE does not coalesce, and the groupBy
-    reuses its hash partitioning, so no second exchange appears. The count
-    holds only when this exchange is planned: when the input already comes
+    (REPARTITION_BY_NUM), which AQE does not coalesce. The count holds
+    only when this exchange is planned: when the input already comes
     hash-partitioned by the same keys, ``EnsureRequirements`` removes it,
     and the upstream exchange is coalesced by bytes as usual. Under
     ``stock.feature_frame`` the day-grain windows' exchange already gives
-    ``hashpartitioning(symbol, n)``; AQE coalesces it, so at 10,000 bars
-    every key runs in one Python task."""
-    if isinstance(partition_by, str):
-        partition_by = [partition_by]
+    ``hashpartitioning(symbol, n)``; AQE coalesces it, so the fold runs
+    in one Python task at 10,000 bars (4 symbols) and in two at 100,000."""
+    keys = _as_seq(partition_by)
     from big_data_analysis_for_stock_market_data_spark.operators.windows import (
         shuffle_partitions,
     )
 
     n = shuffle_partitions(df)
-    df = df.repartition(n, *[F.col(c) for c in partition_by])
+    df = df.repartition(n, *[F.col(c) for c in keys])
     out_schema = T.StructType(
         df.schema.fields
         + [T.StructField(c, t, True) for c, t in new_cols.items()]
     )
 
-    def runner(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
-        return fn(pdf)
+    def runner(batches):
+        return _fold_key_segments(batches, keys, order_by, fn)
 
-    return df.groupBy(*partition_by).applyInPandas(runner, schema=out_schema)
+    # plain ascending order (NULLs first): a window over the same keys
+    # already delivers it, and Spark then drops this sort
+    return df.sortWithinPartitions(*keys, order_by).mapInPandas(
+        runner, schema=out_schema
+    )
+
+
+def _key_changes(cur: pd.DataFrame, prev: pd.DataFrame):
+    """Row-wise: does ``cur``'s key differ from ``prev``'s (equal-length
+    key frames)? NULL equals NULL, as in ``groupBy``."""
+    import numpy as np
+
+    out = np.zeros(len(cur), dtype=bool)
+    for c in cur.columns:
+        a, b = cur[c].to_numpy(), prev[c].to_numpy()
+        na_a, na_b = pd.isna(a), pd.isna(b)
+        out |= (na_a != na_b) | (~na_a & ~na_b & (a != b))
+    return out
+
+
+def _fold_key_segments(batches, keys: Sequence[str], order_by: str, fn):
+    """Stream ``fn`` over the key segments of (keys, ``order_by``)-sorted
+    pandas batches: one output frame per input batch that closes a key.
+    A key may span batches; its rows are held until the next key starts
+    (or the input ends), so memory is one batch plus the open key."""
+    import numpy as np
+
+    open_rows: list[pd.DataFrame] = []
+    open_key = None
+
+    def close():
+        seg = open_rows[0] if len(open_rows) == 1 else pd.concat(open_rows)
+        if pd.isna(seg[order_by].iloc[0]):
+            # Spark sorted NULL order values first; the per-key
+            # contract (a stable pandas sort) puts them last
+            n_null = int(seg[order_by].isna().sum())
+            seg = pd.concat([seg.iloc[n_null:], seg.iloc[:n_null]])
+        return fn(seg.reset_index(drop=True))
+
+    for batch in batches:
+        if batch.empty:
+            continue
+        k = batch[keys]
+        starts = np.flatnonzero(_key_changes(k.iloc[1:], k.iloc[:-1])) + 1
+        edges = [*starts.tolist(), len(batch)]
+        if open_key is None or _key_changes(k.iloc[:1], open_key)[0]:
+            edges.insert(0, 0)
+        else:
+            open_rows.append(batch.iloc[: edges[0]])
+        outs = []
+        for lo, hi in zip(edges[:-1], edges[1:]):
+            if open_rows:
+                outs.append(close())
+            open_rows = [batch.iloc[lo:hi]]
+        open_key = k.iloc[-1:]
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
+    if open_rows:
+        yield close()
 
 
 def ema(df: DataFrame, spans: Iterable[int], partition_by="symbol",
@@ -401,7 +467,7 @@ def holt_linear(
     evaluates ``a*y + oma*(l + b)`` and ``be*(l' - l) + omb*b`` with
     oma = 1-a, omb = 1-be computed once — mirror the same expression
     order in any recursive-CTE twin for bit-exact comparison (the
-    ind_parabolic_sar pattern). Runs on the per-key applyInPandas fold
+    ind_parabolic_sar pattern). Runs on the per-partition fold
     (``_recursive_apply``), the one engine for recursive indicators."""
     oma = 1.0 - alpha
     omb = 1.0 - beta
@@ -490,7 +556,7 @@ def sar(df: DataFrame, partition_by="symbol", order_by="date", col="close",
     the tentative ``sar + af·(ep − sar)``, reverses when price crosses it
     (sar := prior extreme, ep := price, af := af0), otherwise ratchets the
     extreme point and accelerates ``af`` by ``af0`` up to ``af_max``.
-    Branching recurrence → per-key applyInPandas (the recursive family's
+    Branching recurrence → the per-partition fold (the recursive family's
     sanctioned escape hatch); every float op is written in the exact order
     an ANSI recursive-CTE twin evaluates, so the oracle is bit-identical.
     """
@@ -558,7 +624,7 @@ def adx(df: DataFrame, n: int = 14, partition_by="symbol", order_by="date",
 
 def _cci_pandas_block(pdf: pd.DataFrame, ns: Sequence[int], col: str):
     """Vectorized CCI over a timestamp-sorted pandas frame (the CCI part
-    of ``recursive_enrich``'s per-key pass)."""
+    of ``recursive_enrich``'s per-key ``fn``)."""
     import numpy as np
 
     for n in ns:
@@ -581,7 +647,7 @@ def _cci_pandas_block(pdf: pd.DataFrame, ns: Sequence[int], col: str):
             # full-length (m, n) strided temporary made the md step pay a
             # multi-second first-touch allocation stall per fresh worker
             # (measured 2.3 s cold vs 0.1 s here at 168k rows; the
-            # recursive applyInPandas pass read 16 s run-1 vs 5 s run-2
+            # recursive Python pass read 16 s run-1 vs 5 s run-2
             # from exactly this). Per-row reductions are unchanged, so
             # the chunking is bit-identical to the whole-array form
             # (asserted over n∈{2..40} × m∈{40..168k}).
@@ -622,7 +688,7 @@ def recursive_enrich(
     cci_ns: Sequence[int] = (),
     closed_form: bool = False,
 ) -> DataFrame:
-    """ALL recursive indicators in ONE applyInPandas pass — one shuffle on
+    """ALL recursive indicators in ONE Python pass — one shuffle on
     the symbol key instead of one per indicator family. This is the form
     ``enrich_ohlcv`` uses; the standalone functions above exist for à-la-
     carte use and for testing each recurrence in isolation.
@@ -646,8 +712,8 @@ def recursive_enrich(
 
     Each key's series is folded in one pandas call, in ``order_by``
     order, so the results are bit-identical to the per-key recursive-CTE
-    oracles; parallelism is |keys|, so one key's series runs in one
-    Python task however deep it is."""
+    oracles; parallelism is min(|keys|, partitions), so one key's series
+    runs in one Python task however deep it is."""
     import numpy as np
 
     new_cols: dict[str, T.DataType] = {}
@@ -741,7 +807,7 @@ def recursive_enrich(
 
 # ---------------------------------------------------------------------------
 # Composite enrichment: the reference's full indicator surface in one
-# applyInPandas pass (closed-form block + recursive family + CCI), instead of
+# Python pass (closed-form block + recursive family + CCI), instead of
 # its 11 sequential compute-aside-join stages (G_2_rf_nordd_fe.py:47-313).
 # ---------------------------------------------------------------------------
 
@@ -865,7 +931,7 @@ def enrich_ohlcv(
         d = ultosc(d, 7, 14, 28, partition_by, order_by)
     elif engine != "parallel":
         raise ValueError(f"engine must be 'expr' or 'parallel', got {engine!r}")
-    # single applyInPandas pass for the recursive family + CCI (CCI is
+    # single Python pass for the recursive family + CCI (CCI is
     # closed-form but ~10x cheaper vectorized than as collect_list frames)
     # + the pandas closed-form block under engine='parallel'
     return recursive_enrich(

@@ -90,9 +90,8 @@ def _cos_sim(a: Column, b: Column, round_to: int | None) -> Column:
 
 def _distinct_scored(cand: DataFrame, *cols: Column) -> DataFrame:
     """One row per pair of a candidate set that can repeat a pair (an LSH
-    pair sharing buckets in several tables; the IVF probe, whose oracles
-    replay ``DISTINCT``): ``cols`` = (key id, neighbor id, score), scored
-    FIRST, then ``distinct()``.
+    pair sharing buckets in several tables): ``cols`` = (key id, neighbor
+    id, score), scored FIRST, then ``distinct()``.
 
     The ids determine the vectors and the score is a pure function of
     them, so deduping (ids, score) keeps exactly the rows deduping (ids,
@@ -465,27 +464,24 @@ def deterministic_kmeans(
 
 def _ivf_candidates(
     corpus: DataFrame,
+    cents: DataFrame,
     queries: DataFrame,
     score: Column,
-    n_clusters: int,
     n_probe: int,
-    n_iters: int,
     id_col: str,
     vec_col: str,
     query_id_col: str,
-    seed: int,
 ) -> DataFrame:
-    """The IVF index-and-probe step shared by ``ivf_topk`` and
-    ``ivfpq_det_topk``: quantize the corpus (``deterministic_kmeans``),
-    assign every vector to its nearest cell, pair each query with the
-    vectors of its ``n_probe`` nearest cells (self-pairs excluded) and
-    score each pair with ``score`` — over ``corpus``'s columns plus
-    ``__qvec``. Returns (query_id_col, neighbor_id, score), deduplicated
-    score first (``_distinct_scored``), as the oracles' ``SELECT
-    DISTINCT`` does."""
-    cents = deterministic_kmeans(
-        corpus, n_clusters, n_iters, id_col, vec_col, seed
-    )
+    """The IVF probe step shared by ``ivf_topk`` and ``ivfpq_det_topk``:
+    assign every corpus vector to its nearest cell of ``cents`` (the
+    caller's ``deterministic_kmeans``), pair each query with the vectors
+    of its ``n_probe`` nearest cells (self-pairs excluded) and score each
+    pair with ``score`` — over ``corpus``'s columns plus ``__qvec``.
+    Returns (query_id_col, neighbor_id, score), deduplicated score first
+    (why that is exact: ``_distinct_scored``), as the oracles' ``SELECT
+    DISTINCT`` does. The scored pairs are
+    hash-partitioned by query, the key both callers rank on, so the
+    dedup and the ranking window (``_rank_topk``) share one exchange."""
     assigned = _nearest_cells(corpus, cents, vec_col, 1)
     probes = _nearest_cells(
         queries.select(
@@ -493,13 +489,16 @@ def _ivf_candidates(
         ),
         cents, "__qvec", n_probe,
     )
-    return _distinct_scored(
+    scored = (
         assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col(id_col) != F.col("__qid")),
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        score,
+        .filter(F.col(id_col) != F.col("__qid"))
+        .select(
+            F.col("__qid").alias(query_id_col),
+            F.col(id_col).alias("neighbor_id"),
+            score,
+        )
     )
+    return scored.repartition(query_id_col).distinct()
 
 
 def ivf_topk(
@@ -526,9 +525,11 @@ def ivf_topk(
     fixed-width (ids, score) rows. ``round_to`` rounds the cosine before
     ranking (same cross-engine tie-stability knob as
     ``brute_force_topk``). Every step is replayable in SQL."""
+    cents = deterministic_kmeans(corpus, n_clusters, n_iters, id_col, vec_col, seed)
     cand = _ivf_candidates(
-        corpus, queries, _cos_sim(F.col(vec_col), F.col("__qvec"), round_to),
-        n_clusters, n_probe, n_iters, id_col, vec_col, query_id_col, seed,
+        corpus, cents, queries,
+        _cos_sim(F.col(vec_col), F.col("__qvec"), round_to),
+        n_probe, id_col, vec_col, query_id_col,
     )
     return _rank_topk(cand, query_id_col, "cos_sim", k)
 
@@ -675,14 +676,18 @@ def ivfpq_det_topk(
     codebook, encode, ADC) is replayable in external SQL, so the WHOLE
     composition is hash-verifiable. Shares its index-and-probe step and
     score-first dedup with ``ivf_topk`` (``_ivf_candidates``); only the
-    score differs."""
+    score differs. The k-means trains on the corpus as scanned; the PQ
+    encode, the heaviest step, runs on the corpus widened to the
+    session's parallelism (``ensure_parallelism``, as ``pq_topk``)."""
+    base = corpus.select(id_col, vec_col)
+    cents = deterministic_kmeans(base, n_clusters, n_iters, id_col, vec_col, seed)
     encoded = pq_encode(
-        corpus.select(id_col, vec_col), col=vec_col, m=m, k=pq_k, dim=dim
+        ensure_parallelism(base), col=vec_col, m=m, k=pq_k, dim=dim
     )
     adc = F.round(_adc_sqdist(F.col("__qvec"), m, dim // m), round_to)
     cand = _ivf_candidates(
-        encoded, queries, adc.alias("approx_sqdist"), n_clusters, n_probe,
-        n_iters, id_col, vec_col, query_id_col, seed,
+        encoded, cents, queries, adc.alias("approx_sqdist"), n_probe,
+        id_col, vec_col, query_id_col,
     )
     return _rank_topk(cand, query_id_col, "approx_sqdist", k, ascending=True)
 

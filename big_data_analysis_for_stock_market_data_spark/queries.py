@@ -271,9 +271,9 @@ def w_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_ema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMA(10) per user on the per-key recursive fold (indicators.ema: one
-    hash shuffle on the key, each user's series folded in one pandas
-    call, parallelism |keys|). Building it submits no Spark job. Emits
+    """EMA(10) per user on the recursive fold (indicators.ema: one hash
+    shuffle on the key, one Python call per partition, each user's
+    series folded in one pandas call). Building it submits no Spark job. Emits
     the centi-unit fixed-point EMA, oracle-checked against the
     sequential recursion replayed in SQL (see oracle note)."""
     from big_data_analysis_for_stock_market_data_spark.operators import indicators as ind
@@ -1806,8 +1806,8 @@ def ind_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ind_parabolic_sar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parabolic SAR over each user's value series — the branching
-    stop-and-reverse recurrence (operators/indicators.sar), per-key
-    applyInPandas, hash-verified against a recursive-CTE twin."""
+    stop-and-reverse recurrence (operators/indicators.sar) on the
+    per-partition fold, hash-verified against a recursive-CTE twin."""
     from big_data_analysis_for_stock_market_data_spark.operators import indicators as ind
 
     ev = load(spark, sf_dir, "events")
@@ -1901,7 +1901,7 @@ def ind_parabolic_sar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ind_recursive_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMA/MACD/RSI/KAMA in ONE applyInPandas pass per user series —
+    """EMA/MACD/RSI/KAMA in ONE Python pass, folded per user series —
     recursive recurrences with no fixed-frame SQL form (SURVEY.md §7 calls
     this the hard part; Arrow-vectorized partition-local scan)."""
     from big_data_analysis_for_stock_market_data_spark.operators import indicators as ind
@@ -13301,9 +13301,9 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/indicators.holt_linear, alpha=0.3 beta=0.2): the
     TWO-state (level, trend) recurrence beyond the EMA family, with the
     one-step-ahead forecast level+trend — the classic streaming
-    forecaster. Per-key applyInPandas fold, hash-verified bit-exact
-    against a recursive-CTE twin that repeats the level expression
-    verbatim inside the trend update."""
+    forecaster. Per-partition fold (one pandas call per user),
+    hash-verified bit-exact against a recursive-CTE twin that repeats the
+    level expression verbatim inside the trend update."""
     from big_data_analysis_for_stock_market_data_spark.operators import indicators as ind
 
     ev = load(spark, sf_dir, "events")

@@ -233,7 +233,7 @@ def feature_frame(
     cuts: "list[float] | None" = None,
 ) -> DataFrame:
     """Full reference feature pipeline, engine-style: native indicators
-    (one applyInPandas pass running the closed-form block, CCI and the
+    (one Python pass running the closed-form block, CCI and the
     recursive family), row-wise derived features, day-grain features, and
     the buy/sell label — the surface ``G_2_rf_nordd_fe.py`` built in 11
     join stages. Building the frame submits no Spark job.

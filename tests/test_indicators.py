@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from big_data_analysis_for_stock_market_data_spark.operators import indicators as I
 
@@ -400,3 +401,106 @@ def test_cci_block_chunking_bit_identical():
             ref[md == 0] = np.nan
             out = got[f"cci{n}"].to_numpy()[n - 1:]
             assert np.array_equal(out, ref, equal_nan=True), (m, n)
+
+
+# ---------------------------------------------------------------------------
+# The per-partition fold (_recursive_apply): bit-identical to a per-key
+# pandas fold computed here
+# ---------------------------------------------------------------------------
+
+_FOLD_COLS = {"ema": T.DoubleType(), "pos": T.LongType(), "loop": T.DoubleType()}
+
+
+def _fold_frame(rows):
+    return pd.DataFrame(rows, columns=["id", "k", "ts", "v"])
+
+
+def _assert_fold_matches_per_key(spark, pdf):
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("k", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("v", T.DoubleType()),
+    ])
+
+    def fold(pdf):
+        # order-sensitive: an EMA, a running position and a KAMA-style loop
+        pdf["ema"] = pdf["v"].ewm(span=5, adjust=False).mean()
+        pdf["pos"] = np.arange(len(pdf), dtype="int64")
+        x = pdf["v"].to_numpy()
+        y = np.empty(len(x))
+        if len(x):
+            y[0] = x[0]
+            for i in range(1, len(x)):
+                y[i] = y[i - 1] + 0.3 * (x[i] - y[i - 1])
+        pdf["loop"] = y
+        return pdf
+
+    sdf = spark.createDataFrame(pdf, schema)
+    got = I._recursive_apply(sdf, "k", "ts", _FOLD_COLS, fold).toPandas()
+    assert len(got) == len(pdf)
+    assert list(got.columns) == [*pdf.columns, *_FOLD_COLS]
+    n_keys = 0
+    for key, grp in pdf.groupby("k", dropna=False, sort=False):
+        ref = fold(grp.sort_values("ts", kind="mergesort").reset_index(drop=True))
+        sel = got["k"].isna() if pd.isna(key) else got["k"] == key
+        out = got[sel].sort_values("pos").reset_index(drop=True)
+        assert sorted(out["id"]) == sorted(ref["id"]), key
+        # tied rows carry equal values, so any tie order gives these
+        for c in ("ts", "v", *_FOLD_COLS):
+            pd.testing.assert_series_equal(out[c], ref[c], check_exact=True,
+                                           obj=f"{key} {c}")
+        n_keys += 1
+    return n_keys
+
+
+def _ts(i):
+    return dt.datetime(2024, 1, 1) + dt.timedelta(minutes=int(i))
+
+
+def _fold_rows(keys, per_key, seed):
+    rng = np.random.default_rng(seed)
+    rows = []
+    for k in keys:
+        for t in rng.permutation(per_key):
+            rows.append((len(rows), k, _ts(t), float(rng.normal(100, 5))))
+    rng.shuffle(rows)
+    return rows
+
+
+def test_fold_several_keys_per_partition(spark):
+    keys = [f"u{i}" for i in range(23)]
+    n = _assert_fold_matches_per_key(spark, _fold_frame(_fold_rows(keys, 17, 1)))
+    assert n == 23  # 23 keys over 4 shuffle partitions
+
+
+def test_fold_more_partitions_than_keys(spark, spark_conf):
+    spark_conf("spark.sql.shuffle.partitions", 16)
+    n = _assert_fold_matches_per_key(
+        spark, _fold_frame(_fold_rows(["a", "b", "c"], 30, 2))
+    )
+    assert n == 3
+
+
+def test_fold_null_key_is_one_segment(spark):
+    rows = _fold_rows(["a", None, "b"], 25, 3)
+    # NULL timestamps fold last, as a stable pandas sort puts them
+    rows += [(len(rows) + i, k, None, 7.0) for i, k in enumerate(["a", "a", None])]
+    assert _assert_fold_matches_per_key(spark, _fold_frame(rows)) == 3
+
+
+def test_fold_tied_timestamps(spark):
+    rows = []
+    for k in ("a", "b"):
+        for t in range(12):
+            for _ in range(1 + t % 3):  # up to three rows per timestamp
+                rows.append((len(rows), k, _ts(t), 100.0 + t * (1 + (k == "b"))))
+    rows.reverse()
+    assert _assert_fold_matches_per_key(spark, _fold_frame(rows)) == 2
+
+
+def test_fold_key_spread_over_arrow_batches(spark, spark_conf):
+    spark_conf("spark.sql.execution.arrow.maxRecordsPerBatch", 7)
+    rows = _fold_rows(["deep"], 60, 4) + _fold_rows(["x", "y", "z"], 5, 5)
+    rows = [(i, *r[1:]) for i, r in enumerate(rows)]
+    assert _assert_fold_matches_per_key(spark, _fold_frame(rows)) == 4

@@ -69,10 +69,11 @@ def test_core_relational_paths_jvm_only(spark):
 
 
 def test_recursive_indicators_use_sanctioned_crossing(spark):
-    # exactly one Arrow-vectorized crossing; never row-at-a-time Python
+    # exactly one Arrow-vectorized crossing, once per partition (not a
+    # per-key grouped map); never row-at-a-time Python
     df = q(spark, "ind_recursive_family")
     stages = P.python_stages(df)
-    assert stages == ["FlatMapGroupsInPandas"]
+    assert stages == ["MapInPandas"]
     assert P.count_shuffles(df) == 1  # one shuffle on the partition key
 
 
@@ -195,7 +196,7 @@ def test_stock_feature_frame_shuffle_budget(spark):
     full = stock.feature_frame(bars)
     assert P.count_shuffles(full) <= 2
     plan = P.explain_str(full, "simple")
-    assert len(re.findall(r"\bFlatMapGroupsInPandas\b", plan)) == 1
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1
 
 
 def test_chunking_is_shuffle_free_flatmap(spark):

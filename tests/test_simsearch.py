@@ -335,24 +335,45 @@ def test_ivf_family_matches_oracle(spark, name):
 
 
 @needs_sf
-def test_pq_encode_runs_in_parallel(spark):
-    # The sf0.01 embeddings are one file, so a scan-partitioned corpus
-    # ran the PQ encode, and every other stage of simsearch_pq_topk, as
-    # one task; widened to the session's parallelism, the encode stage
-    # runs one task per shuffle partition.
+def _exec_stage_tasks(spark, name):
+    """Task count of every stage of one noop-sink execution of ``name``."""
     from big_data_analysis_for_stock_market_data_spark.queries import queries
 
     sc = spark.sparkContext
-    df = queries()["simsearch_pq_topk"](spark, SF)
-    sc.setJobGroup("pq_encode_width", "pq_encode_width")
+    df = queries()[name](spark, SF)
+    group = f"exec_width_{name}"
+    sc.setJobGroup(group, group)
     try:
         df.write.format("noop").mode("overwrite").save()
     finally:
         sc._jsc.clearJobGroup()
     tracker = sc.statusTracker()
-    tasks = [
+    return [
         tracker.getStageInfo(s).numTasks
-        for j in tracker.getJobIdsForGroup("pq_encode_width")
+        for j in tracker.getJobIdsForGroup(group)
         for s in tracker.getJobInfo(j).stageIds
     ]
-    assert max(tasks) > 1
+
+
+def test_pq_encode_runs_in_parallel(spark):
+    # The sf0.01 embeddings are one file, so a scan-partitioned corpus
+    # ran the PQ encode, and every other stage of simsearch_pq_topk, as
+    # one task; widened to the session's parallelism, the encode stage
+    # runs one task per shuffle partition.
+    assert max(_exec_stage_tasks(spark, "simsearch_pq_topk")) > 1
+
+
+def test_ivfpq_encode_runs_in_parallel(spark):
+    # ivfpq_det_topk widens the corpus before its PQ encode, so the encode
+    # runs one task per shuffle partition instead of one task over the
+    # one-file scan; the IVF dedup shares the ranking's exchange (hash by
+    # query), so the widening adds no exchange to the entry.
+    from big_data_analysis_for_stock_market_data_spark.plans import inspect as P
+    from big_data_analysis_for_stock_market_data_spark.queries import queries
+
+    assert max(_exec_stage_tasks(spark, "simsearch_ivfpq_det_topk")) > 1
+    plan = P.explain_str(
+        queries()["simsearch_ivfpq_det_topk"](spark, SF), "simple"
+    )
+    assert "RoundRobinPartitioning" in plan
+    assert plan.count("Exchange hashpartitioning(") == 1, plan

@@ -8,7 +8,7 @@ Times, cumulatively and per-stage, at the reference's 671,024-row scale:
 1. fixture     — make_stock_fixture materialized
 2. daily+label — day-grain windows + buy/sell label on the raw bars
 3. closed-form — the closed-form block as a standalone overlap-bucket pass
-4. full        — the full feature_frame: its one per-symbol applyInPandas
+4. full        — the full feature_frame: its one per-symbol Python
                  pass runs the closed-form block again together with the
                  recurrences, then the row-wise features (read stages
                  3 + 4 together)
